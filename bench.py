@@ -7,21 +7,18 @@ Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is materialized through the noop sink (full execution, no
 driver-side result transfer) so the timing measures the engine, not collect().
 
-Median-of-N protocol (default N=5, override $SPARK_GRAFT_BENCH_REPS):
+Median-of-N protocol (default N=7, override $SPARK_GRAFT_BENCH_REPS):
 single-run timings on this VM vary up to 3x per query (JIT warm-up of
 interpreted expressions + noisy-neighbor effects — BASELINE.md documents the
 measured variance), so the harness makes N full passes over the headline list
-and reports the per-query MEDIAN; "value" is the sum of medians.  N=5 (up
-from r3's 3): an r4 calibration run caught a multi-minute noisy-neighbor
-window that inflated one whole pass (q1 1.9->7.2 s, q18 1.8->8.3 s), and a
-3-pass median tolerates only one corrupted pass where a 5-pass median
-tolerates two; the full run stays under the driver budget (~8 min).
+and reports the per-query MEDIAN; "value" is the sum of medians.  A 7-pass
+median tolerates 3 corrupted passes.  Every query gets the same N.  The
+per-query MINIMUM is reported beside it as "value_min"/"queries_min", the
+noise floor: noise only ever adds time.
 
-The two ANN queries get N+2 reps and an untimed Python/Arrow worker-pool
-pre-warm: r3 measured sim_topk_bruteforce runs of 5.41/2.56/5.17 s (median
-1.69x baseline, best run 0.84x) — pure scheduler/JIT variance on a plan
-that is a broadcast of 5 query vectors over a linear corpus scan (VERDICT
-r3 #4); more reps + a warmed worker pool pin the median to the real cost.
+An untimed warm-up touches the parquet reader, shuffle, noop sink and the
+Python/Arrow worker pool first, so the first timed pass does not pay
+first-touch init.
 """
 
 from __future__ import annotations
@@ -84,33 +81,10 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # r10: default 5 → 7.  Round-10 calibration measured the SAME query at
-    # 1.37 s and 29 s within one session (multi-minute noisy-neighbor
-    # windows, invisible to /proc/stat steal), and a 5-pass median dies
-    # once 3 passes land in such a window — observed twice this round.  A
-    # 7-pass median tolerates 3 corrupted passes; the quiet-pass cost of
-    # the headline list fell ~30% this round, so the full run stays inside
-    # the driver budget.  The protocol (noop sink, per-query median, sum of
-    # medians as "value") is unchanged and comparable with BENCH_r01-r09.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "7")))
-    # High-variance heavy queries get extra reps so their median converges
-    # (VERDICT r3 #4: 2x spread between best and worst run at reps=3; an r4
-    # calibration run measured minhash spreads of 3.8-9.9 s on identical
-    # plans under noisy-neighbor load).
-    # q21 joined the extra-reps set in r8: its r7 median moved 1.14x vs r6
-    # (inside the documented noise band) — VERDICT r7 next-round #8 asks for
-    # a confirming re-measure under the high-variance protocol.
-    extra = {
-        "sim_topk_bruteforce": 2,
-        "sim_topk_lsh": 2,
-        "dedup_minhash_lsh": 2,
-        "q21_waiting_orders": 2,
-    }
     runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for pass_i in range(reps + max(extra.values(), default=0)):
+    for _ in range(reps):
         for name in HEADLINE:
-            if pass_i >= reps + extra.get(name, 0):
-                continue
             fn = registry.QUERIES[name]
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -118,9 +92,7 @@ def main() -> None:
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in runs.items()}
     total = round(sum(timings.values()), 3)
-    # Auxiliary noise floor (r10): the per-query MINIMUM.  Noise on this VM
-    # only ever ADDS time, so min-of-N is the standard noise-robust compute
-    # estimate; reported NEXT TO the median (which stays the headline
+    # Noise floor: reported NEXT TO the median (which stays the headline
     # "value" for round-over-round comparability), never instead of it.
     mins = {name: round(min(ts), 3) for name, ts in runs.items()}
     print(

@@ -17,9 +17,7 @@ rebuilds instead of reusing handles into a dead JVM.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -63,61 +61,6 @@ def shared_df(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]) -
 def shared_frame_count(spark: SparkSession) -> int:
     """Number of memoized session-shared objects (test/diagnostic hook)."""
     return len(getattr(spark, _MEMO_ATTR, {}) or {})
-
-
-def widen_small_scan(df: DataFrame, cores: int | None = None) -> DataFrame:
-    """Round-robin ``df`` to the session's core count when its underlying
-    file scan cannot fill the cores — small-SF parquet fixtures arrive as a
-    single row group, so heavy per-row map work (q1's six decimal casts, the
-    ANN cosine rerank) would otherwise run on one core (guide §2.5 input
-    skew).
-
-    The guard reads the scan's file list (``inputFiles()`` — the already-
-    materialized file index, ~10 ms) and sums local file sizes; it widens
-    only when the input cannot yield at least one full ``maxPartitionBytes``
-    split per core.  At 100 TB that comparison fails immediately and the
-    whole helper is a no-op stat call.  r11: replaces the former
-    ``.rdd.getNumPartitions()`` probe, which forced a physical-plan build
-    (measured 0.04–0.46 s per query build, VERDICT r10 #1).  Non-local or
-    unlistable inputs are treated as big (no widen): at scale the scan is
-    naturally wide, and never widening is the safe posture.
-    """
-    spark = df.sparkSession
-    cores = cores or spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not files:
-        return df
-    total = 0
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return df
-        try:
-            total += os.path.getsize(parsed.path or uri)
-        except OSError:
-            return df
-    if total < cores * _max_partition_bytes(spark):
-        return df.repartition(cores)
-    return df
-
-
-def _max_partition_bytes(spark: SparkSession) -> int:
-    """``spark.sql.files.maxPartitionBytes`` in bytes (handles k/m/g suffixes)."""
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if raw.endswith(suffix):
-            raw = raw[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return 128 << 20
 
 
 def work_dir(name: str) -> str:

@@ -802,9 +802,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay is bit-identical to the Spark expression chain by construction
     (functions/exactmath.py — same IEEE multiply, same HALF_UP decimal(38,12)
     quantize via shortest-round-trip repr, same exact decimal sum, same
-    correctly-rounded cast back; differential fuzz in
-    tests/test_exactmath.py, old-vs-new equality in
-    tests/test_driver_side_iteration.py).  Measured: build 4.8–16 s →
+    correctly-rounded cast back; differential fuzz and the oracle check in
+    tests/test_exactmath.py).  Measured: build 4.8–16 s →
     ~0.5 s at sf0.1 (9 jobs → 1)."""
     from pyspark.sql import Window
 
@@ -1913,8 +1912,8 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay: the chain construction is ≤2-term commutative double addition
     (each redirected group merges at most {pv(src,c), pv(src,'NULL')}), and
     each step is the exact quantized mass sum of functions/exactmath.py;
-    old-vs-new equality is asserted in tests/test_driver_side_iteration.py
-    and the oracle hash is unchanged at all three SFs.  Measured: build
+    tests/test_exactmath.py checks it against the oracle, including on an
+    event type literally named ``CONV``.  Measured: build
     11–16 s → ~0.6 s at sf0.1 (14 jobs → 1)."""
     from pyspark.sql import Window
 
@@ -1976,7 +1975,7 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Chain transitions, keyed (chain, state).  The full chain carries pr0
     # verbatim; each removal chain redirects dst==c to 'NULL' and merges the
     # ≤2 colliding edges with one commutative double addition (the former
-    # Spark SUM over the same ≤2 values); CONV/NULL self-loop with pv=1.0.
+    # Spark SUM over the same ≤2 values).
     trans: dict[tuple, float] = {}
     for src, dst, pv in pr0:
         trans[("full", src, dst)] = pv
@@ -1988,16 +1987,25 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (f"rm:{c}", src, d)
             prev = trans.get(key)
             trans[key] = pv if prev is None else prev + pv
-    for cn in chains:
-        for s in ("CONV", "NULL"):
-            trans[(cn, s, s)] = 1.0
     steps = [((cn, s), (cn, d), pv) for (cn, s, d), pv in trans.items()]
+    # CONV/NULL absorb with a pv=1.0 self-loop, kept as its OWN step row the
+    # way the oracle's UNION ALL keeps it: an event type literally named
+    # CONV or NULL may already carry a real self-edge, and mass_step sums
+    # both rows' quantized products instead of one overwriting the other.
+    steps += [((cn, s), (cn, s), 1.0) for cn in chains for s in ("CONV", "NULL")]
     pi = {(cn, "START"): 1.0 for cn in chains}
     for _ in range(_ATTR_ITERS):
         pi = mass_step(pi, steps)
-    p_full = pi.get(("full", "CONV"), 0.0)
+    # A chain whose mass never reaches CONV has no CONV state and, as in the
+    # oracle's join on the final iterate, no output row (removing a channel
+    # literally named CONV redirects every conversion to NULL).
+    p_full = pi.get(("full", "CONV"))
     out = spark.createDataFrame(
-        [(c, p_full, pi.get((f"rm:{c}", "CONV"), 0.0)) for c in channels],
+        [
+            (c, p_full, pi[(f"rm:{c}", "CONV")])
+            for c in channels
+            if p_full is not None and (f"rm:{c}", "CONV") in pi
+        ],
         "channel string, p_full double, p_rm double",
     )
     from pyspark.sql import Window as W2

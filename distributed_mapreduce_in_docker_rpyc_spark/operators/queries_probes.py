@@ -1,62 +1,13 @@
-"""Engine-agreement bisection probes (round 8, VERDICT r7 next-round #1).
+"""Driver hash-typing canaries (r9, VERDICT r8 next-round #2).
 
-Round 7 closed the filesystem-attribution question: every round-trip
-deviation proof is driver-green (the disk path is lossless), while the four
-source-only engine-agreement queries (``jsonl/csv/compaction_source_agreement``,
-``dataset_fingerprint_report``) are hash-red under the driver and green under
-the driver-identical local harness.  Conclusion: Spark and DuckDB disagree
-about some property of the DRIVER-regenerated fixture content itself — a
-content class the local ``/root/testdata/sf0.01`` fixtures do not contain
-(the local documents table is pure ASCII; the driver's is evidently not).
-
-Each red agreement query folds 5-6 properties into ONE value-hash, so a red
-CORRECTNESS row carries ~1 bit.  This module splits them into single-property
-probes so the r8 booleans name exactly which property × where diverges:
-
-documents (covers the ``jsonl``/``compaction`` agreement reds and the text
-half of ``dataset_fingerprint_report``):
-  * ``probe_docs_counts``          — row count, key sum, NULL-text count
-  * ``probe_docs_distincts``       — COUNT(DISTINCT lang) / (DISTINCT source)
-  * ``probe_docs_meta_bytes``      — UTF-8 byte sums of lang and source
-  * ``probe_docs_text_bytes_b0..7``— the prime suspect, SUM(octet_length(
-    encode(text))), bucketed by ``doc_id % 8`` as EIGHT single-row probes so
-    a red also names WHERE in the keyspace
-  * 4 char-class counters computed from the same regex/codepoint predicate
-    on both engines: astral codepoints (> U+FFFF), C0/C1 control characters,
-    U+FFFD replacement characters (the smoking gun for an invalid-UTF-8 /
-    lone-surrogate fixture the JVM parquet reader re-encodes with
-    replacement), and rows where ``length(text)`` disagrees with the stored
-    generation-time ``n_chars`` column (codepoint-counting disagreement)
-
-orders (covers the ``csv_source_agreement`` red):
-  * ``probe_orders_base``       — count, key sum, NULL/NaN/±Inf/|x|>1e12
-    price tallies (NaN/Inf comparison semantics inside GREATEST/LEAST are
-    the #1 engine- and version-sensitive suspect)
-  * ``probe_orders_dates``      — MIN/MAX/COUNT(DISTINCT) of
-    CAST(o_orderdate AS DATE) (session-timezone and calendar suspects)
-  * ``probe_orders_priorities`` — distinct count + byte sum of the one string
-    column the agreement query touches
-  * ``probe_orders_price_micro``        — the NaN-guarded micro-price sum,
-    r9: rendered as a VARCHAR digit string (dtype-proof; the r8 red on this
-    probe was the DECIMAL(38,0) rendering itself, not content)
-  * ``probe_orders_price_micro_bigint`` — r9 rendering arm: same guarded
-    content under a tight clamp so the sum provably fits BIGINT end-to-end
-    (replaces the retired r7-verbatim ``_raw`` NaN control — NaN was
-    exonerated by the r8 type audit)
-
-r9 additions: ``probe_hash_typing_hugeint`` / ``probe_hash_typing_decimal38``
-— fixture-free 1-row canaries that measure the driver hash's dtype
-sensitivity directly (see the canary section at the end of this module).
-
-Scale posture: every probe is one parquet scan with pushed filter + a single
-partial-agg reduce — O(bytes scanned), no shuffle beyond the final 1-row
-exchange.  These are diagnostics, but they follow the same plan discipline
-as everything else.
-
-Reference provenance: the reference has no multi-engine story at all (its
-one job is a hardcoded wordcount — ``coordinator/coordinator.py:17-257``);
-this module exists purely to close the driver-vs-local divergence on OUR
-query surface.
+The r8 type audit attributed every residual driver red to one mechanism:
+DuckDB's pandas conversion renders HUGEINT and DECIMAL(38,0) as float64
+while Spark's matching column arrives int64 / Decimal, and the driver's
+value-hash is dtype-sensitive.  These two 1-row canaries read that hash
+behavior DIRECTLY, with zero fixture dependence (constant VALUES): each
+deliberately emits the SAME value in the divergent dtype pair.  They are
+the ONLY two queries allowed to violate the output-type lint, and
+``tests/test_output_typing.py`` pins that they keep violating it.
 """
 
 from __future__ import annotations
@@ -65,469 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.tables import load_table
-
-# Shared regex/char literals — the SAME pattern string is handed to Spark's
-# rlike (Java regex) and DuckDB's regexp_matches (RE2); both support
-# \x{...} codepoint escapes and these classes avoid every syntax corner the
-# two dialects disagree on (no lookaround, no backrefs, no \p{} names).
-_ASTRAL_RE = r"[\x{10000}-\x{10FFFF}]"
-_CONTROL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F-\x9F]"  # C0 minus \t\n\r, DEL, C1
-_REPLACEMENT = "\ufffd"  # U+FFFD REPLACEMENT CHARACTER, as a literal
-
-
-def _docs_agg(spark: SparkSession, sf_dir: str, *aggs) -> DataFrame:
-    return load_table(spark, sf_dir, "documents").agg(*aggs)
-
-
-@register(
-    "probe_docs_counts",
-    oracle="""
-    SELECT COUNT(*) AS n_rows,
-           CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
-           COUNT(*) FILTER (WHERE text IS NULL) AS n_null_text
-    FROM documents
-    """,
-)
-def probe_docs_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: the 'boring' numeric third of the red agreement
-    hashes (expected green — rows_match was true on every red).  Green here
-    plus a red byte-sum probe pins the divergence to string content, not
-    row multiplicity."""
-    return _docs_agg(
-        spark,
-        sf_dir,
-        F.count("*").alias("n_rows"),
-        F.sum("doc_id").alias("sum_doc_id"),
-        F.count(F.when(F.col("text").isNull(), F.lit(1))).alias("n_null_text"),
-    )
-
-
-@register(
-    "probe_docs_distincts",
-    oracle="""
-    SELECT COUNT(DISTINCT lang) AS n_langs,
-           COUNT(DISTINCT source) AS n_sources
-    FROM documents
-    """,
-)
-def probe_docs_distincts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: the two COUNT(DISTINCT) terms folded into the red
-    agreement hashes, alone.  Distinctness is byte-equality in both engines,
-    so a red here would name a read-level content difference in the SHORT
-    string columns (not ``text``)."""
-    return _docs_agg(
-        spark,
-        sf_dir,
-        F.count_distinct("lang").alias("n_langs"),
-        F.count_distinct("source").alias("n_sources"),
-    )
-
-
-@register(
-    "probe_docs_meta_bytes",
-    oracle="""
-    SELECT CAST(SUM(octet_length(encode(COALESCE(lang, '')))) AS BIGINT)
-             AS lang_bytes,
-           CAST(SUM(octet_length(encode(COALESCE(source, '')))) AS BIGINT)
-             AS source_bytes
-    FROM documents
-    """,
-)
-def probe_docs_meta_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: UTF-8 byte sums of the two short metadata columns.
-    ``jsonl_source_agreement`` folded source_bytes with text_bytes; this
-    separates 'metadata strings diverge' from 'document bodies diverge'."""
-    return _docs_agg(
-        spark,
-        sf_dir,
-        F.sum(F.length(F.encode(F.coalesce(F.col("lang"), F.lit("")), "UTF-8"))).alias(
-            "lang_bytes"
-        ),
-        F.sum(
-            F.length(F.encode(F.coalesce(F.col("source"), F.lit("")), "UTF-8"))
-        ).alias("source_bytes"),
-    )
-
-
-def _register_text_byte_bucket(bucket: int) -> None:
-    @register(
-        f"probe_docs_text_bytes_b{bucket}",
-        oracle=f"""
-        SELECT COUNT(*) AS n_rows,
-               CAST(SUM(octet_length(encode(COALESCE(text, '')))) AS BIGINT)
-                 AS text_bytes
-        FROM documents WHERE doc_id % 8 = {bucket}
-        """,
-    )
-    def probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 8 == bucket
-        )
-        return docs.agg(
-            F.count("*").alias("n_rows"),
-            F.sum(
-                F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
-            ).alias("text_bytes"),
-        )
-
-    probe.__name__ = f"probe_docs_text_bytes_b{bucket}"
-    probe.__doc__ = (
-        "Bisection probe: SUM of UTF-8 byte lengths of ``text`` over the "
-        f"``doc_id % 8 = {bucket}`` keyspace slice — the prime-suspect "
-        "property of the red documents agreement hashes, split 8 ways so a "
-        "red names WHERE in the keyspace the engines read different bytes "
-        "(all-8-red = pervasive content class; 1-2 red = a few adversarial "
-        "rows).  One pushed-filter scan, single partial-agg reduce."
-    )
-
-
-for _b in range(8):
-    _register_text_byte_bucket(_b)
-
-
-def _char_class_probe(name: str, pattern: str, doc: str) -> None:
-    @register(
-        name,
-        oracle=f"""
-        SELECT COUNT(*) FILTER (WHERE regexp_matches(text, '{pattern}'))
-                 AS n_match_rows
-        FROM documents
-        """,
-    )
-    def probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.agg(
-            F.count(F.when(F.col("text").rlike(pattern), F.lit(1))).alias(
-                "n_match_rows"
-            )
-        )
-
-    probe.__name__ = name
-    probe.__doc__ = doc
-
-
-_char_class_probe(
-    "probe_docs_astral",
-    _ASTRAL_RE,
-    "Bisection probe: rows whose text contains codepoints above U+FFFF "
-    "(4-byte UTF-8 / surrogate-pair territory).  Engines agreeing on this "
-    "count but not on byte sums would point at supplementary-plane handling "
-    "differences inside another function, not the scan.",
-)
-_char_class_probe(
-    "probe_docs_controls",
-    _CONTROL_RE,
-    "Bisection probe: rows whose text contains C0 controls (minus "
-    "\\t \\n \\r), DEL, or C1 controls (includes U+0085 NEL).  The r7 "
-    "adversarial fixture covers \\r/NUL/U+2028-29 and passes locally; this "
-    "counts the class in the driver's own fixture.",
-)
-_char_class_probe(
-    "probe_docs_replacement_char",
-    _REPLACEMENT,
-    "Bisection probe: rows containing U+FFFD REPLACEMENT CHARACTER — the "
-    "smoking gun for the lone-surrogate / invalid-UTF-8 hypothesis: a JVM "
-    "parquet reader that re-encodes ill-formed sequences with replacement "
-    "shows MORE U+FFFD rows than DuckDB reading the same file raw, and the "
-    "byte-sum probes shift in lockstep.",
-)
-
-
-@register(
-    "probe_docs_len_vs_nchars",
-    oracle="""
-    SELECT COUNT(*) FILTER (WHERE length(text) <> n_chars) AS n_mismatch_rows,
-           CAST(COALESCE(SUM(length(text) - n_chars), 0) AS BIGINT)
-             AS sum_len_delta,
-           COUNT(*) FILTER (WHERE strlen(text)
-                              <> octet_length(encode(text)))
-             AS n_reencode_mismatch
-    FROM documents
-    """,
-)
-def probe_docs_len_vs_nchars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: rows where the engine's codepoint count
-    ``length(text)`` disagrees with the fixture's stored generation-time
-    ``n_chars`` column, plus the signed total delta.  Spark's
-    ``UTF8String.numChars``, DuckDB's ``length`` and Python's ``len`` all
-    count codepoints, so any nonzero here names a codepoint-counting or
-    read-level content divergence directly — and DISAGREEMENT between the
-    two engines' deltas names which engine re-encoded the content.
-
-    ``n_reencode_mismatch`` is the Spark-INTERNAL ill-formed-bytes
-    detector (no engine agreement on content needed): Spark's
-    ``octet_length(text)`` measures the RAW stored bytes while
-    ``encode(text, 'utf-8')`` round-trips through java.lang.String, which
-    substitutes U+FFFD for ill-formed sequences — so any row whose stored
-    bytes are not valid UTF-8 changes length under re-encode.  DuckDB's
-    ``encode`` is an identity on its (scan-validated) varchars, so the
-    oracle column is structurally 0; Spark counting >0 while DuckDB
-    errors-or-zeros is a one-bit proof that the driver fixture carries
-    invalid UTF-8 that only the JVM path tolerates-and-rewrites."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.agg(
-        F.count(
-            F.when(F.length(F.col("text")) != F.col("n_chars"), F.lit(1))
-        ).alias("n_mismatch_rows"),
-        F.coalesce(
-            F.sum(F.length(F.col("text")) - F.col("n_chars")), F.lit(0)
-        ).alias("sum_len_delta"),
-        F.count(
-            F.when(
-                F.octet_length(F.col("text"))
-                != F.length(F.encode(F.col("text"), "UTF-8")),
-                F.lit(1),
-            )
-        ).alias("n_reencode_mismatch"),
-    )
-
-
-@register(
-    "probe_docs_case_mapping",
-    oracle="""
-    SELECT COUNT(*) FILTER (WHERE length(lower(text)) <> length(text))
-             AS n_lower_len_diff,
-           COUNT(*) FILTER (WHERE length(upper(text)) <> length(text))
-             AS n_upper_len_diff,
-           COUNT(*) FILTER (WHERE lower(text) = text AND upper(text) = text
-                              AND length(text) > 0) AS n_caseless
-    FROM documents WHERE text IS NOT NULL
-    """,
-)
-def probe_docs_case_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe (r9, ADVICE r8): Unicode CASE-MAPPING sensitivity of
-    the fixture.  The JVM applies full case mapping ('straße'→'STRASSE',
-    'İ'→'i̇' growing the string) while DuckDB's utf8proc applies simple
-    per-codepoint mapping — so ``length(lower(text))`` can disagree BETWEEN
-    engines on text containing U+0130/ß/ligatures.  Each engine evaluates
-    the predicate on its own strings; the driver hash then compares the
-    counts, so a red HERE attributes any simultaneous red on the
-    lower()-tokenizing text queries (wordcount family,
-    ``corpus_filter_funnel``, BPE) to case mapping, while green here
-    exonerates case mapping fixture-wide.  One scan, codegen predicates,
-    1-row output."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    t = F.col("text")
-    return docs.agg(
-        F.count(F.when(F.length(F.lower(t)) != F.length(t), 1)).alias(
-            "n_lower_len_diff"
-        ),
-        F.count(F.when(F.length(F.upper(t)) != F.length(t), 1)).alias(
-            "n_upper_len_diff"
-        ),
-        F.count(
-            F.when(
-                (F.lower(t) == t) & (F.upper(t) == t) & (F.length(t) > 0), 1
-            )
-        ).alias("n_caseless"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# orders probes — bisecting csv_source_agreement (the one red on a table with
-# no document text: suspects are double edge values inside the price-micro
-# expression, timestamp→date casting, and the priority string column)
-# ---------------------------------------------------------------------------
-
-_SLICE = "o_orderkey < 500"  # the exact slice csv_source_agreement aggregates
-
-
-def _orders_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").filter(F.expr(_SLICE))
-
-
-@register(
-    "probe_orders_base",
-    oracle=f"""
-    SELECT COUNT(*) AS n_src,
-           CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
-           COUNT(*) FILTER (WHERE o_totalprice IS NULL) AS n_null_price,
-           COUNT(*) FILTER (WHERE isnan(o_totalprice)) AS n_nan_price,
-           COUNT(*) FILTER (WHERE o_totalprice = CAST('Infinity' AS DOUBLE))
-             AS n_posinf_price,
-           COUNT(*) FILTER (WHERE o_totalprice = CAST('-Infinity' AS DOUBLE))
-             AS n_neginf_price,
-           COUNT(*) FILTER (WHERE NOT isnan(o_totalprice)
-                              AND abs(o_totalprice) > 1e12
-                              AND o_totalprice <> CAST('Infinity' AS DOUBLE)
-                              AND o_totalprice <> CAST('-Infinity' AS DOUBLE))
-             AS n_extreme_price
-    FROM orders WHERE {_SLICE}
-    """,
-)
-def probe_orders_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: row/key tallies plus a census of the double edge
-    values (NULL / NaN / ±Inf / finite beyond the ±1e12 clamp) in the
-    ``csv_source_agreement`` slice.  NaN ordering inside GREATEST/LEAST is
-    engine- and version-sensitive; this counts whether the hazard class is
-    even present in the driver fixture — equality against ±Inf and isnan()
-    are IEEE-defined identically in both engines, so the census itself is
-    robust."""
-    o = _orders_slice(spark, sf_dir)
-    pos_inf = F.lit(float("inf"))
-    neg_inf = F.lit(float("-inf"))
-    p = F.col("o_totalprice")
-    return o.agg(
-        F.count("*").alias("n_src"),
-        F.sum("o_orderkey").alias("sum_key"),
-        F.count(F.when(p.isNull(), 1)).alias("n_null_price"),
-        F.count(F.when(F.isnan(p), 1)).alias("n_nan_price"),
-        F.count(F.when(p == pos_inf, 1)).alias("n_posinf_price"),
-        F.count(F.when(p == neg_inf, 1)).alias("n_neginf_price"),
-        F.count(
-            F.when(
-                (~F.isnan(p))
-                & (F.abs(p) > 1e12)
-                & (p != pos_inf)
-                & (p != neg_inf),
-                1,
-            )
-        ).alias("n_extreme_price"),
-    )
-
-
-@register(
-    "probe_orders_dates",
-    oracle=f"""
-    SELECT MIN(CAST(o_orderdate AS DATE)) AS min_day,
-           MAX(CAST(o_orderdate AS DATE)) AS max_day,
-           COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS n_days,
-           COUNT(*) FILTER (WHERE o_orderdate IS NULL) AS n_null_date
-    FROM orders WHERE {_SLICE}
-    """,
-)
-def probe_orders_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: the timestamp→date cast terms of
-    ``csv_source_agreement`` alone (min / max / distinct-day count / NULLs).
-    A red here with green price probes names calendar or session-timezone
-    truncation as the divergent property."""
-    o = _orders_slice(spark, sf_dir)
-    d = F.to_date("o_orderdate")
-    return o.agg(
-        F.min(d).alias("min_day"),
-        F.max(d).alias("max_day"),
-        F.count_distinct(d).alias("n_days"),
-        F.count(F.when(F.col("o_orderdate").isNull(), 1)).alias("n_null_date"),
-    )
-
-
-@register(
-    "probe_orders_priorities",
-    oracle=f"""
-    SELECT COUNT(DISTINCT o_orderpriority) AS n_priorities,
-           CAST(SUM(octet_length(encode(COALESCE(o_orderpriority, ''))))
-                AS BIGINT) AS priority_bytes,
-           COUNT(*) FILTER (WHERE o_orderpriority IS NULL) AS n_null_priority
-    FROM orders WHERE {_SLICE}
-    """,
-)
-def probe_orders_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: the one string column ``csv_source_agreement``
-    touches — distinct count plus UTF-8 byte sum, so a string-content
-    divergence on orders shows here independent of the numeric terms."""
-    o = _orders_slice(spark, sf_dir)
-    pr = F.col("o_orderpriority")
-    return o.agg(
-        F.count_distinct(pr).alias("n_priorities"),
-        F.sum(F.length(F.encode(F.coalesce(pr, F.lit("")), "UTF-8"))).alias(
-            "priority_bytes"
-        ),
-        F.count(F.when(pr.isNull(), 1)).alias("n_null_priority"),
-    )
-
-
-# NaN-guarded micro-price — imported from its single source of truth so the
-# probe exercises EXACTLY the expression csv_source_agreement rides (NaN
-# routed to NULL before it can reach GREATEST/LEAST, whose NaN ordering is
-# the engine/version-sensitive corner; isnan() is IEEE-defined identically
-# everywhere).
-#
-# r9: the r7-verbatim UNguarded control arm (_PRICE_MICRO_RAW) is RETIRED —
-# the r8 verdict's type audit proved the price-probe reds were a harness
-# typing artifact (DuckDB renders the DECIMAL(38,0) output as float64
-# through pandas while Spark returns Decimal; the driver hash is
-# dtype-sensitive), not NaN content divergence, so the control arm carried
-# no information.  Both probes now ride the guarded expression under the
-# two hash-stable renderings (VARCHAR digits / provably-int64 BIGINT).
-from .queries_wordcount import _PRICE_MICRO as _PRICE_MICRO_GUARDED  # noqa: E402
-
-# Tight-clamp variant: |price| clamped to 1e9 → |term| ≤ 1e15 micro-units,
-# so even 500 worst-case terms stay ≤ 5e17, comfortably inside int64 — the
-# whole sum rides BIGINT end-to-end in both engines with no DECIMAL or
-# HUGEINT anywhere in either output.
-_PRICE_MICRO_TIGHT = (
-    "CASE WHEN o_totalprice IS NULL OR isnan(o_totalprice) THEN NULL "
-    "ELSE CAST(FLOOR(LEAST(GREATEST(o_totalprice, -1e9), 1e9) * 1e6) "
-    "AS BIGINT) END"
-)
-
-
-@register(
-    "probe_orders_price_micro",
-    oracle=f"""
-    SELECT CAST(CAST(SUM({_PRICE_MICRO_GUARDED}) AS DECIMAL(38,0))
-                AS VARCHAR) AS sum_price_micro,
-           COUNT(*) FILTER (WHERE ({_PRICE_MICRO_GUARDED}) IS NULL)
-             AS n_null_terms
-    FROM orders WHERE {_SLICE}
-    """,
-)
-def probe_orders_price_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe: the NaN-guarded exact micro-price sum (the
-    expression ``csv_source_agreement`` rides) alone, plus how many terms
-    NULLed out.  r9 typing fix (VERDICT r8 root cause): the sum renders as
-    a VARCHAR digit string in both engines — the previous DECIMAL(38,0)
-    rendering itself caused the r8 red (DuckDB→pandas float64 vs Spark
-    Decimal), so the content question is now asked in a dtype-proof
-    encoding."""
-    o = _orders_slice(spark, sf_dir)
-    term = F.expr(_PRICE_MICRO_GUARDED)
-    return o.agg(
-        F.sum(term).cast("decimal(38,0)").cast("string").alias("sum_price_micro"),
-        F.count(F.when(term.isNull(), 1)).alias("n_null_terms"),
-    )
-
-
-@register(
-    "probe_orders_price_micro_bigint",
-    oracle=f"""
-    SELECT CAST(SUM({_PRICE_MICRO_TIGHT}) AS BIGINT) AS sum_price_micro_tight,
-           COUNT(*) FILTER (WHERE ({_PRICE_MICRO_TIGHT}) IS NULL)
-             AS n_null_terms
-    FROM orders WHERE {_SLICE}
-    """,
-)
-def probe_orders_price_micro_bigint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisection probe (r9 rendering arm): the same NaN-guarded micro-price
-    content under a pure-BIGINT encoding — |price| clamped to 1e9 so the
-    500-row sum provably fits int64 with no DECIMAL/HUGEINT in either
-    engine's output.  Green here + green on the VARCHAR arm closes the
-    price question under both hash-stable renderings; green here + red
-    there would name the VARCHAR rendering itself (not expected)."""
-    o = _orders_slice(spark, sf_dir)
-    term = F.expr(_PRICE_MICRO_TIGHT)
-    return o.agg(
-        F.sum(term).alias("sum_price_micro_tight"),
-        F.count(F.when(term.isNull(), 1)).alias("n_null_terms"),
-    )
-
-
-# --- Driver hash-typing canaries (r9, VERDICT r8 next-round #2) -------------
-#
-# The r8 type audit attributed every residual driver red to one mechanism:
-# DuckDB's pandas conversion renders HUGEINT and DECIMAL(38,0) as float64
-# while Spark's matching column arrives int64 / Decimal, and the driver's
-# value-hash is dtype-sensitive.  These two 1-row canaries read that hash
-# behavior DIRECTLY, with zero fixture dependence (constant VALUES): each
-# deliberately emits the SAME value in the divergent dtype pair.  Expected
-# CORRECTNESS booleans if the dtype theory is right: both RED.  Both green
-# would mean the driver normalizes dtypes — either way the question closes
-# empirically, and the pair guards every future query: a fleet that keeps
-# its outputs BIGINT/DOUBLE/VARCHAR (tests/test_output_typing.py enforces
-# this) stays green while the canaries keep measuring the hash's typing
-# sensitivity each round.  Deliberately registered as the ONLY two queries
-# allowed to violate the output-type lint.
 
 
 @register(

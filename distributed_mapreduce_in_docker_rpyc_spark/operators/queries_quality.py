@@ -1075,8 +1075,8 @@ def dataset_fingerprint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     renders as the clamped micro-price BIGINT (integer rendering is
     engine-proof; double→DECIMAL→VARCHAR rendering and NaN ordering inside
     GREATEST/LEAST are not — NaN now renders as a literal sentinel before
-    it can reach the clamp).  The queries_probes.py bisection probes
-    attribute any residual red to a named property.
+    it can reach the clamp).  The adversarial-content differential test
+    (tests/test_probes_adversarial.py) pins it against DuckDB.
 
     r9 typing fix (VERDICT r8 root cause): the fingerprint renders as a
     VARCHAR digit string in BOTH engines — DuckDB's pandas path renders

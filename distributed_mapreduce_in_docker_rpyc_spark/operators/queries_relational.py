@@ -23,7 +23,6 @@ from distributed_mapreduce_in_docker_rpyc_spark.operators.relational import (
     money_sum,
     top_k_per_group,
 )
-from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import widen_small_scan
 from distributed_mapreduce_in_docker_rpyc_spark.registry import register
 from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
 
@@ -60,25 +59,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: Parquet scan with PushedFilters on l_shipdate → partial
     HashAggregate → 2-key Exchange → final HashAggregate. The partial agg is
     the reference's combiner (worker/worker.py:15-18) generalized.
-
-    r10 (guide §2.5 input skew): a small-SF lineitem parquet is ONE row
-    group, so the scan + the 6 double→decimal casts + 8 partial aggregates
-    all ran on a single core.  When the scan cannot fill the cores,
-    round-robin it to the core count first — measured 1.33 s → 0.95 s
-    median (r10 interleaved A/B, sf0.1; re-confirmed r11: plain 1.09 s vs
-    widened 0.79 s median over 11 interleaved reps); the filter and column
-    pruning still push through the Repartition to the scan.  At real scale
-    the guard makes it a no-op.  NOT applied to the join-heavy lineitem
-    queries (q5/q9/q18/q21): measured THERE the extra shuffle loses
-    0.3–0.4 s because their per-row map work is one light hash probe, not
-    six decimal casts.
-
-    r11 (VERDICT r10 #1): the guard is now the file-size check in
-    ``widen_small_scan`` — the former ``.rdd.getNumPartitions()`` probe
-    forced a physical-plan build (0.04–0.46 s measured) inside the timed
-    query build for a boolean that one stat call answers.
     """
-    li = widen_small_scan(_t(spark, sf_dir, "lineitem"))
+    li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (

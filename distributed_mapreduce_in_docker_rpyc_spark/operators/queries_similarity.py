@@ -1138,11 +1138,6 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("_nv"),
         norm_col("embedding").alias("_nn"),
     )
-    # r11: file-size guard instead of a physical-plan .rdd probe (VERDICT
-    # r10 #1).
-    from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import widen_small_scan
-
-    train = widen_small_scan(train)
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     neigh = (
         train.join(F.broadcast(q), F.lit(True))

@@ -717,8 +717,7 @@ def csv_roundtrip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # across releases), which is the #1 suspect for the r7 driver-only
 # csv_source_agreement hash-red (VERDICT r7 next-round #1/#3).  isnan() is
 # IEEE-defined identically in both engines, so the guarded expression is
-# well-defined everywhere; probe_orders_price_micro exercises this exact
-# expression in isolation (operators/queries_probes.py).  r9: the r8 type
+# well-defined everywhere.  r9: the r8 type
 # audit exonerated NaN — the residual red was the DECIMAL(38,0) OUTPUT
 # rendering (DuckDB→pandas float64 vs Spark Decimal under the driver's
 # dtype-sensitive hash); the per-term DECIMAL(38,0) here is fine (it never

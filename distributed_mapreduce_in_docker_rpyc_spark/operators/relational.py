@@ -65,11 +65,15 @@ def sessionize(
     """Gap-based sessionization: lag + cumulative-sum-of-gap-breaks.
 
     Single shuffle on ``user_col``; both window functions share the same
-    partitioning so Catalyst plans one Exchange.
+    partitioning so Catalyst plans one Exchange.  The gap is taken in
+    microseconds: whole seconds would read a 1800.7 s gap that straddles a
+    second boundary as 1800 s, and miss the break an INTERVAL comparison
+    sees.
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, "event_id")
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    us = F.unix_micros(F.col(ts_col))
+    gap = us - F.lag(us).over(w)
+    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1).otherwise(0)
     return events.withColumn("session_seq", F.sum(is_new).over(w))
 
 

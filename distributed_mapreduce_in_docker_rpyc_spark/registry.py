@@ -36,76 +36,19 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 # The round driver verifies 50 queries per round in registration order.
-# Round-11 budget, implementing VERDICT r10 "Next round" #5 / the r10
-# ROUND-11 NOTE verbatim: (a) the nine r9 builds rotate back through for
-# their second driver row, then (b) every remaining green ordered
-# STALEST-FIRST by its latest driver correctness row, regenerated from the
-# CORRECTNESS_r01-r10 union by `scripts/gen_driver_priority.py` (the
-# within-round tie-break is the round file's row order); the spent
-# diagnostic probes stay pinned below the line (questions closed since r10;
-# permanent guards: tests/test_output_typing.py + the dtype-faithful
-# scripts/verify_driver.py).  The r11 window = 9 r9-builds + all 30
-# r2-latest + the first 11 r3-latest; after CORRECTNESS_r11 no query's
-# latest row is older than r3.  `scripts/verify_driver.py --strict`
+# Generated by `scripts/gen_driver_priority.py` from the CORRECTNESS_r01-r11
+# union and spliced here verbatim: the two markov queries lead (their
+# driver-side replay, functions/exactmath.py, has no driver oracle row yet),
+# then every query STALEST-FIRST by its latest driver correctness row (the
+# within-round tie-break is the round file's row order); the two
+# hash-typing canaries stay pinned last (question closed; permanent guard:
+# tests/test_output_typing.py).  `scripts/verify_driver.py --strict`
 # recomputes where the 50-slot line falls; trust it, not the comments.
-# ROUND-12 NOTE: after CORRECTNESS_r11 lands, re-run
-# scripts/gen_driver_priority.py (drop its r9-builds ROTATION_HEAD — their
-# second row will be fresh) and splice the output here; staleness then
-# naturally leads with the remaining r3-latest queries.
 DRIVER_PRIORITY: tuple[str, ...] = (
-# (1) rotation head: r9 builds, second driver row (ROUND-11 NOTE)
-    "graph_pagerank_dangling",
-    "stream_ann_index_maintenance",
-    "ann_join_auto_k",
-    "sim_auto_k_recall_report",
-    "dataset_fingerprint_incremental",
-    "pack_sequences_plan",
-    "pack_sequences_manifest",
-    "dataloader_shard_plan",
-    "batch_padding_plan",
-# --- latest driver row: r2 ---
-    "emb_outliers_by_label",
-    "text_stats",
-    "text_langid",
-    "text_token_count_bpe",
-    "text_fingerprint",
-    "text_bigram_freq",
-    "text_quality_score",
-    "text_langid_confusion",
-    "corpus_split",
-    "corpus_mixture_plan",
-    "corpus_stratified_sample",
-    "corpus_packing_plan",
-    "text_tfidf_top_terms",
-    "text_pii_scrub",
-    "udtf_sentence_split",
-    "text_collocations_pmi",
-    "word_cooc_triangles",
-    "zipf_law_fit",
-    "text_gopher_quality",
-    "decontam_ngram_overlap",
-    "text_bm25_search",
-    "corpus_pipeline_report",
-    "corpus_weighted_sample",
-    "events_tumbling_hourly",
-    "events_sliding_10m_5m",
-    "events_sessionize",
-    "events_json_extract",
-    "events_top_users",
-    "window_range_frame_rolling",
-    "events_cohort_retention",
+# (1) head: driver-side markov replay, first driver row
+    "events_markov_stationary",
+    "events_markov_attribution",
 # --- latest driver row: r3 ---
-    "label_centroids",
-    "emb_quantize_int8",
-    "stream_tumbling_hourly",
-    "stream_sliding_10m_5m",
-    "stream_stateful_user_totals",
-    "stream_session_windows",
-    "stream_static_join_segments",
-    "stream_dedup_pairs",
-    "stream_stream_join_attribution",
-    "stream_dedup_against_corpus",
-    "dq_orders_report",   # <-- 50-slot line
     "dq_referential_integrity",
     "dq_join_key_skew",
     "dq_k_anonymity",
@@ -154,7 +97,7 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "sim_quantized_recall",
     "grouped_zscore_pandas",
     "q12_priority_by_flag",
-    "sim_topk_ivf",
+    "sim_topk_ivf",   # <-- 50-slot line
     "sim_ann_recall_report",
     "bfs_word_distances",
     "corpus_shuffle_shards",
@@ -219,7 +162,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "events_active_streaks",
     "multimodal_pixel_histogram",
     "dedup_lsh_tuning_report",
-    "events_markov_stationary",
     "dq_benford_leading_digit",
     "text_readability_scores",
     "corpus_reservoir_sample",
@@ -333,7 +275,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "stat_bartlett_test",
     "dedup_survivorship_report",
     "contrastive_pair_mining",
-    "events_markov_attribution",
     "multimodal_audio_constellation",
     "jsonl_gzip_roundtrip",
     "setop_except_all",
@@ -437,28 +378,58 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "sim_cosine_pairs",
     "sim_topk_bruteforce",
     "sim_topk_lsh",
+# --- latest driver row: r11 ---
+    "graph_pagerank_dangling",
+    "stream_ann_index_maintenance",
+    "ann_join_auto_k",
+    "sim_auto_k_recall_report",
+    "dataset_fingerprint_incremental",
+    "pack_sequences_plan",
+    "pack_sequences_manifest",
+    "dataloader_shard_plan",
+    "batch_padding_plan",
+    "emb_outliers_by_label",
+    "text_stats",
+    "text_langid",
+    "text_token_count_bpe",
+    "text_fingerprint",
+    "text_bigram_freq",
+    "text_quality_score",
+    "text_langid_confusion",
+    "corpus_split",
+    "corpus_mixture_plan",
+    "corpus_stratified_sample",
+    "corpus_packing_plan",
+    "text_tfidf_top_terms",
+    "text_pii_scrub",
+    "udtf_sentence_split",
+    "text_collocations_pmi",
+    "word_cooc_triangles",
+    "zipf_law_fit",
+    "text_gopher_quality",
+    "decontam_ngram_overlap",
+    "text_bm25_search",
+    "corpus_pipeline_report",
+    "corpus_weighted_sample",
+    "events_tumbling_hourly",
+    "events_sliding_10m_5m",
+    "events_sessionize",
+    "events_json_extract",
+    "events_top_users",
+    "window_range_frame_rolling",
+    "events_cohort_retention",
+    "label_centroids",
+    "emb_quantize_int8",
+    "stream_tumbling_hourly",
+    "stream_sliding_10m_5m",
+    "stream_stateful_user_totals",
+    "stream_session_windows",
+    "stream_static_join_segments",
+    "stream_dedup_pairs",
+    "stream_stream_join_attribution",
+    "stream_dedup_against_corpus",
+    "dq_orders_report",
 # --- spent diagnostics (pinned last) ---
-    "probe_docs_counts",
-    "probe_docs_distincts",
-    "probe_docs_meta_bytes",
-    "probe_docs_text_bytes_b0",
-    "probe_docs_text_bytes_b1",
-    "probe_docs_text_bytes_b2",
-    "probe_docs_text_bytes_b3",
-    "probe_docs_text_bytes_b4",
-    "probe_docs_text_bytes_b5",
-    "probe_docs_text_bytes_b6",
-    "probe_docs_text_bytes_b7",
-    "probe_docs_astral",
-    "probe_docs_controls",
-    "probe_docs_replacement_char",
-    "probe_docs_len_vs_nchars",
-    "probe_orders_base",
-    "probe_orders_dates",
-    "probe_orders_priorities",
-    "probe_orders_price_micro",
-    "probe_orders_price_micro_bigint",
-    "probe_docs_case_mapping",
     "probe_hash_typing_hugeint",
     "probe_hash_typing_decimal38",
 )

@@ -23,7 +23,7 @@ FAMILY = {
     "queries_quality": "Data quality / privacy audits",
     "queries_sketches": "Sketch aggregates",
     "queries_features": "Feature engineering / statistics / ML",
-    "queries_probes": "Engine-agreement bisection probes (r8 diagnostics)",
+    "queries_probes": "Driver hash-typing canaries",
 }
 
 

@@ -1,15 +1,14 @@
 """Regenerate registry.DRIVER_PRIORITY for the next round's driver window.
 
-Policy (VERDICT r10 next-round #5 / the registry's ROUND-11 NOTE):
+Policy:
   1. queries never driver-checked (no row in any CORRECTNESS_r*.json) first,
      in current registration order;
-  2. the designated rotation head (r11: the nine r9 BUILDS, for their second
-     driver row — the newest surface gets a confirming row one round later);
+  2. the designated head: the two markov queries, whose driver-side replay
+     (functions/exactmath.py) has not yet had a driver oracle row;
   3. every remaining query, STALEST-FIRST by its latest driver correctness
-     row (ties: the round file's row order) — except the spent diagnostics,
-     which stay pinned at the very bottom (their questions are closed; the
-     permanent guards are tests/test_output_typing.py + the dtype-faithful
-     verify_driver.py).
+     row (ties: the round file's row order) — except the two hash-typing
+     canaries, pinned at the very bottom (their question is closed; the
+     permanent guard is tests/test_output_typing.py).
 
 Prints the python tuple body (one quoted name per line with group comments)
 to paste into registry.py, plus where the 50-slot line falls.
@@ -27,43 +26,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from distributed_mapreduce_in_docker_rpyc_spark import registry
 
-# r11 rotation head: the nine r9 builds (VERDICT r9 #6 / r10 #5 ask for
-# their second row before stalest-first recycling resumes).
-ROTATION_HEAD = (
-    "graph_pagerank_dangling",
-    "stream_ann_index_maintenance",
-    "ann_join_auto_k",
-    "sim_auto_k_recall_report",
-    "dataset_fingerprint_incremental",
-    "pack_sequences_plan",
-    "pack_sequences_manifest",
-    "dataloader_shard_plan",
-    "batch_padding_plan",
+HEAD = (
+    "events_markov_stationary",
+    "events_markov_attribution",
 )
 
-# Spent diagnostics: keep below the line permanently (r10 policy).
+# Spent diagnostics: keep below the line permanently.
 SPENT_TAIL = (
-    "probe_docs_counts",
-    "probe_docs_distincts",
-    "probe_docs_meta_bytes",
-    "probe_docs_text_bytes_b0",
-    "probe_docs_text_bytes_b1",
-    "probe_docs_text_bytes_b2",
-    "probe_docs_text_bytes_b3",
-    "probe_docs_text_bytes_b4",
-    "probe_docs_text_bytes_b5",
-    "probe_docs_text_bytes_b6",
-    "probe_docs_text_bytes_b7",
-    "probe_docs_astral",
-    "probe_docs_controls",
-    "probe_docs_replacement_char",
-    "probe_docs_len_vs_nchars",
-    "probe_orders_base",
-    "probe_orders_dates",
-    "probe_orders_priorities",
-    "probe_orders_price_micro",
-    "probe_orders_price_micro_bigint",
-    "probe_docs_case_mapping",
     "probe_hash_typing_hugeint",
     "probe_hash_typing_decimal38",
 )
@@ -83,7 +52,7 @@ def main() -> None:
             if rnd >= latest.get(name, -1):
                 latest[name] = rnd
                 order_in_round[name] = i
-    excluded = set(registry.DRIVER_DEMOTE) | set(ROTATION_HEAD) | set(SPENT_TAIL)
+    excluded = set(registry.DRIVER_DEMOTE) | set(HEAD) | set(SPENT_TAIL)
     names = [n for n in registry.QUERIES if n not in excluded]
     never = [n for n in names if n not in latest]
     rest = sorted(
@@ -94,8 +63,8 @@ def main() -> None:
     if never:
         out.append("# (0) never driver-checked")
         out += never
-    out.append("# (1) rotation head: r9 builds, second driver row (ROUND-11 NOTE)")
-    out += list(ROTATION_HEAD)
+    out.append("# (1) head: driver-side markov replay, first driver row")
+    out += list(HEAD)
     cur = None
     for n in rest:
         if latest[n] != cur:
@@ -113,7 +82,7 @@ def main() -> None:
             marker = "   # <-- 50-slot line" if slot == 50 else ""
             print(f'    "{line}",{marker}')
     print(
-        f"# total listed: {slot}; never={len(never)} rot_head={len(ROTATION_HEAD)} "
+        f"# total listed: {slot}; never={len(never)} head={len(HEAD)} "
         f"spent_tail={len(SPENT_TAIL)}",
         file=sys.stderr,
     )

@@ -67,3 +67,25 @@ def compare(spark_df, sql: str, sf_dir: str, float_places: int = 6) -> None:
     on = _norm_rows(o_rows, o_cols, float_places)
     for i, (a, b) in enumerate(zip(sn, on)):
         assert a == b, f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
+
+
+def write_events(sf_dir: str, rows) -> None:
+    """Write ``rows`` of ``(event_id, ts, user_id, event_type)`` as a
+    one-file ``events.parquet`` under ``sf_dir``, with the fixture's schema
+    (microsecond naive ``ts``), for oracle differentials on hand-built data."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    event_id, ts, user_id, event_type = (list(c) for c in zip(*rows))
+    n = len(rows)
+    table = pa.table(
+        {
+            "event_id": pa.array(event_id, pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array(user_id, pa.int64()),
+            "event_type": pa.array(event_type, pa.string()),
+            "value": pa.array([1.0] * n, pa.float64()),
+            "props": pa.array(['{"k": 0}'] * n, pa.string()),
+        }
+    )
+    pq.write_table(table, os.path.join(sf_dir, "events.parquet"))

@@ -9,7 +9,8 @@ equivalence DIFFERENTIALLY on the running JVM:
 1. the double→DECIMAL(38,12) cast replay over fuzzed + boundary doubles,
 2. one full mass-sum step (multiply, quantize, exact sum, cast back) against
    the literal Spark job it replaces, on random transition matrices,
-3. the rewritten queries against their DuckDB oracles end-to-end.
+3. the rewritten queries against their DuckDB oracles end-to-end, also on
+   an event type literally named after the reserved ``CONV`` state.
 """
 
 from __future__ import annotations
@@ -99,3 +100,36 @@ def test_markov_queries_match_oracle(spark, sf_dir, name):
 
     registry.load_all()
     compare(registry.QUERIES[name](spark, sf_dir), registry.ORACLES[name], sf_dir)
+
+
+def test_markov_attribution_with_conv_event_type_matches_oracle(spark, tmp_path):
+    """An event type named ``CONV`` gives the chain a real CONV→CONV edge
+    next to the absorbing pv=1.0 self-loop.  The oracle keeps both rows
+    (UNION ALL) and sums their quantized products; the driver replay must
+    too, not let the self-loop overwrite the real edge.  Removing the CONV
+    channel redirects every conversion to NULL, so that chain has no CONV
+    state and, as in the oracle, no output row."""
+    from datetime import datetime, timedelta
+
+    from distributed_mapreduce_in_docker_rpyc_spark import registry
+    from tests.oracle import compare, write_events
+
+    journeys = {
+        1: ["view", "click", "purchase"],
+        2: ["view", "CONV", "CONV", "click"],
+        3: ["click", "view", "purchase"],
+        4: ["CONV", "view", "purchase"],
+        5: ["view", "CONV", "click", "view"],
+    }
+    t0 = datetime(2024, 1, 1)
+    rows = []
+    for user, types in journeys.items():
+        for j, et in enumerate(types):
+            rows.append((len(rows), t0 + timedelta(minutes=10 * j), user, et))
+    write_events(str(tmp_path), rows)
+
+    registry.load_all()
+    name = "events_markov_attribution"
+    df = registry.QUERIES[name](spark, str(tmp_path))
+    assert {r.channel for r in df.collect()} == {"view", "click"}
+    compare(df, registry.ORACLES[name], str(tmp_path))

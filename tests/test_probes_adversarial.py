@@ -1,13 +1,10 @@
-"""Adversarial-content regression tests for the engine-agreement bisection
-probes (VERDICT r7 next-round #1).
+"""Adversarial-content differential tests for the four source-only
+engine-agreement queries (``jsonl/csv/compaction_source_agreement``,
+``dataset_fingerprint_report``).
 
-The r7 driver left exactly four hash-red queries, all source-only
-engine-agreement aggregates that are green under the driver-identical local
-harness — proof that the driver's regenerated fixture contains a content
-class the local fixtures lack.  ``operators/queries_probes.py`` splits those
-folded hashes into 20 single-property probes; this file pins that every
-probe (and the re-registered agreement queries) stays Spark≡DuckDB on the
-nastiest VALID content we can synthesize locally:
+Each agreement query folds several properties of a table into one value,
+so this file pins that each stays Spark≡DuckDB on the nastiest VALID
+content we can synthesize locally:
 
 * documents: astral-plane codepoints (4-byte UTF-8), C0/C1 controls, a
   literal U+FFFD, NFC vs NFD composed/decomposed pairs, U+2028/29, NUL,
@@ -19,12 +16,7 @@ nastiest VALID content we can synthesize locally:
 
 INVALID UTF-8 (lone surrogates / WTF-8, overlong, truncated sequences) is
 deliberately absent: DuckDB 1.0 rejects every such value at parquet-scan
-time with InvalidInputException (verified while building this file by
-writing raw Arrow buffers that bypass pyarrow's validation), so a driver
-fixture containing it would have produced an oracle ERROR row, not the
-observed err=None hash-red.  The probes therefore target valid-content
-divergence; if the driver's newer DuckDB skips validation, the
-``probe_docs_replacement_char`` + byte-sum bucket booleans will name it.
+time with InvalidInputException, so it cannot reach a hash comparison.
 """
 
 from __future__ import annotations
@@ -33,23 +25,6 @@ import unicodedata
 
 import pytest
 from pyspark.sql import functions as F
-
-PROBE_NAMES = [
-    "probe_docs_counts",
-    "probe_docs_distincts",
-    "probe_docs_meta_bytes",
-    *[f"probe_docs_text_bytes_b{b}" for b in range(8)],
-    "probe_docs_astral",
-    "probe_docs_controls",
-    "probe_docs_replacement_char",
-    "probe_docs_len_vs_nchars",
-    "probe_docs_case_mapping",
-    "probe_orders_base",
-    "probe_orders_dates",
-    "probe_orders_priorities",
-    "probe_orders_price_micro",
-    "probe_orders_price_micro_bigint",
-]
 
 AGREEMENT_NAMES = [
     "jsonl_source_agreement",
@@ -77,8 +52,7 @@ def probe_adv_dir(spark, sf_dir, tmp_path_factory) -> str:
         (157, "", "en", "advsrc", None),
         (158, None, None, None, None),
         (159, "y" * 20000, "en", "advsrc", None),
-        # stored n_chars deliberately wrong: len_vs_nchars must count these
-        # IDENTICALLY in both engines (2 rows, known signed delta)
+        # stored n_chars deliberately disagrees with the body
         (160, "four", "en", "advsrc", 7),
         (161, "\U0001f600\U0001f600", "en", "advsrc", 5),
     ]
@@ -134,101 +108,16 @@ def duck(probe_adv_dir):
     return con
 
 
-def _match(spark, con, probe_adv_dir, name):
-    from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES, QUERIES, load_all
-
-    load_all()
-    rows = QUERIES[name](spark, probe_adv_dir).collect()
-    res = con.execute(ORACLES[name])
-    cols = [d[0] for d in res.description]
-    want = res.fetchall()
-    got = [tuple(r[c] for c in cols) for r in rows]
-    assert sorted(map(repr, got)) == sorted(map(repr, want)), (name, got, want)
-    return got
-
-
-@pytest.mark.parametrize("name", PROBE_NAMES)
-def test_probe_matches_duckdb_on_adversarial_content(spark, probe_adv_dir, duck, name):
-    _match(spark, duck, probe_adv_dir, name)
-
-
 @pytest.mark.parametrize("name", AGREEMENT_NAMES)
 def test_agreement_query_matches_duckdb_on_adversarial_content(
     spark, probe_adv_dir, duck, name
 ):
-    _match(spark, duck, probe_adv_dir, name)
-
-
-def test_char_class_probes_actually_fire(spark, probe_adv_dir, duck):
-    """The char-class probes must COUNT the injected rows (a probe that
-    matches DuckDB because both count zero proves nothing)."""
-    from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
-
-    load_all()
-
-    def one(name):
-        return QUERIES[name](spark, probe_adv_dir).collect()[0][0]
-
-    assert one("probe_docs_astral") >= 2  # rows 150, 161
-    assert one("probe_docs_controls") >= 2  # rows 151, 156
-    assert one("probe_docs_replacement_char") >= 1  # row 152
-    n_mismatch = QUERIES["probe_docs_len_vs_nchars"](spark, probe_adv_dir).collect()[0]
-    assert n_mismatch["n_mismatch_rows"] == 2  # rows 160, 161
-    assert n_mismatch["sum_len_delta"] == (4 - 7) + (2 - 5)
-
-
-def test_price_census_counts_edge_values(spark, probe_adv_dir):
-    from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
-
-    load_all()
-    row = QUERIES["probe_orders_base"](spark, probe_adv_dir).collect()[0].asDict()
-    assert row["n_nan_price"] == 1
-    assert row["n_posinf_price"] == 1
-    assert row["n_neginf_price"] == 1
-    assert row["n_null_price"] >= 1
-    assert row["n_extreme_price"] >= 2  # 9.9e14 and -8.8e13? (-8.8e13 > 1e12 abs)
-
-
-def test_case_mapping_probe_detects_engine_divergence(spark, tmp_path):
-    """The r9 case-mapping probe must actually DIVERGE between engines on
-    case-divergent codepoints — that divergence is its attribution signal
-    (a red on this probe names Unicode case mapping as the cause of any
-    simultaneous red on the lower()-tokenizing text queries).  U+0130
-    ('İ') lowercases to 2 codepoints under the JVM's full case mapping but
-    1 under DuckDB's utf8proc simple mapping; 'ß' uppercases to 'SS' (2)
-    vs 'ẞ' (1); 'ﬁ' uppercases to 'FI' (2) vs itself (1).  On the clean
-    fixture the probe AGREES (see PROBE_NAMES above) — this test pins that
-    it fires when the content class appears."""
-    import duckdb
-
     from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES, QUERIES, load_all
 
     load_all()
-    root = str(tmp_path)
-    rows = [
-        (1, "İstanbul", "tr", "case", 8),  # İstanbul — lower grows on JVM
-        (2, "straße", "de", "case", 6),  # straße — upper grows on JVM
-        (3, "ﬁnance", "en", "case", 7),  # ﬁnance — upper grows on JVM
-        (4, "plain ascii", "en", "case", 11),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{root}/documents.parquet")
-
-    got = QUERIES["probe_docs_case_mapping"](spark, root).collect()[0].asDict()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{root}/documents.parquet/*.parquet')"
-    )
-    res = con.execute(ORACLES["probe_docs_case_mapping"])
-    want = dict(zip([d[0] for d in res.description], res.fetchone()))
-
-    # JVM full mapping: lower('İstanbul') adds a combining dot (1 row
-    # differs); upper grows 'straße' and 'ﬁnance' (2 rows differ).
-    assert got["n_lower_len_diff"] == 1, got
-    assert got["n_upper_len_diff"] >= 2, got
-    # utf8proc simple mapping: every per-codepoint map preserves length.
-    assert want["n_lower_len_diff"] == 0, want
-    assert want["n_upper_len_diff"] == 0, want
-    assert got != want  # the attribution signal itself
+    rows = QUERIES[name](spark, probe_adv_dir).collect()
+    res = duck.execute(ORACLES[name])
+    cols = [d[0] for d in res.description]
+    want = res.fetchall()
+    got = [tuple(r[c] for c in cols) for r in rows]
+    assert sorted(map(repr, got)) == sorted(map(repr, want)), (name, got, want)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from distributed_mapreduce_in_docker_rpyc_spark.operators.relational import manual_pivot, money
 from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES, QUERIES, load_all
 from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
-from tests.oracle import compare
+from tests.oracle import compare, write_events
 
 load_all()
 
@@ -55,6 +55,32 @@ RELATIONAL = [
 @pytest.mark.parametrize("name", RELATIONAL)
 def test_matches_oracle(spark, sf_dir, name):
     compare(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+
+
+def test_sessionize_sub_second_gaps_match_oracle(spark, tmp_path):
+    """Gaps of 1799.3 s, 1800.0 s and 1800.7 s placed across second
+    boundaries: only the 1800.7 s gaps open a session, as the oracle's
+    ``> INTERVAL '30 minutes'`` says.  User 1's 1800.7 s gap runs from
+    .200 to .900 of a second, so whole-second arithmetic reads it as
+    1800 s and misses the break; user 2's crosses into the next second."""
+    from datetime import datetime, timedelta
+
+    def at(base: datetime, *gaps_s: float) -> list[datetime]:
+        out = [base]
+        for g in gaps_s:
+            out.append(out[-1] + timedelta(microseconds=round(g * 1_000_000)))
+        return out
+
+    u1 = at(datetime(2024, 1, 1, 10, 0, 0, 900_000), 1799.3, 1800.0, 1800.7)
+    u2 = at(datetime(2024, 1, 1, 10, 0, 0, 500_000), 1800.7, 1799.3)
+    rows = [(i, t, 1, "view") for i, t in enumerate(u1)]
+    rows += [(10 + i, t, 2, "view") for i, t in enumerate(u2)]
+    write_events(str(tmp_path), rows)
+    df = QUERIES["events_sessionize"](spark, str(tmp_path))
+    compare(df, ORACLES["events_sessionize"], str(tmp_path))
+    assert sorted((r.user_id, r.n_events) for r in df.collect()) == [
+        (1, 1), (1, 3), (2, 1), (2, 2)
+    ]
 
 
 def _plan(df) -> str:

@@ -589,14 +589,23 @@ def test_shared_frame_memo_stays_bounded(spark, sf_dir):
     NOT one per query invocation — and persist at MEMORY_AND_DISK so a
     memory-pressured session spills instead of silently recomputing.  Runs a
     repeated mix of memo-consuming queries and asserts the memo count is
-    identical after the second pass (re-invocation adds nothing)."""
+    identical after the second pass (re-invocation adds nothing).
+
+    Spark's CacheManager lives in SharedState (shared by every session of
+    the context) and keeps an identical plan at the level it was FIRST
+    cached at, so the test starts from an empty cache and an empty memo:
+    the memo's own persist is then the first cache of those plans, whatever
+    ran earlier in the session."""
     from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import (
-        shared_df,
+        _MEMO_ATTR,
         shared_frame_count,
     )
     from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
 
     load_all()
+    spark.catalog.clearCache()
+    if hasattr(spark, _MEMO_ATTR):
+        delattr(spark, _MEMO_ATTR)
     names = ["sim_topk_lsh", "dedup_minhash_lsh", "sim_cosine_pairs"]
     for name in names:
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -610,7 +619,7 @@ def test_shared_frame_memo_stays_bounded(spark, sf_dir):
     from pyspark.sql import DataFrame
     from pyspark.storagelevel import StorageLevel
 
-    memo = getattr(spark, "_distributed_mapreduce_in_docker_rpyc_spark_shared_memo")
+    memo = getattr(spark, _MEMO_ATTR)
     checked = 0
     for v in memo.values():
         for df in v if isinstance(v, tuple) else (v,):
