@@ -183,94 +183,55 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the achieved file count against the plan's target (1 at this volume).
     Zeros prove the rewrite is lossless and the file count proves it
     actually consolidates; complements ``storage_file_report`` (the
-    metadata side, rows-only) with a hash-checked data side.  See
-    ``_compaction_proof`` for the hermetic self-canceling contract (r7).
+    metadata side, rows-only) with a hash-checked data side.
+
+    Self-canceling (r7 reformulation, VERDICT r6 next-round #1): the
+    compacted copy (side = +1) and the source table (side = −1) are
+    unioned in the SAME Spark session and every content property is a
+    signed sum, so driver-regenerated fixture content cancels by
+    construction — the r4–r6 absolute proof compared against DuckDB's
+    source aggregates and went driver-red on content the local harness
+    never saw.  Hermetic (r6): computed eagerly in a unique scratch dir
+    deleted before returning, so the result is a local relation.  The
+    engine-agreement sibling ``compaction_source_agreement`` keeps the
+    absolute source aggregates under the DuckDB oracle.
 
     Scale posture: ``compact`` is a map-side ``coalesce`` rewrite — no
     shuffle, no driver data; at 100 TB the same plan runs per partition
     with ``target_bytes`` sizing output files to the scan-friendly range."""
-    return _compaction_proof(spark, sf_dir)
+    import shutil
 
-
-def _compaction_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-row compaction DEVIATION proof, computed ONCE per session in
-    a unique scratch dir deleted before returning (local-relation result).
-    r7 reformulation (VERDICT r6 next-round #1): the compacted copy
-    (side = +1) and the source table (side = −1) are unioned in the SAME
-    Spark session and every content property is a signed sum, so
-    driver-regenerated fixture content cancels by construction — the
-    r4–r6 absolute proof compared against DuckDB's source aggregates and
-    went driver-red on content the local harness never saw.  Same
-    hermetic eager-materialization contract as r6; memoized so the
-    diagnostic siblings share one computation and localize drift.  The
-    engine-agreement sibling ``compaction_source_agreement`` keeps the
-    absolute source aggregates under the DuckDB oracle."""
     from distributed_mapreduce_in_docker_rpyc_spark.operators import maintenance as mt
     from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import (
         materialized,
-        shared,
         work_dir,
     )
 
-    def build() -> DataFrame:
-        import shutil
-
-        docs = load_table(spark, sf_dir, "documents")
-        root = work_dir("compaction")
-        frag, out = f"{root}/frag", f"{root}/compacted"
-        docs.repartition(64).write.parquet(frag)
-        plan = mt.compact(spark, frag, out, target_bytes=256 * 1024 * 1024)
-        back = spark.read.parquet(out).withColumn("side", F.lit(1))
-        both = back.unionByName(docs.withColumn("side", F.lit(-1)))
-        side = F.col("side")
-        res = materialized(
-            both.agg(
-                F.sum(side.cast("long")).alias("dev_n_rows"),
-                F.sum(side * F.col("doc_id")).alias("dev_sum_doc_id"),
-                F.sum(
-                    side
-                    * F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
-                ).alias("dev_text_bytes"),
-                (
-                    F.count_distinct(F.when(side == 1, F.col("source")))
-                    - F.count_distinct(F.when(side == -1, F.col("source")))
-                ).alias("dev_n_sources"),
-                F.lit(plan["n_files_after"]).cast("int").alias("n_files_after"),
-            )
+    docs = load_table(spark, sf_dir, "documents")
+    root = work_dir("compaction")
+    frag, out = f"{root}/frag", f"{root}/compacted"
+    docs.repartition(64).write.parquet(frag)
+    plan = mt.compact(spark, frag, out, target_bytes=256 * 1024 * 1024)
+    back = spark.read.parquet(out).withColumn("side", F.lit(1))
+    both = back.unionByName(docs.withColumn("side", F.lit(-1)))
+    side = F.col("side")
+    res = materialized(
+        both.agg(
+            F.sum(side.cast("long")).alias("dev_n_rows"),
+            F.sum(side * F.col("doc_id")).alias("dev_sum_doc_id"),
+            F.sum(
+                side
+                * F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
+            ).alias("dev_text_bytes"),
+            (
+                F.count_distinct(F.when(side == 1, F.col("source")))
+                - F.count_distinct(F.when(side == -1, F.col("source")))
+            ).alias("dev_n_sources"),
+            F.lit(plan["n_files_after"]).cast("int").alias("n_files_after"),
         )
-        shutil.rmtree(root, ignore_errors=True)
-        return res
-
-    return shared(spark, ("compaction_proof_dev", sf_dir), build)
-
-
-@register(
-    "compaction_roundtrip_text_bytes",
-    oracle="SELECT CAST(0 AS BIGINT) AS dev_text_bytes",
-)
-def compaction_roundtrip_text_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``compaction_roundtrip`` (VERDICT r5
-    next-round #1): ONLY the UTF-8 text byte-total deviation — isolates
-    byte fidelity through the parquet rewrite."""
-    return _compaction_proof(spark, sf_dir).select("dev_text_bytes")
-
-
-@register(
-    "compaction_roundtrip_counts",
-    oracle="""
-    SELECT CAST(0 AS BIGINT) AS dev_n_rows,
-           CAST(0 AS BIGINT) AS dev_sum_doc_id,
-           CAST(0 AS BIGINT) AS dev_n_sources
-    """,
-)
-def compaction_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``compaction_roundtrip``: ONLY the
-    row-identity deviations (count, key sum, source cardinality) — a
-    non-zero means the rewrite lost/duplicated rows, independent of byte
-    totals or file layout."""
-    return _compaction_proof(spark, sf_dir).select(
-        "dev_n_rows", "dev_sum_doc_id", "dev_n_sources"
     )
+    shutil.rmtree(root, ignore_errors=True)
+    return res
 
 
 @register(
@@ -307,17 +268,6 @@ def compaction_source_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sum_text_bytes"),
         F.count_distinct("source").alias("n_sources"),
     )
-
-
-@register(
-    "compaction_roundtrip_files",
-    oracle="SELECT 1 AS n_files_after",
-)
-def compaction_roundtrip_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``compaction_roundtrip``: ONLY the achieved
-    file count vs the plan target — isolates the consolidation property
-    (filesystem-layout truth) from all content properties."""
-    return _compaction_proof(spark, sf_dir).select("n_files_after")
 
 
 @register(
@@ -734,7 +684,7 @@ def partitioned_write_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between reading one priority's fifth of the table and
     all of it.  Result is eagerly materialized (bounded: one row per
     month) with the scratch dir deleted — the r6 hermetic round-trip
-    contract, see ``_compaction_proof``."""
+    contract, see ``compaction_roundtrip``."""
     import shutil
 
     from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import (

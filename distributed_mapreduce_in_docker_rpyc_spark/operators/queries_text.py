@@ -5281,7 +5281,7 @@ def pack_sequences_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Result is eagerly materialized (bounded: ≤ {_PACK_SHARDS} rows) with
     the scratch dir deleted — the r6 hermetic round-trip contract
-    (``_compaction_proof``)."""
+    (``compaction_roundtrip``)."""
     import shutil
 
     from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import (

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_in_docker_rpyc_spark.operators import wordcount as wc
 from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import materialized as _materialized
-from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import shared as _shared
 from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import work_dir as _work_dir
 from distributed_mapreduce_in_docker_rpyc_spark.registry import register
 from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
@@ -225,105 +224,6 @@ def ziptext_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return word_counts(lines, "value")
 
 
-def _jsonl_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-row JSONL round-trip DEVIATION proof, computed ONCE per session.
-
-    r7 reformulation (VERDICT r6 next-round #1).  Rounds 4–6 compared the
-    read-back aggregates against DuckDB's aggregates of the SOURCE table, so
-    any environment-sensitive term (driver-regenerated fixture content the
-    local harness never sees, engine disagreement on exotic codepoints)
-    broke the hash even when the round-trip itself was lossless — 3 rounds
-    of driver-red / locally-green.  This proof is SELF-CANCELING: the
-    read-back frame (side = +1) and the source frame (side = −1) are
-    unioned inside the SAME Spark session and every property is a signed
-    sum, so fixture content cancels by construction and the oracle pins
-    literal zeros.  A red now can only mean a genuinely lossy round-trip,
-    and the column names the property and the signed magnitude.  The
-    companion ``jsonl_source_agreement`` query keeps the absolute
-    source-side aggregates under the DuckDB oracle (no filesystem), closing
-    the 2×2: engine disagreement shows THERE, round-trip loss shows HERE.
-
-    The write → corrupt-shard append → pinned-schema PERMISSIVE read →
-    deviation aggregate all happen EAGERLY inside a unique scratch
-    directory deleted before returning; the result is a local-relation
-    frame (``materialized``, the r6 hermetic contract).  Memoized per
-    (session, sf_dir) so the diagnostic siblings share one computation."""
-
-    def build() -> DataFrame:
-        import os
-        import shutil
-
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 200)
-            .select("doc_id", "text", "lang", "source")
-        )
-        out = _work_dir("jsonl")
-        docs.repartition(4).write.mode("overwrite").json(out)
-        with open(os.path.join(out, "part-corrupt.json"), "w", encoding="utf-8") as fh:
-            fh.write('{"doc_id": 9001, "text": "truncated\n')
-            fh.write('not json at all\n')
-            fh.write('{"doc_id": "wrong-type-and-unclosed"\n')
-        # _materialized pins ONE full-projection parse: PERMISSIVE's
-        # corrupt-record set is PROJECTION-DEPENDENT (a row is corrupt only
-        # if a *requested* column fails to parse), so without this each
-        # column-pruned downstream aggregate could see a DIFFERENT corrupt
-        # set — the likely mechanism of the r4–r6 driver-env reds.
-        back = _materialized(
-            (
-                spark.read.schema(
-                    "doc_id long, text string, lang string, source string, _corrupt_record string"
-                )
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .json(out)
-            ).withColumn("side", F.lit(1))
-        )
-        src = docs.withColumn(
-            "_corrupt_record", F.lit(None).cast("string")
-        ).withColumn("side", F.lit(-1))
-        good = F.col("_corrupt_record").isNull()
-        side = F.col("side")
-        txt_bytes = F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
-        src_bytes = F.length(F.encode(F.coalesce(F.col("source"), F.lit("")), "UTF-8"))
-        # One deviation column PER round-trip property (back minus source):
-        # good-row count, doc_id first+second moment (a swapped/duplicated
-        # id escapes the plain sum), UTF-8 byte totals of the two string
-        # columns, NULL-text count (JSON writers drop null fields — proves
-        # absent-field → NULL round-trips), and distinct-lang count.  The
-        # corrupt-shard pair stays absolute: its three lines are literals
-        # appended above, not fixture content.
-        res = _materialized(
-            back.unionByName(src).agg(
-                F.sum(F.when(~good, F.lit(1)).otherwise(F.lit(0))).cast("int").alias("n_corrupt"),
-                F.sum(
-                    F.when(~good, F.length(F.encode(F.col("_corrupt_record"), "UTF-8")))
-                ).alias("sum_corrupt_bytes"),
-                F.sum(F.when(good, side).otherwise(F.lit(0))).alias("dev_n_good"),
-                F.sum(F.when(good, side * F.col("doc_id"))).alias("dev_sum_doc_id"),
-                F.sum(
-                    F.when(good, side * F.col("doc_id") * F.col("doc_id"))
-                ).alias("dev_sum_doc_id_sq"),
-                F.sum(F.when(good, side * txt_bytes)).alias("dev_text_bytes"),
-                F.sum(F.when(good, side * src_bytes)).alias("dev_source_bytes"),
-                F.sum(
-                    F.when(good & F.col("text").isNull(), side).otherwise(F.lit(0))
-                ).alias("dev_n_null_text"),
-                # both distinct terms filter on `good`: PERMISSIVE keeps
-                # partially-parsed columns of corrupt rows, which must not
-                # leak into the back-side distinct count
-                (
-                    F.count_distinct(F.when((side == 1) & good, F.col("lang")))
-                    - F.count_distinct(F.when(side == -1, F.col("lang")))
-                ).alias("dev_n_langs"),
-            )
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        return res
-
-    return _shared(spark, ("jsonl_proof_dev", sf_dir), build)
-
-
 @register(
     "jsonl_roundtrip",
     oracle="""
@@ -346,63 +246,103 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus lands in object storage), three deliberately malformed lines are
     appended as an extra shard, and the directory is read back with a
     pinned schema in PERMISSIVE mode.  The proof emits per-property
-    DEVIATIONS (read-back minus source, both computed in this session —
-    see ``_jsonl_proof``): zeros prove (a) the round-trip is byte-lossless,
-    (b) no good row is lost or duplicated, (c) NULL fields survive, while
-    the absolute corrupt-shard pair proves the three malformed lines are
-    isolated into ``_corrupt_record`` instead of failing the scan.
+    DEVIATIONS (read-back minus source): zeros prove (a) the round-trip is
+    byte-lossless, (b) no good row is lost or duplicated, (c) NULL fields
+    survive, while the absolute corrupt-shard pair proves the three
+    malformed lines are isolated into ``_corrupt_record`` instead of
+    failing the scan.
+
+    The proof is SELF-CANCELING (r7 reformulation, VERDICT r6 next-round
+    #1).  Rounds 4–6 compared the read-back aggregates against DuckDB's
+    aggregates of the SOURCE table, so any environment-sensitive term
+    (driver-regenerated fixture content the local harness never sees,
+    engine disagreement on exotic codepoints) broke the hash even when the
+    round-trip itself was lossless.  Here the read-back frame (side = +1)
+    and the source frame (side = −1) are unioned inside the SAME Spark
+    session and every property is a signed sum, so fixture content cancels
+    by construction and the oracle pins literal zeros: a red can only mean
+    a genuinely lossy round-trip, and the column names the property and
+    the signed magnitude.  The companion ``jsonl_source_agreement`` query
+    keeps the absolute source-side aggregates under the DuckDB oracle (no
+    filesystem), closing the 2×2: engine disagreement shows THERE,
+    round-trip loss shows HERE.  Everything runs EAGERLY inside a unique
+    scratch directory deleted before returning; the result is a
+    local-relation frame (``materialized``, the r6 hermetic contract).
 
     Scale posture: write and read are both one-task-per-file with no
     shuffle; the deviation aggregate is a single partial-agg reduce over
     the two-sided union.  Schema is PINNED, never inferred — inference at
     100 TB is a full extra pass over the data."""
-    return _jsonl_proof(spark, sf_dir)
+    import os
+    import shutil
 
-
-@register(
-    "jsonl_roundtrip_text_bytes",
-    oracle="""
-    SELECT CAST(0 AS BIGINT) AS dev_text_bytes,
-           CAST(0 AS BIGINT) AS dev_source_bytes
-    """,
-)
-def jsonl_roundtrip_text_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``jsonl_roundtrip`` (VERDICT r5 next-round #1):
-    ONLY the UTF-8 byte-total deviations, so a driver hash mismatch names
-    the byte-fidelity property instead of hiding inside the parent's
-    9-column row.  Shares the parent's memoized proof — zero extra
-    compute."""
-    return _jsonl_proof(spark, sf_dir).select("dev_text_bytes", "dev_source_bytes")
-
-
-@register(
-    "jsonl_roundtrip_corrupt",
-    oracle="SELECT 3 AS n_corrupt, CAST(86 AS BIGINT) AS sum_corrupt_bytes",
-)
-def jsonl_roundtrip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``jsonl_roundtrip``: ONLY the corrupt-record
-    isolation pair (line count + exact byte total of the three malformed
-    lines).  A mismatch here means the PERMISSIVE corrupt-row path — not
-    the data columns — differs in the driver environment."""
-    return _jsonl_proof(spark, sf_dir).select("n_corrupt", "sum_corrupt_bytes")
-
-
-@register(
-    "jsonl_roundtrip_ids",
-    oracle="""
-    SELECT CAST(0 AS BIGINT) AS dev_n_good,
-           CAST(0 AS BIGINT) AS dev_sum_doc_id,
-           CAST(0 AS BIGINT) AS dev_n_null_text
-    """,
-)
-def jsonl_roundtrip_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``jsonl_roundtrip``: ONLY the row-identity
-    deviations (good-row count, key sum, NULL-text count).  A non-zero
-    here means rows were lost/duplicated or NULL round-tripping differs —
-    independent of byte totals and corrupt-record handling."""
-    return _jsonl_proof(spark, sf_dir).select(
-        "dev_n_good", "dev_sum_doc_id", "dev_n_null_text"
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text", "lang", "source")
     )
+    out = _work_dir("jsonl")
+    docs.repartition(4).write.mode("overwrite").json(out)
+    with open(os.path.join(out, "part-corrupt.json"), "w", encoding="utf-8") as fh:
+        fh.write('{"doc_id": 9001, "text": "truncated\n')
+        fh.write('not json at all\n')
+        fh.write('{"doc_id": "wrong-type-and-unclosed"\n')
+    # _materialized pins ONE full-projection parse: PERMISSIVE's
+    # corrupt-record set is PROJECTION-DEPENDENT (a row is corrupt only
+    # if a *requested* column fails to parse), so without this each
+    # column-pruned downstream aggregate could see a DIFFERENT corrupt
+    # set — the likely mechanism of the r4–r6 driver-env reds.
+    back = _materialized(
+        (
+            spark.read.schema(
+                "doc_id long, text string, lang string, source string, _corrupt_record string"
+            )
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .json(out)
+        ).withColumn("side", F.lit(1))
+    )
+    src = docs.withColumn(
+        "_corrupt_record", F.lit(None).cast("string")
+    ).withColumn("side", F.lit(-1))
+    good = F.col("_corrupt_record").isNull()
+    side = F.col("side")
+    txt_bytes = F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
+    src_bytes = F.length(F.encode(F.coalesce(F.col("source"), F.lit("")), "UTF-8"))
+    # One deviation column PER round-trip property (back minus source):
+    # good-row count, doc_id first+second moment (a swapped/duplicated
+    # id escapes the plain sum), UTF-8 byte totals of the two string
+    # columns, NULL-text count (JSON writers drop null fields — proves
+    # absent-field → NULL round-trips), and distinct-lang count.  The
+    # corrupt-shard pair stays absolute: its three lines are literals
+    # appended above, not fixture content.
+    res = _materialized(
+        back.unionByName(src).agg(
+            F.sum(F.when(~good, F.lit(1)).otherwise(F.lit(0))).cast("int").alias("n_corrupt"),
+            F.sum(
+                F.when(~good, F.length(F.encode(F.col("_corrupt_record"), "UTF-8")))
+            ).alias("sum_corrupt_bytes"),
+            F.sum(F.when(good, side).otherwise(F.lit(0))).alias("dev_n_good"),
+            F.sum(F.when(good, side * F.col("doc_id"))).alias("dev_sum_doc_id"),
+            F.sum(
+                F.when(good, side * F.col("doc_id") * F.col("doc_id"))
+            ).alias("dev_sum_doc_id_sq"),
+            F.sum(F.when(good, side * txt_bytes)).alias("dev_text_bytes"),
+            F.sum(F.when(good, side * src_bytes)).alias("dev_source_bytes"),
+            F.sum(
+                F.when(good & F.col("text").isNull(), side).otherwise(F.lit(0))
+            ).alias("dev_n_null_text"),
+            # both distinct terms filter on `good`: PERMISSIVE keeps
+            # partially-parsed columns of corrupt rows, which must not
+            # leak into the back-side distinct count
+            (
+                F.count_distinct(F.when((side == 1) & good, F.col("lang")))
+                - F.count_distinct(F.when(side == -1, F.col("lang")))
+            ).alias("dev_n_langs"),
+        )
+    )
+    shutil.rmtree(out, ignore_errors=True)
+    return res
 
 
 @register(
@@ -449,6 +389,27 @@ def jsonl_source_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _row_imbalance(frame: DataFrame, *cols: str) -> int:
+    """Per-row signature imbalance of a two-sided frame (``side`` = +1 for
+    the read-back, −1 for the source): every row renders to a deterministic
+    string signature over ``cols`` (NULLs get a NUL-prefixed sentinel no
+    data string can collide with), and a lossless round-trip balances each
+    signature group to signed-count zero.  Order-independent, exact for
+    ANY double (bit-identical values render identically — no decimal cast
+    that overflows on extreme doubles, no FP-ordering ambiguity), and it
+    catches lost/duplicated/value-swapped rows the moment plain sums
+    can't.  Returns the summed absolute imbalance (0 = lossless)."""
+    sig = F.xxhash64(
+        *[F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL")) for c in cols]
+    )
+    return (
+        frame.groupBy(sig.alias("sig"))
+        .agg(F.sum("side").alias("c"))
+        .agg(F.coalesce(F.sum(F.abs(F.col("c"))), F.lit(0)).alias("n"))
+        .collect()[0]["n"]
+    )
+
+
 @register(
     "csv_roundtrip",
     oracle="""
@@ -473,15 +434,23 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad date) are appended as an extra shard, and the directory is read
     back with a PINNED schema in PERMISSIVE + multiLine mode.  The proof
     emits per-property DEVIATIONS (read-back minus source, both computed
-    in this session — see ``_csv_proof``): zeros prove (a) numeric
-    round-trip is bit-exact per row (Java's shortest double rendering
-    reparses to the identical double — checked by per-row signature
-    imbalance, robust to NaN/±Inf/1e308 where a decimal cast would
-    overflow), (b) dates survive the string form, (c) no good row is
-    lost or duplicated, (d) NULL vs empty-string and embedded
-    newline/quote content survive quoting, while the absolute corrupt
-    pair proves the three type-broken lines land in ``_corrupt_record``
-    with their exact byte total.
+    in this session — the self-canceling contract of ``jsonl_roundtrip``):
+    zeros prove (a) numeric round-trip is bit-exact per row (Java's
+    shortest double rendering reparses to the identical double — checked
+    by per-row signature imbalance, robust to NaN/±Inf/1e308 where a
+    decimal cast would overflow), (b) dates survive the string form, (c)
+    no good row is lost or duplicated, (d) NULL vs empty-string and
+    embedded newline/quote content survive quoting, while the absolute
+    corrupt pair proves the three type-broken lines land in
+    ``_corrupt_record`` with their exact byte total.  Runs eagerly in a
+    unique scratch dir deleted before returning.
+
+    Two real fixes vs the r4–r6 absolute proof, both reproduced locally
+    with adversarial fixtures: (1) ``multiLine`` read — the writer quotes
+    embedded newlines but a line-split read shredded such rows into extra
+    corrupt fragments; (2) reader ``positiveInf``/``negativeInf`` pinned
+    to Java's ``Infinity`` rendering so non-finite doubles reparse instead
+    of corrupting the row.
 
     Scale posture: write and read are one-task-per-file, shuffle-free;
     schema is pinned (inference at 100 TB is an extra full pass).
@@ -489,216 +458,128 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade-off for lossless free-text fields; at 100 TB free-text belongs
     in JSONL/parquet and line-splittable CSV is reserved for newline-free
     columns."""
-    return _csv_proof(spark, sf_dir)
+    import os
+    import shutil
 
-
-def _csv_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-row CSV round-trip DEVIATION proof, computed ONCE per session
-    in a unique scratch dir deleted before returning — same hermetic +
-    self-canceling contract as ``_jsonl_proof`` (r7 reformulation, VERDICT
-    r6 next-round #1).  Two real fixes vs the r4–r6 absolute proof, both
-    reproduced locally with adversarial fixtures: (1) ``multiLine`` read —
-    the writer quotes embedded newlines but a line-split read shredded such
-    rows into extra corrupt fragments; (2) reader ``positiveInf``/
-    ``negativeInf`` pinned to Java's ``Infinity`` rendering so non-finite
-    doubles reparse instead of corrupting the row."""
-
-    def build() -> DataFrame:
-        import os
-        import shutil
-
-        o = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") < 500)
-            .select(
-                "o_orderkey",
-                "o_orderstatus",
-                "o_totalprice",
-                F.to_date("o_orderdate").alias("d"),
-                "o_orderpriority",
-            )
+    o = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") < 500)
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            "o_totalprice",
+            F.to_date("o_orderdate").alias("d"),
+            "o_orderpriority",
         )
-        out = _work_dir("csvrt")
-        # nullValue='\N' (the classic MySQL-dump convention) on BOTH sides:
-        # with the default nullValue='' the reader maps even a QUOTED empty
-        # string to NULL (the nullValue comparison runs on the unescaped
-        # token), so ''-valued fields read back as NULL — reproduced with
-        # adversarial fixtures (r7).  The one remaining ambiguity — a field
-        # whose literal value IS the two characters \N — is inherent to
-        # CSV's untyped text model and documented here.
-        # ignore*WhiteSpace default TRUE for writing (only) — without
-        # pinning them off, a '   ' field writes as '' (reproduced with
-        # adversarial fixtures, r7)
-        (
-            o.repartition(4)
-            .write.mode("overwrite")
-            .option("header", "false")
-            .option("nullValue", "\\N")
-            .option("ignoreLeadingWhiteSpace", "false")
-            .option("ignoreTrailingWhiteSpace", "false")
-            .csv(out)
-        )
-        with open(os.path.join(out, "part-corrupt.csv"), "w", encoding="utf-8") as fh:
-            fh.write("not-a-long,AA,1.0,1999-01-01,X\n")
-            fh.write("99991,XX,not-a-number,1999-01-01,Y\n")
-            fh.write("99992,YY,2.5,not-a-date,Z\n")
-        # _materialized pins ONE full-projection parse: PERMISSIVE's
-        # corrupt-record set is PROJECTION-DEPENDENT (a row is corrupt only
-        # if a *requested* column fails to parse), so without this each
-        # downstream aggregate — column-pruned differently by Catalyst —
-        # would see a DIFFERENT corrupt set (reproduced with adversarial
-        # fixtures, r7; the likely mechanism of the r4–r6 driver-env reds).
-        back = _materialized(
-            (
-                spark.read.schema(
-                    "o_orderkey long, o_orderstatus string, o_totalprice double, "
-                    "d date, o_orderpriority string, _corrupt_record string"
-                )
-                .option("header", "false")
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .option("multiLine", "true")
-                .option("positiveInf", "Infinity")
-                .option("negativeInf", "-Infinity")
-                .option("nullValue", "\\N")
-                .csv(out)
-            ).withColumn("side", F.lit(1))
-        )
-        src = o.withColumn("_corrupt_record", F.lit(None).cast("string")).withColumn(
-            "side", F.lit(-1)
-        )
-        good = F.col("_corrupt_record").isNull()
-        side = F.col("side")
-        both = back.unionByName(src)
-        null_str = (
-            F.col("o_orderstatus").isNull().cast("int")
-            + F.col("o_orderpriority").isNull().cast("int")
-        )
-        str_bytes = F.length(
-            F.encode(F.coalesce(F.col("o_orderstatus"), F.lit("")), "UTF-8")
-        ) + F.length(
-            F.encode(F.coalesce(F.col("o_orderpriority"), F.lit("")), "UTF-8")
-        )
-        min_back, min_src = (
-            F.min(F.when(side == s, F.col("d"))) for s in (1, -1)
-        )
-        max_back, max_src = (
-            F.max(F.when(side == s, F.col("d"))) for s in (1, -1)
-        )
-        agg_row = both.agg(
-            F.sum(F.when(~good, F.lit(1)).otherwise(F.lit(0)))
-            .cast("int")
-            .alias("n_corrupt"),
-            F.sum(
-                F.when(~good, F.length(F.encode(F.col("_corrupt_record"), "UTF-8")))
-            ).alias("sum_corrupt_bytes"),
-            F.sum(F.when(good, side).otherwise(F.lit(0))).alias("dev_n_good"),
-            F.sum(F.when(good, side * F.col("o_orderkey"))).alias("dev_sum_key"),
-            F.when(min_back.isNull() & min_src.isNull(), F.lit(0))
-            .otherwise(F.datediff(min_back, min_src))
-            .cast("int")
-            .alias("dev_min_day"),
-            F.when(max_back.isNull() & max_src.isNull(), F.lit(0))
-            .otherwise(F.datediff(max_back, max_src))
-            .cast("int")
-            .alias("dev_max_day"),
-            # both distinct terms must filter on `good`: PERMISSIVE keeps
-            # partially-parsed columns of corrupt rows (the X/Y/Z priority
-            # tokens of the corrupt shard would leak into the back side)
-            (
-                F.count_distinct(
-                    F.when((side == 1) & good, F.col("o_orderpriority"))
-                )
-                - F.count_distinct(F.when(side == -1, F.col("o_orderpriority")))
-            ).alias("dev_n_priorities"),
-            F.sum(F.when(good, side * null_str)).alias("dev_n_null_str"),
-            F.sum(F.when(good, side * str_bytes)).alias("dev_str_bytes"),
-        )
-
-        # Per-row signature imbalance: every good row renders to a
-        # deterministic string signature (NULLs get a sentinel no data
-        # string can collide with after the \x00 prefix); a lossless
-        # round-trip balances each signature group to signed-count zero.
-        # Order-independent, exact for ANY double (bit-identical values
-        # render identically — no decimal cast that overflows on extreme
-        # doubles, no FP-ordering ambiguity), and it catches
-        # lost/duplicated/value-swapped rows the moment plain sums can't.
-        def sig(*cols: str):
-            return F.xxhash64(
-                *[
-                    F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL"))
-                    for c in cols
-                ]
-            )
-
-        def imbalance(sig_col) -> DataFrame:
-            return (
-                both.filter(good)
-                .groupBy(sig_col.alias("sig"))
-                .agg(F.sum("side").alias("c"))
-                .agg(F.coalesce(F.sum(F.abs(F.col("c"))), F.lit(0)).alias("n"))
-            )
-
-        all_cols = sig(
-            "o_orderkey", "o_orderstatus", "o_totalprice", "d", "o_orderpriority"
-        )
-        n_rows_changed = imbalance(all_cols).collect()[0]["n"]
-        n_price_changed = imbalance(sig("o_orderkey", "o_totalprice")).collect()[0]["n"]
-        base = agg_row.collect()[0].asDict()
-        base["n_rows_changed"] = n_rows_changed
-        base["n_price_rows_changed"] = n_price_changed
-        schema = agg_row.schema.add("n_rows_changed", "long").add(
-            "n_price_rows_changed", "long"
-        )
-        res = spark.createDataFrame([tuple(base[f.name] for f in schema)], schema)
-        shutil.rmtree(out, ignore_errors=True)
-        return res
-
-    return _shared(spark, ("csv_proof_dev", sf_dir), build)
-
-
-@register(
-    "csv_roundtrip_price",
-    oracle="SELECT CAST(0 AS BIGINT) AS n_price_rows_changed",
-)
-def csv_roundtrip_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``csv_roundtrip``: ONLY the per-row
-    (key, price) signature imbalance, isolating double →
-    shortest-string → double fidelity — zero means every single price
-    reparsed to the bit-identical double."""
-    return _csv_proof(spark, sf_dir).select("n_price_rows_changed")
-
-
-@register(
-    "csv_roundtrip_dates",
-    oracle="""
-    SELECT CAST(0 AS INTEGER) AS dev_min_day,
-           CAST(0 AS INTEGER) AS dev_max_day
-    """,
-)
-def csv_roundtrip_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``csv_roundtrip``: ONLY the date min/max
-    deviations (in days), isolating DATE → string → DATE round-tripping
-    (timezone/format skew would surface here and nowhere else)."""
-    return _csv_proof(spark, sf_dir).select("dev_min_day", "dev_max_day")
-
-
-@register(
-    "csv_roundtrip_corrupt",
-    oracle="""
-    SELECT 3 AS n_corrupt,
-           CAST(89 AS BIGINT) AS sum_corrupt_bytes,
-           CAST(0 AS BIGINT) AS dev_n_good,
-           CAST(0 AS BIGINT) AS dev_sum_key
-    """,
-)
-def csv_roundtrip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic sibling of ``csv_roundtrip``: corrupt-line isolation plus
-    row-identity deviations — a mismatch here means the PERMISSIVE path or
-    row multiplicity differs, independent of numeric/date fidelity."""
-    return _csv_proof(spark, sf_dir).select(
-        "n_corrupt", "sum_corrupt_bytes", "dev_n_good", "dev_sum_key"
     )
+    out = _work_dir("csvrt")
+    # nullValue='\N' (the classic MySQL-dump convention) on BOTH sides:
+    # with the default nullValue='' the reader maps even a QUOTED empty
+    # string to NULL (the nullValue comparison runs on the unescaped
+    # token), so ''-valued fields read back as NULL — reproduced with
+    # adversarial fixtures (r7).  The one remaining ambiguity — a field
+    # whose literal value IS the two characters \N — is inherent to
+    # CSV's untyped text model and documented here.
+    # ignore*WhiteSpace default TRUE for writing (only) — without
+    # pinning them off, a '   ' field writes as '' (reproduced with
+    # adversarial fixtures, r7)
+    (
+        o.repartition(4)
+        .write.mode("overwrite")
+        .option("header", "false")
+        .option("nullValue", "\\N")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .csv(out)
+    )
+    with open(os.path.join(out, "part-corrupt.csv"), "w", encoding="utf-8") as fh:
+        fh.write("not-a-long,AA,1.0,1999-01-01,X\n")
+        fh.write("99991,XX,not-a-number,1999-01-01,Y\n")
+        fh.write("99992,YY,2.5,not-a-date,Z\n")
+    # _materialized pins ONE full-projection parse: PERMISSIVE's
+    # corrupt-record set is PROJECTION-DEPENDENT (a row is corrupt only
+    # if a *requested* column fails to parse), so without this each
+    # downstream aggregate — column-pruned differently by Catalyst —
+    # would see a DIFFERENT corrupt set (reproduced with adversarial
+    # fixtures, r7; the likely mechanism of the r4–r6 driver-env reds).
+    back = _materialized(
+        (
+            spark.read.schema(
+                "o_orderkey long, o_orderstatus string, o_totalprice double, "
+                "d date, o_orderpriority string, _corrupt_record string"
+            )
+            .option("header", "false")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .option("multiLine", "true")
+            .option("positiveInf", "Infinity")
+            .option("negativeInf", "-Infinity")
+            .option("nullValue", "\\N")
+            .csv(out)
+        ).withColumn("side", F.lit(1))
+    )
+    src = o.withColumn("_corrupt_record", F.lit(None).cast("string")).withColumn(
+        "side", F.lit(-1)
+    )
+    good = F.col("_corrupt_record").isNull()
+    side = F.col("side")
+    both = back.unionByName(src)
+    null_str = (
+        F.col("o_orderstatus").isNull().cast("int")
+        + F.col("o_orderpriority").isNull().cast("int")
+    )
+    str_bytes = F.length(
+        F.encode(F.coalesce(F.col("o_orderstatus"), F.lit("")), "UTF-8")
+    ) + F.length(
+        F.encode(F.coalesce(F.col("o_orderpriority"), F.lit("")), "UTF-8")
+    )
+    min_back, min_src = (
+        F.min(F.when(side == s, F.col("d"))) for s in (1, -1)
+    )
+    max_back, max_src = (
+        F.max(F.when(side == s, F.col("d"))) for s in (1, -1)
+    )
+    agg_row = both.agg(
+        F.sum(F.when(~good, F.lit(1)).otherwise(F.lit(0)))
+        .cast("int")
+        .alias("n_corrupt"),
+        F.sum(
+            F.when(~good, F.length(F.encode(F.col("_corrupt_record"), "UTF-8")))
+        ).alias("sum_corrupt_bytes"),
+        F.sum(F.when(good, side).otherwise(F.lit(0))).alias("dev_n_good"),
+        F.sum(F.when(good, side * F.col("o_orderkey"))).alias("dev_sum_key"),
+        F.when(min_back.isNull() & min_src.isNull(), F.lit(0))
+        .otherwise(F.datediff(min_back, min_src))
+        .cast("int")
+        .alias("dev_min_day"),
+        F.when(max_back.isNull() & max_src.isNull(), F.lit(0))
+        .otherwise(F.datediff(max_back, max_src))
+        .cast("int")
+        .alias("dev_max_day"),
+        # both distinct terms must filter on `good`: PERMISSIVE keeps
+        # partially-parsed columns of corrupt rows (the X/Y/Z priority
+        # tokens of the corrupt shard would leak into the back side)
+        (
+            F.count_distinct(
+                F.when((side == 1) & good, F.col("o_orderpriority"))
+            )
+            - F.count_distinct(F.when(side == -1, F.col("o_orderpriority")))
+        ).alias("dev_n_priorities"),
+        F.sum(F.when(good, side * null_str)).alias("dev_n_null_str"),
+        F.sum(F.when(good, side * str_bytes)).alias("dev_str_bytes"),
+    )
+    good_rows = both.filter(good)
+    base = agg_row.collect()[0].asDict()
+    base["n_rows_changed"] = _row_imbalance(
+        good_rows, "o_orderkey", "o_orderstatus", "o_totalprice", "d", "o_orderpriority"
+    )
+    base["n_price_rows_changed"] = _row_imbalance(good_rows, "o_orderkey", "o_totalprice")
+    schema = agg_row.schema.add("n_rows_changed", "long").add(
+        "n_price_rows_changed", "long"
+    )
+    res = spark.createDataFrame([tuple(base[f.name] for f in schema)], schema)
+    shutil.rmtree(out, ignore_errors=True)
+    return res
 
 
 # Shared Spark/DuckDB expression for an order-independent, overflow-free
@@ -813,7 +694,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li.repartition(4).write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     # Eagerly materialized single-row proof — same hermetic contract as
-    # _jsonl_proof (r6): the returned frame references no scratch files.
+    # jsonl_roundtrip (r6): the returned frame references no scratch files.
     res = _materialized(
         back.agg(
             F.count("*").alias("n_rows"),
@@ -848,7 +729,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fourth interchange format after JSONL/CSV/ORC): a lineitem slice is
     written through the distributed XML writer (one file per partition,
     ``rowTag`` records) and read back with a PINNED schema; the proof emits
-    the same self-canceling DEVIATIONS as ``_jsonl_proof`` (r7 contract:
+    the same self-canceling DEVIATIONS as ``jsonl_roundtrip`` (r7 contract:
     read-back minus source inside one Spark session, oracle pins literal
     zeros) plus a full-row signature imbalance, so a red can only mean the
     XML encode/decode genuinely lost or changed a value.
@@ -892,17 +773,8 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     side = F.col("side")
     min_back, min_src = (F.min(F.when(side == s, F.col("ship"))) for s in (1, -1))
     max_back, max_src = (F.max(F.when(side == s, F.col("ship"))) for s in (1, -1))
-    sig = F.xxhash64(
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL"))
-            for c in ("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "ship")
-        ]
-    )
-    imbalance = (
-        both.groupBy(sig.alias("sig"))
-        .agg(F.sum("side").alias("c"))
-        .agg(F.coalesce(F.sum(F.abs(F.col("c"))), F.lit(0)).alias("n"))
-        .collect()[0]["n"]
+    imbalance = _row_imbalance(
+        both, "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "ship"
     )
     agg_row = both.agg(
         F.sum(side.cast("long")).alias("dev_n_rows"),
@@ -953,43 +825,39 @@ def jsonl_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one read task regardless of size, which is exactly why the writer
     side must control shard count/size (this proof's repartition is that
     control); write and read are shuffle-free beyond it."""
+    import os
+    import shutil
 
-    def build() -> DataFrame:
-        import os
-        import shutil
-
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < 200)
-            .select("doc_id", "text", "lang", "source")
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 200)
+        .select("doc_id", "text", "lang", "source")
+    )
+    out = _work_dir("jsonlgz")
+    docs.repartition(4).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).json(out)
+    n_files = sum(
+        1 for f in os.listdir(out) if f.startswith("part-") and f.endswith(".gz")
+    )
+    back = _materialized(
+        spark.read.schema("doc_id long, text string, lang string, source string")
+        .json(out)
+        .withColumn("side", F.lit(1))
+    )
+    src = docs.withColumn("side", F.lit(-1))
+    side = F.col("side")
+    txt_bytes = F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
+    res = _materialized(
+        back.unionByName(src).agg(
+            F.lit(n_files).cast("bigint").alias("n_files"),
+            F.sum(side).cast("bigint").alias("dev_n_good"),
+            F.sum(side * F.col("doc_id")).alias("dev_sum_doc_id"),
+            F.sum(side * txt_bytes).alias("dev_text_bytes"),
+            F.sum(F.when(F.col("text").isNull(), side).otherwise(F.lit(0)))
+            .cast("bigint")
+            .alias("dev_n_null_text"),
         )
-        out = _work_dir("jsonlgz")
-        docs.repartition(4).write.mode("overwrite").option(
-            "compression", "gzip"
-        ).json(out)
-        n_files = sum(
-            1 for f in os.listdir(out) if f.startswith("part-") and f.endswith(".gz")
-        )
-        back = _materialized(
-            spark.read.schema("doc_id long, text string, lang string, source string")
-            .json(out)
-            .withColumn("side", F.lit(1))
-        )
-        src = docs.withColumn("side", F.lit(-1))
-        side = F.col("side")
-        txt_bytes = F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
-        res = _materialized(
-            back.unionByName(src).agg(
-                F.lit(n_files).cast("bigint").alias("n_files"),
-                F.sum(side).cast("bigint").alias("dev_n_good"),
-                F.sum(side * F.col("doc_id")).alias("dev_sum_doc_id"),
-                F.sum(side * txt_bytes).alias("dev_text_bytes"),
-                F.sum(F.when(F.col("text").isNull(), side).otherwise(F.lit(0)))
-                .cast("bigint")
-                .alias("dev_n_null_text"),
-            )
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        return res
-
-    return _shared(spark, ("jsonl_gzip_proof", sf_dir), build)
+    )
+    shutil.rmtree(out, ignore_errors=True)
+    return res

@@ -219,17 +219,8 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "stat_kruskal_wallis",
 # --- latest driver row: r7 ---
     "jsonl_roundtrip",
-    "jsonl_roundtrip_text_bytes",
-    "jsonl_roundtrip_corrupt",
-    "jsonl_roundtrip_ids",
     "csv_roundtrip",
-    "csv_roundtrip_price",
-    "csv_roundtrip_dates",
-    "csv_roundtrip_corrupt",
     "compaction_roundtrip",
-    "compaction_roundtrip_text_bytes",
-    "compaction_roundtrip_counts",
-    "compaction_roundtrip_files",
     "stat_levene_brown_forsythe",
     "stat_jarque_bera",
     "stat_cohens_kappa",
@@ -476,20 +467,11 @@ EAGER: frozenset[str] = frozenset(
         "stream_pack_sequences",
         # filesystem round-trips: write scratch, read back, compare
         "jsonl_roundtrip",
-        "jsonl_roundtrip_text_bytes",
-        "jsonl_roundtrip_corrupt",
-        "jsonl_roundtrip_ids",
         "jsonl_gzip_roundtrip",
         "jsonl_source_agreement",
         "csv_roundtrip",
-        "csv_roundtrip_price",
-        "csv_roundtrip_dates",
-        "csv_roundtrip_corrupt",
         "csv_source_agreement",
         "compaction_roundtrip",
-        "compaction_roundtrip_text_bytes",
-        "compaction_roundtrip_counts",
-        "compaction_roundtrip_files",
         "compaction_source_agreement",
         "xml_roundtrip",
         "orc_roundtrip",

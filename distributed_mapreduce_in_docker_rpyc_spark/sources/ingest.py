@@ -11,8 +11,8 @@ Reference semantics being re-expressed (citations into /root/reference):
   - OP-3 UTF-8 lossy transcode: ``bytes.decode("utf-8", "ignore")`` — invalid
     byte sequences are silently DROPPED, not replaced
     (coordinator/coordinator.py:45-49, worker/worker.py:16).  Spark's own text
-    reader replaces them, so byte-level parity requires the ``binaryFile``
-    path here.
+    reader replaces them, so byte-level parity requires decoding in Python:
+    ``transcode_lossy`` here, or the ``ziptext`` source.
   - OP-4 size-based line-aligned split (coordinator/coordinator.py:57-89):
     subsumed by Hadoop input splitting; ``split_bytes`` just sets
     ``maxPartitionBytes``.
@@ -20,9 +20,10 @@ Reference semantics being re-expressed (citations into /root/reference):
 100 TB posture: this module is an EDGE LOADER.  At scale the right design is
 text/Parquet pre-staged in object storage read by ``spark.read``; a single ZIP
 over HTTP is inherently a one-node bottleneck (the reference has the same
-constraint — one coordinator downloads everything).  The distributed
-``zip_lines`` path exists so that MANY archives (the realistic 100 TB layout:
-thousands of multi-GB archives) extract in parallel, one task each.
+constraint — one coordinator downloads everything).  The distributed path
+is the ``ziptext`` data source (``sources/zip_datasource.py``): MANY archives
+(the realistic 100 TB layout: thousands of multi-GB archives) extract in
+parallel, one task each.
 """
 
 from __future__ import annotations
@@ -31,17 +32,13 @@ import os
 import shutil
 import urllib.request
 import zipfile
-from collections.abc import Iterator
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 DOWNLOAD_CHUNK_BYTES = 1024 * 1024  # reference coordinator/coordinator.py:29
 DOWNLOAD_TIMEOUT_SECS = 600  # reference coordinator/coordinator.py:27
 SPLIT_BYTES = 32 * 1024 * 1024  # reference coordinator/coordinator.py:57
-
-ZIP_LINES_SCHEMA = "archive string, member string, value string"
 
 
 def download(url: str, data_dir: str) -> list[str]:
@@ -79,17 +76,27 @@ def extract_zip(zip_path: str, out_dir: str) -> list[str]:
     lossy-transcode it to UTF-8 ``.txt``.  Unlike the reference (which then
     processes only ``files[0]``, coordinator/coordinator.py:137-138 — a
     bug-shaped limitation), all members are returned.
+
+    Each output is named after the member's path below the members' common
+    directory, flattened by escaping ``%``, ``/`` and ``\\`` — so
+    ``a/x.txt`` and ``b/x.txt`` stay distinct files, and no name can
+    escape ``out_dir``.  Two members that still map to one file (``x`` and
+    ``x.txt``) are rejected instead of overwriting each other.
     """
     out: list[str] = []
     with zipfile.ZipFile(zip_path) as zf:
-        for member in zf.infolist():
-            if member.is_dir():
-                continue
-            base = os.path.basename(member.filename)
+        members = [m for m in zf.infolist() if not m.is_dir()]
+        parts = [m.filename.split("/") for m in members]
+        depth = len(os.path.commonprefix([p[:-1] for p in parts]))
+        for member, p in zip(members, parts):
+            base = "/".join(p[depth:])
+            base = base.replace("%", "%25").replace("/", "%2F").replace("\\", "%5C")
             raw = os.path.join(out_dir, base + ".raw")
             with zf.open(member) as src, open(raw, "wb") as dst:
                 shutil.copyfileobj(src, dst, DOWNLOAD_CHUNK_BYTES)
             txt = os.path.join(out_dir, base if base.endswith(".txt") else base + ".txt")
+            if txt in out:
+                raise ValueError(f"ZIP members collide on output file {txt!r}")
             out.append(transcode_lossy(raw, txt))
     return sorted(out)
 
@@ -107,53 +114,6 @@ def transcode_lossy(path: str, txt: str | None = None) -> str:
         os.remove(path)
     os.replace(tmp, txt)
     return txt
-
-
-def zip_lines(spark: SparkSession, path: str) -> DataFrame:
-    """OP-2/OP-3 distributed: ``binaryFile`` scan over ZIP archives →
-    ``(archive, member, value)`` with one row per text line, decoded
-    UTF-8-lossy.  One task per archive (ZIP is not splittable); scales by
-    archive count, which is the only axis ZIP can scale on.
-    """
-
-    def explode_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for arc_path, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                    for member in zf.infolist():
-                        if member.is_dir():
-                            continue
-                        text = zf.read(member).decode("utf-8", "ignore")
-                        lines = text.split("\n")
-                        yield pd.DataFrame(
-                            {
-                                "archive": arc_path,
-                                "member": member.filename,
-                                "value": lines,
-                            }
-                        )
-
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    return binary.mapInPandas(explode_archives, ZIP_LINES_SCHEMA)
-
-
-def text_lines_lossy(spark: SparkSession, path: str) -> DataFrame:
-    """Byte-parity text reader: ``binaryFile`` + ``decode(utf-8, ignore)``.
-
-    Only needed when input may contain invalid UTF-8 AND the dropped-vs-
-    replaced distinction matters (SURVEY.md §1.2); clean input should use
-    ``read_lines`` (splittable, streamed, pushdown-capable).
-    """
-
-    def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield pd.DataFrame({"value": content.decode("utf-8", "ignore").split("\n")})
-
-    binary = spark.read.format("binaryFile").load(path).select("content")
-    return binary.mapInPandas(decode_files, "value string")
 
 
 def read_lines(spark: SparkSession, path: str, split_bytes: int | None = None) -> DataFrame:

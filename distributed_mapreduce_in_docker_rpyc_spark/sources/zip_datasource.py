@@ -41,6 +41,19 @@ ZIPTEXT_SCHEMA = StructType(
 )
 
 
+def _archive_lines(*paths: str) -> Iterator[tuple]:
+    """``(archive, member, line)`` for every line of every non-directory
+    member of each archive, decoded UTF-8 with invalid bytes dropped."""
+    for path in paths:
+        with zipfile.ZipFile(path) as zf:
+            for member in zf.infolist():
+                if member.is_dir():
+                    continue
+                text = zf.read(member).decode("utf-8", "ignore")
+                for line in text.split("\n"):
+                    yield (path, member.filename, line)
+
+
 class _ArchivePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -57,13 +70,7 @@ class ZipTextReader(DataSourceReader):
         return [_ArchivePartition(p) for p in paths]
 
     def read(self, partition: _ArchivePartition) -> Iterator[tuple]:
-        with zipfile.ZipFile(partition.path) as zf:
-            for member in zf.infolist():
-                if member.is_dir():
-                    continue
-                text = zf.read(member).decode("utf-8", "ignore")
-                for line in text.split("\n"):
-                    yield (partition.path, member.filename, line)
+        return _archive_lines(partition.path)
 
 
 class ZipTextDataSource(DataSource):
@@ -104,16 +111,6 @@ class ZipTextStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _rows_for(self, paths: list[str]):
-        for p in paths:
-            with zipfile.ZipFile(p) as zf:
-                for member in zf.infolist():
-                    if member.is_dir():
-                        continue
-                    text = zf.read(member).decode("utf-8", "ignore")
-                    for line in text.split("\n"):
-                        yield (p, member.filename, line)
-
     def read(self, start: dict):
         seen = set(start["files"])
         now = sorted(set(_glob.glob(self.path)))
@@ -122,10 +119,10 @@ class ZipTextStreamReader(SimpleDataSourceStreamReader):
         # iter(list), not a generator: the runner caches the prefetched
         # batch and pickles it (generators can't pickle), but also calls
         # next() on it (bare lists aren't iterators).
-        return iter(list(self._rows_for(new))), end
+        return iter(list(_archive_lines(*new))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         new = sorted(set(end["files"]) - set(start["files"]))
-        return iter(list(self._rows_for(new)))
+        return iter(list(_archive_lines(*new)))
 
 

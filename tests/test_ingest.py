@@ -76,19 +76,24 @@ def test_download_over_http_loopback(tmp_path, sample_zip):
     assert got == want
 
 
+def _ziptext(spark, path):
+    from distributed_mapreduce_in_docker_rpyc_spark.sources.zip_datasource import register_ziptext
+
+    register_ziptext(spark)
+    return spark.read.format("ziptext").load(path)
+
+
 def test_zip_lines_distributed_matches_lossy_decode(spark, sample_zip):
-    rows = ingest.zip_lines(spark, sample_zip).collect()
-    members = {r.member for r in rows}
-    assert members == {"docs/a.txt", "docs/b.txt"}
+    """The format('ziptext') data source (the distributed ZIP path) yields
+    every non-directory member, lines decoded with invalid UTF-8 dropped,
+    one input partition per (non-splittable) archive."""
+    ds = _ziptext(spark, sample_zip)
+    rows = ds.collect()
+    assert {r.member for r in rows} == {"docs/a.txt", "docs/b.txt"}
+    assert {r.archive for r in rows} == {sample_zip}
     got = [r.value for r in rows if r.member == "docs/b.txt"]
     assert got == DIRTY.decode("utf-8", "ignore").split("\n")
-
-
-def test_text_lines_lossy(spark, tmp_path):
-    raw = tmp_path / "dirty.txt"
-    raw.write_bytes(DIRTY)
-    got = [r.value for r in ingest.text_lines_lossy(spark, str(raw)).collect()]
-    assert got == DIRTY.decode("utf-8", "ignore").split("\n")
+    assert ds.rdd.getNumPartitions() == 1
 
 
 def test_ingest_to_wordcount_matches_counter_oracle(spark, tmp_path, sample_zip):
@@ -117,12 +122,64 @@ def test_read_lines_split_conf(spark, tmp_path):
 
 def test_ziptext_datasource_matches_mapinpandas_path(spark, sample_zip):
     """The format('ziptext') Python DataSource must produce exactly the rows
-    of the binaryFile+mapInPandas path, one partition per archive."""
-    from distributed_mapreduce_in_docker_rpyc_spark.sources.zip_datasource import register_ziptext
+    of an independent binaryFile+mapInPandas decode, one partition per
+    archive."""
+    import io
 
-    register_ziptext(spark)
-    ds = spark.read.format("ziptext").load(sample_zip)
+    def explode_archives(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for arc_path, content in zip(pdf["path"], pdf["content"]):
+                with zipfile.ZipFile(io.BytesIO(content)) as zf:
+                    for member in zf.infolist():
+                        if member.is_dir():
+                            continue
+                        lines = zf.read(member).decode("utf-8", "ignore").split("\n")
+                        yield pd.DataFrame({"member": member.filename, "value": lines})
+
+    binary = spark.read.format("binaryFile").load(sample_zip).select("path", "content")
+    via_mp = {
+        (r.member, r.value)
+        for r in binary.mapInPandas(explode_archives, "member string, value string").collect()
+    }
+    ds = _ziptext(spark, sample_zip)
     via_ds = {(r.member, r.value) for r in ds.collect()}
-    via_mp = {(r.member, r.value) for r in ingest.zip_lines(spark, sample_zip).collect()}
     assert via_ds == via_mp and via_ds
     assert ds.rdd.getNumPartitions() == 1  # one task per (non-splittable) archive
+
+
+def test_ingest_keeps_members_with_the_same_file_name(spark, tmp_path):
+    """Members ``a/x.txt`` and ``b/x.txt`` share a file name; extraction
+    must stage both, not let one overwrite the other.  Word counts equal
+    the Counter oracle and the ziptext path over the same archive."""
+    blobs = {"a/x.txt": b"alpha alpha\n", "b/x.txt": b"beta\n"}
+    path = tmp_path / "dup.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, blob in blobs.items():
+            zf.writestr(name, blob)
+
+    staging = str(tmp_path / "staging")
+    assert len(set(ingest.download(f"file://{path}", staging))) == 2
+    df = ingest.ingest(spark, f"file://{path}", staging)
+    got = {r.word: r.cnt for r in word_counts(df, "value").collect()}
+
+    oracle: collections.Counter[str] = collections.Counter()
+    for blob in blobs.values():
+        for line in blob.decode("utf-8", "ignore").split("\n"):
+            oracle.update(tokenize_line(line))
+    via_ziptext = {
+        r.word: r.cnt for r in word_counts(_ziptext(spark, str(path)), "value").collect()
+    }
+    assert got == dict(oracle) == via_ziptext == {"alpha": 2, "beta": 1}
+
+
+def test_extract_zip_rejects_members_that_map_to_one_file(tmp_path):
+    """``x`` is staged as ``x.txt``, so a member literally named ``x.txt``
+    would overwrite it; extraction refuses instead of losing one."""
+    path = tmp_path / "clash.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("x", b"one\n")
+        zf.writestr("x.txt", b"two\n")
+    with pytest.raises(ValueError, match="collide"):
+        ingest.extract_zip(str(path), str(tmp_path))

@@ -127,24 +127,6 @@ def test_compaction_deviation_proof_is_zero_on_adversarial_content(spark, adv_di
     assert devs == {k: 0 for k in devs}, devs
 
 
-def test_csv_corrupt_set_is_projection_independent(spark, adv_dir):
-    """Defect #4 regression: every sibling view over the memoized proof
-    must agree on the corrupt-shard literals regardless of which columns
-    it projects (the proof materializes ONE full-projection parse)."""
-    from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_wordcount import (
-        csv_roundtrip_corrupt,
-        csv_roundtrip_dates,
-        csv_roundtrip_price,
-    )
-
-    corrupt = _one(csv_roundtrip_corrupt(spark, adv_dir))
-    assert corrupt["n_corrupt"] == 3 and corrupt["sum_corrupt_bytes"] == 89
-    assert corrupt["dev_n_good"] == 0 and corrupt["dev_sum_key"] == 0
-    assert _one(csv_roundtrip_price(spark, adv_dir))["n_price_rows_changed"] == 0
-    dates = _one(csv_roundtrip_dates(spark, adv_dir))
-    assert dates == {"dev_min_day": 0, "dev_max_day": 0}
-
-
 def test_source_agreement_queries_match_duckdb_on_adversarial_content(spark, adv_dir):
     """The engine-agreement siblings must hash-match DuckDB even on the
     adversarial fixture (exotic codepoints, extreme doubles/dates)."""

@@ -295,6 +295,24 @@ def test_plan_features_match_golden(spark):
     assert not diffs, f"plan features drifted (golden, current): {diffs}"
 
 
+def test_coverage_md_matches_registry():
+    """COVERAGE.md is generated from the registry; a query added or removed
+    without `python scripts/gen_coverage.py` fails here.  No Spark session:
+    loading the registry only imports the operator modules."""
+    import os
+    import re
+
+    from distributed_mapreduce_in_docker_rpyc_spark import registry
+
+    registry.load_all()
+    with open(os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md"), encoding="utf-8") as f:
+        text = f.read()
+    listed = re.findall(r"^\| `([^`]+)` \|", text, flags=re.M)
+    assert sorted(listed) == sorted(registry.QUERIES)
+    header = f"{len(registry.QUERIES)} queries, {len(registry.ORACLES)} oracle-checked."
+    assert header in text.splitlines()
+
+
 def test_aqe_splits_skewed_join_partitions(spark):
     """AQE's skew-join split — the runtime answer to the hot-key join that
     salting handles manually (functions/skew.py): a 90%-hot key must get its
