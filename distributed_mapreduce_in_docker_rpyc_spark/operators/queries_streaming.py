@@ -8,6 +8,7 @@ execution against the DuckDB batch oracle — stream ≡ batch ≡ oracle.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -20,15 +21,21 @@ from distributed_mapreduce_in_docker_rpyc_spark.streaming import jobs
 _VALUE_DEC = "CAST(value AS DECIMAL(30,6))"
 
 
-def _run(agg, output_mode: str = "complete", checkpoint: bool = False) -> str:
+def _run(agg: DataFrame, output_mode: str = "complete", checkpoint: bool = False) -> DataFrame:
+    """Run ``agg`` to completion into a memory sink and return the sink's
+    rows as a batch frame.  The frame is resolved before the sink's temp
+    view is dropped and holds the rows itself, so neither the view nor the
+    checkpoint outlives the call."""
+    spark = agg.sparkSession
     table = f"stream_{uuid.uuid4().hex[:12]}"
-    jobs.run_to_memory(
-        agg,
-        table,
-        output_mode=output_mode,
-        checkpoint_dir=tempfile.mkdtemp(prefix="sg-ckpt-") if checkpoint else None,
-    )
-    return table
+    ckpt = tempfile.mkdtemp(prefix="sg-ckpt-") if checkpoint else None
+    try:
+        jobs.run_to_memory(agg, table, output_mode=output_mode, checkpoint_dir=ckpt)
+        return spark.table(table)
+    finally:
+        spark.catalog.dropTempView(table)
+        if ckpt:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -44,8 +51,7 @@ def _run(agg, output_mode: str = "complete", checkpoint: bool = False) -> str:
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows executed INCREMENTALLY (watermarked streaming
     aggregation, availableNow backfill) — result must equal the batch SQL."""
-    table = _run(jobs.tumbling_hourly(jobs.events_stream(spark, sf_dir)))
-    return spark.table(table)
+    return _run(jobs.tumbling_hourly(jobs.events_stream(spark, sf_dir)))
 
 
 @register(
@@ -64,8 +70,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 10m/5m windows executed incrementally."""
-    table = _run(jobs.sliding_10m_5m(jobs.events_stream(spark, sf_dir)))
-    return spark.table(table)
+    return _run(jobs.sliding_10m_5m(jobs.events_stream(spark, sf_dir)))
 
 
 @register(
@@ -75,15 +80,13 @@ def stream_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState running counter);
     final per-user state must equal the batch COUNT(*)."""
-    table = _run(
+    emitted = _run(
         jobs.stateful_user_totals(jobs.events_stream(spark, sf_dir)),
         output_mode="update",
         checkpoint=True,
     )
     # update mode re-emits per micro-batch; the max is the final state.
-    return (
-        spark.table(table).groupBy("user_id").agg(F.max("n_total").alias("n_total"))
-    )
+    return emitted.groupBy("user_id").agg(F.max("n_total").alias("n_total"))
 
 
 @register(
@@ -118,8 +121,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous event is >= 30 min (Spark's window end ``last + gap`` is
     exclusive), t_end = last event + gap.  The stream≡batch equality is
     additionally asserted in tests/test_streaming.py."""
-    table = _run(jobs.session_windows(jobs.events_stream(spark, sf_dir)))
-    return spark.table(table)
+    return _run(jobs.session_windows(jobs.events_stream(spark, sf_dir)))
 
 
 @register(
@@ -139,8 +141,7 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
 
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    table = _run(jobs.enriched_counts(jobs.events_stream(spark, sf_dir), dim))
-    return spark.table(table)
+    return _run(jobs.enriched_counts(jobs.events_stream(spark, sf_dir), dim))
 
 
 @register(
@@ -150,12 +151,11 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked streaming dedup: the emitted set of (user_id, event_type)
     pairs must equal batch DISTINCT."""
-    table = _run(
+    return _run(
         jobs.distinct_user_event_pairs(jobs.events_stream(spark, sf_dir)),
         output_mode="append",
         checkpoint=True,
     )
-    return spark.table(table)
 
 
 @register(
@@ -174,12 +174,11 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     minutes), both sides watermarked and state-store buffered, executed
     incrementally — hash-checked against the batch range join."""
     stream = jobs.events_stream(spark, sf_dir)
-    table = _run(
+    return _run(
         jobs.click_purchase_stream_join(stream),
         output_mode="append",
         checkpoint=True,
     )
-    return spark.table(table)
 
 
 # 24 h per-step window: the sparse fixture (~2 events/user/day) yields real
@@ -241,12 +240,11 @@ def stream_cep_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     through CASE expressions — so the driver hash-checks an inherently
     sequential pattern matcher, the same technique as the
     ``pagerank_word_graph`` iterative oracle."""
-    table = _run(
+    return _run(
         jobs.cep_funnel_matches(jobs.events_stream(spark, sf_dir), window_us=_CEP_W_US),
         output_mode="append",
         checkpoint=True,
     )
-    return spark.table(table)
 
 
 @register(
@@ -278,8 +276,7 @@ def stream_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("dup_of"))
     )
     feed = jobs.documents_stream(spark, sf_dir).filter((F.col("doc_id") % 5) == 4)
-    table = _run(jobs.dedup_against_corpus(feed, corpus_keepers), output_mode="append")
-    return spark.table(table)
+    return _run(jobs.dedup_against_corpus(feed, corpus_keepers), output_mode="append")
 
 
 def _replay_feed(spark, sf_dir: str, cols: list[str], work_name: str, splits=None):
@@ -370,8 +367,7 @@ def stream_watermark_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("wstart"), "event_type", "n_events")
     )
-    table = _run(agg, output_mode="append", checkpoint=True)
-    return spark.table(table)
+    return _run(agg, output_mode="append", checkpoint=True)
 
 
 @register(
@@ -536,8 +532,7 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("p_user").alias("user_id"), "purchase_id", "click_id", "purchase_ts", "click_ts"
     )
-    table = _run(joined, output_mode="append", checkpoint=True)
-    return spark.table(table)
+    return _run(joined, output_mode="append", checkpoint=True)
 
 
 @register(
@@ -559,8 +554,7 @@ def stream_wordcount_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming dimension the reference lacks entirely: the same counts the
     batch engine produces must come out of the state-store path,
     micro-batch by micro-batch (stream ≡ batch ≡ oracle)."""
-    table = _run(jobs.wordcount_totals(jobs.documents_stream(spark, sf_dir)))
-    return spark.table(table)
+    return _run(jobs.wordcount_totals(jobs.documents_stream(spark, sf_dir)))
 
 
 @register(

@@ -1,12 +1,24 @@
 """SparkSession factory with scale-aware defaults.
 
-Local test posture: ``local[$SPARK_GRAFT_CPUS]`` (default all cores), shuffle
-partitions ≈ cores.  Cluster posture (100 TB): the same confs apply — AQE
-re-plans shuffle fan-out at runtime, skew-join splits hot partitions, and
-32 MB–128 MB input splits keep scan tasks balanced (the reference hand-rolled
-exactly this with its 32 MB line-aligned chunks,
-reference coordinator/coordinator.py:57-89 — Spark's
-``spark.sql.files.maxPartitionBytes`` subsumes it).
+Local test posture: ``local[$SPARK_GRAFT_CPUS]`` (default all cores).
+Cluster posture (100 TB): the same confs apply — AQE re-plans shuffle fan-out
+at runtime, skew-join splits hot partitions, and 32 MB–128 MB input splits
+keep scan tasks balanced (the reference hand-rolled exactly this with its
+32 MB line-aligned chunks, reference coordinator/coordinator.py:57-89 —
+Spark's ``spark.sql.files.maxPartitionBytes`` subsumes it).
+
+Shuffle fan-out is split between batch and streaming:
+
+- Batch: AQE starts every shuffle at
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` (32 by
+  default) and coalesces small partitions at runtime.  While AQE and
+  coalescing are on, Spark takes the initial number in place of
+  ``spark.sql.shuffle.partitions``.
+- Streaming: a streaming query turns AQE off in its cloned session, so its
+  stateful operators take ``spark.sql.shuffle.partitions``, which is the
+  session's core count.  Each state partition costs a state-store load and
+  commit per micro-batch, so one per core keeps every core busy without
+  paying that fixed cost 32 times per batch.
 """
 
 from __future__ import annotations
@@ -18,13 +30,26 @@ from pyspark.sql import SparkSession
 # Reference parity knobs (SURVEY.md §4): the only two physical-planning knobs the
 # reference exposes are reduce fan-out (NUM_REDUCERS, coordinator/coordinator.py:11)
 # and map split size (32 MB, coordinator/coordinator.py:57).  Both are config here,
-# neither affects results.
+# neither affects results.  The fan-out is AQE's initial batch partition count.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
 
 
+def _default_driver_mem() -> str:
+    """Half the RAM, capped at 48g (at least 2g): a larger heap outgrows a
+    smaller box's RAM over a long session and the kernel OOM-kills the JVM."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{min(48, max(2, ram_gb // 2))}g"
+
+
 def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
+
+    ``shuffle_partitions`` (default ``SPARK_GRAFT_SHUFFLE_PARTITIONS``, 32)
+    is AQE's initial batch partition count; ``spark.sql.shuffle.partitions``
+    is set to the session's ``defaultParallelism`` (see the module
+    docstring).  The driver heap is ``SPARK_GRAFT_DRIVER_MEM``, by default
+    half the RAM capped at 48g.
 
     UTC session timezone is load-bearing: the DuckDB oracle compares timestamp
     values and DuckDB timestamps are UTC-naive.
@@ -40,14 +65,17 @@ def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, s
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", DEFAULT_MAX_PARTITION_BYTES)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/sg-warehouse"))
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -56,13 +84,19 @@ def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, s
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
+    extra_keys = set()
     for kv in filter(None, extra.split(";")):
         k, sep, v = kv.partition("=")
-        if not sep or not k.strip():
+        k = k.strip()
+        if not sep or not k:
             raise ValueError(
                 f"SPARK_GRAFT_EXTRA_CONFS entry {kv!r} is not key=value"
             )
-        builder = builder.config(k.strip(), v.strip())
+        builder = builder.config(k, v.strip())
+        extra_keys.add(k)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in extra_keys:
+        # The core count is only known once the context exists (local[*]).
+        spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -30,7 +30,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 if TYPE_CHECKING:
-    pass
+    from pyspark.sql.streaming import StreamingQuery
 
 DEFAULT_WATERMARK = "2 hours"
 
@@ -178,10 +178,10 @@ def run_to_memory(
     table: str,
     output_mode: str = "complete",
     checkpoint_dir: str | None = None,
-) -> None:
+) -> StreamingQuery:
     """Drive a streaming aggregation over all currently-available input
     (``Trigger.AvailableNow``) into an in-memory sink table, blocking until
-    the backfill completes."""
+    the backfill completes; returns the terminated query (its progress)."""
     writer = (
         agg.writeStream.format("memory")
         .queryName(table)
@@ -190,7 +190,9 @@ def run_to_memory(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()
+    query = writer.start()
+    query.awaitTermination()
+    return query
 
 
 def enriched_counts(stream: DataFrame, dim: DataFrame, watermark: str = DEFAULT_WATERMARK) -> DataFrame:

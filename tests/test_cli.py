@@ -13,7 +13,7 @@ def test_cli_list_marks_oracle_checked(capsys):
     assert "* wordcount_top20" in [ln.rstrip() for ln in out]
 
 
-def test_cli_run_prints_json_rows(spark, sf_dir, capsys):
+def test_cli_run_prints_json_rows(reapplies_get_spark, sf_dir, capsys):
     assert main(["run", "wordcount_top20", "--sf-dir", sf_dir, "--limit", "5"]) == 0
     lines = [ln for ln in capsys.readouterr().out.splitlines() if ln.strip()]
     assert len(lines) == 5
@@ -21,7 +21,7 @@ def test_cli_run_prints_json_rows(spark, sf_dir, capsys):
     assert set(row) == {"word", "cnt"}
 
 
-def test_cli_explain_prints_physical_plan(spark, sf_dir, capsys):
+def test_cli_explain_prints_physical_plan(reapplies_get_spark, sf_dir, capsys):
     assert main(["explain", "q1_pricing_summary", "--sf-dir", sf_dir]) == 0
     out = capsys.readouterr().out
     assert "Physical Plan" in out

@@ -17,14 +17,13 @@ from pyspark.sql import functions as F
 from distributed_mapreduce_in_docker_rpyc_spark.functions.text import tokenize_column, tokenize_line
 
 # Adversarial text: ASCII letters/apostrophes mixed with digits, unicode
-# letters (müller), combining marks, newlines, punctuation, emoji.
-# Deliberately excludes the one known divergence class: uppercase unicode
-# whose lowercase expands into ASCII + combining mark (e.g. İ → i̇), where
-# lower-then-match (Spark) and match-then-lower (reference) differ — the
-# engine contract documents lower-then-match (functions/text.py).
+# letters (müller), combining marks, newlines, punctuation, emoji, and the
+# letters whose lowercase contains an ASCII letter (Kelvin sign → k,
+# İ → i + U+0307): both engine paths lower the text before matching, so
+# they must split those the same way (functions/text.py).
 TEXT = st.text(
     alphabet=st.sampled_from(
-        list("abcXYZ'0_9-– \t\n.,!?") + ["é", "ü", "ß", "中", "🙂", "́"]
+        list("abcXYZ'0_9-– \t\n.,!?") + ["é", "ü", "ß", "中", "🙂", "́", "\u212a", "\u0130"]
     ),
     max_size=80,
 )

@@ -231,6 +231,20 @@ def test_multi_dim_partitioned_write_prunes_both_dims(spark, sf_dir, tmp_path):
     assert q.count() == want > 0
 
 
+def test_extra_confs_override_both_shuffle_partition_settings(spark, reapplies_get_spark, monkeypatch):
+    """``get_spark`` sets ``spark.sql.shuffle.partitions`` to the core count
+    and AQE's initial partition count to ``shuffle_partitions``; an entry in
+    ``SPARK_GRAFT_EXTRA_CONFS`` overrides either (the builder applies its
+    confs to the reused test session)."""
+    from distributed_mapreduce_in_docker_rpyc_spark.session import get_spark
+
+    shuffle, initial = reapplies_get_spark
+    assert reapplies_get_spark == {shuffle: str(spark.sparkContext.defaultParallelism), initial: "8"}
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONFS", f"{shuffle}=3;{initial}=5")
+    assert get_spark("distributed_mapreduce_in_docker_rpyc_spark-tests", shuffle_partitions=8) is spark
+    assert {k: spark.conf.get(k) for k in (shuffle, initial)} == {shuffle: "3", initial: "5"}
+
+
 def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir, tmp_path):
     """Runtime row-level filtering: with a selective build side, Spark
     injects a bloom filter (might_contain) on the probe side so the big

@@ -754,3 +754,38 @@ def test_stream_pack_carry_is_retry_idempotent(spark, sf_dir):
     )
     assert seg_after == seg_before
     assert carry_after == carry_before
+
+
+def test_stateful_stream_takes_one_state_partition_per_core(spark, sf_dir):
+    """Streaming turns AQE off in its cloned session, so a stateful operator
+    takes ``spark.sql.shuffle.partitions``, which ``get_spark`` sets to the
+    core count; batch shuffles keep AQE's initial partition count, the
+    ``shuffle_partitions=8`` the test session asks for (session.py)."""
+    q = jobs.run_to_memory(jobs.tumbling_hourly(jobs.events_stream(spark, sf_dir)), "t_state_parts")
+    spark.catalog.dropTempView("t_state_parts")
+    state_ops = [so for p in q.recentProgress for so in p["stateOperators"]]
+    assert state_ops
+    assert {so["numShufflePartitions"] for so in state_ops} == {spark.sparkContext.defaultParallelism}
+    assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 8
+
+
+def test_registered_streaming_queries_release_view_and_checkpoint(spark, sf_dir):
+    """A registered streaming query drops its memory-sink temp view and
+    removes its checkpoint before returning; the frame it returns still
+    holds the sink's rows and matches the oracle."""
+    import tempfile
+
+    from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES, QUERIES, load_all
+
+    from tests.oracle import compare
+
+    load_all()
+    tables_before = {t.name for t in spark.catalog.listTables()}
+    tmp_before = set(os.listdir(tempfile.gettempdir()))
+    # one without a checkpoint, one with (and a transform after the drop)
+    names = ["stream_tumbling_hourly", "stream_stateful_user_totals"]
+    frames = {name: QUERIES[name](spark, sf_dir) for name in names}
+    assert {t.name for t in spark.catalog.listTables()} == tables_before
+    assert set(os.listdir(tempfile.gettempdir())) == tmp_before
+    for name, frame in frames.items():
+        compare(frame, ORACLES[name], sf_dir)

@@ -65,6 +65,15 @@ def test_tokenizer_semantics(spark):
     assert got == sorted(["don't", "stop", "me", "now", "caf", "abcdef", "na", "ve"])
 
 
+def test_rdd_path_equals_df_path_on_case_expanding_letters(spark):
+    """The Kelvin sign lowercases to ``k`` and ``İ`` to ``i`` + U+0307; the
+    DataFrame and RDD paths both lower before matching, so they agree."""
+    df = spark.createDataFrame([("\u212aelvin \u0130stanbul ok",)], ["text"])
+    want = {("kelvin", 1), ("i", 1), ("stanbul", 1), ("ok", 1)}
+    assert {(r["word"], r["cnt"]) for r in wc.word_counts(df).collect()} == want
+    assert {(r["word"], r["cnt"]) for r in wc.word_counts_rdd(df).collect()} == want
+
+
 def test_topk_deterministic_tiebreak(spark):
     df = spark.createDataFrame([("bb cc aa dd",)], ["text"])
     rows = wc.top_k_words(df, k=4).collect()
