@@ -181,7 +181,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     buckets AS (
         SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
         FROM dots GROUP BY vec_id, j // 3
     ),
     cand AS (

@@ -167,7 +167,7 @@ _DEDUP_BUCKET_CTES = """,
     ),
     buckets AS (
         SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
         FROM dots GROUP BY vec_id, j // 3
     ),
     cand AS (
@@ -234,7 +234,9 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Sign-LSH candidate CTEs (18 md5-derived hyperplanes in 6 tables of 3) and
 # the candidate-reranking top-10 SELECT — shared by sim_topk_lsh,
-# sim_lsh_recall, and sim_ann_recall_report (nq=50).
+# sim_lsh_recall, and sim_ann_recall_report (nq=50).  Every bucket CTE in
+# this module and queries_dedup takes a bit as ROUND(dot, 6) >= 0, the tie
+# rule of similarity.sign_bits.
 def _lsh_cand_ctes(nq: int) -> str:
     return f""",
     planes AS (
@@ -252,7 +254,7 @@ def _lsh_cand_ctes(nq: int) -> str:
     ),
     buckets AS (
         SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
         FROM dots GROUP BY vec_id, j // 3
     ),
     cand AS (
@@ -2457,7 +2459,7 @@ def _ann_join_cand_ctes(
     ),
     buckets AS (
         SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
         FROM dots GROUP BY vec_id, j // 3
     ),
     cand AS (
@@ -2756,7 +2758,7 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
     ),
     buckets AS (
         SELECT vec_id, j // (SELECT k FROM params) AS tbl,
-               string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
         FROM dots GROUP BY vec_id, j // (SELECT k FROM params)
     )"""
         + cand

@@ -86,6 +86,20 @@ def hyperplane(j: int, dim: int = DIM) -> list[float]:
     ]
 
 
+def sign_bits(dots):
+    """'1'/'0' sign-LSH bits of an array of plane dots, ``round(dot, 6) >= 0``.
+
+    The dot is quantized before its sign (the same 6 places as the probe
+    margins), so a bit never rests on the summation order: a true zero
+    computes as -4.4e-16 or 0.0 depending on how many rows share the BLAS
+    call.
+    Every |dot| < 5e-7, an exact tie included, is bit 1; the JVM paths and
+    the SQL oracles apply the same rule."""
+    import numpy as np
+
+    return np.where(np.round(dots, 6) >= 0, "1", "0")
+
+
 def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES, vec_col: str = "embedding") -> DataFrame:
     """Add a sign-LSH ``bucket`` column ('0'/'1' per plane, concatenated).
 
@@ -96,7 +110,7 @@ def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES, vec_col: str = "embedd
     for j in range(n_planes):
         plane = F.array(*[F.lit(s) for s in hyperplane(j)])
         dot = dot_col(F.col(vec_col), plane)
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+        bits.append(F.when(F.round(dot, 6) >= 0, F.lit("1")).otherwise(F.lit("0")))
     return emb.withColumn("bucket", F.concat(*bits))
 
 
@@ -293,7 +307,7 @@ def lsh_bucket_tables(
             for c in range(0, dim, CHUNK):
                 col = F.col(f"_p{p}_c{c}")
                 dot = col if dot is None else dot + col
-            bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+            bits.append(F.when(F.round(dot, 6) >= 0, F.lit("1")).otherwise(F.lit("0")))
         per_table.append(F.concat(*bits))
     return stage1.select(
         F.col(id_col), F.posexplode(F.array(*per_table)).alias("tbl", "bucket")
@@ -320,7 +334,11 @@ def lsh_bucket_tables_np(
     viable at real embedding widths (768-4096 dims), where the expression
     tree would be 50× larger still.  Per-batch memory is O(batch × P) —
     constant in corpus size, so the 100 TB posture is unchanged: one scan,
-    no shuffle, L small rows out per vector."""
+    no shuffle, L small rows out per vector.
+
+    Determinism contract: each bit is ``sign_bits``, ``round(dot, 6) >= 0``,
+    so a vector's buckets do not depend on which rows share its Arrow batch
+    (the matmul's summation order does), and an exact tie is bit 1."""
     import numpy as np
 
     emb = non_null_vectors(emb, vec_col)
@@ -334,7 +352,7 @@ def lsh_bucket_tables_np(
                 continue
             ids = pdf[id_col].to_numpy()
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)  # (B, dim)
-            bits = np.where(mat @ signs.T >= 0, "1", "0")  # (B, P) of '1'/'0'
+            bits = sign_bits(mat @ signs.T)  # (B, P) of '1'/'0'
             buckets = []
             for t in range(n_tables):
                 b = bits[:, t * planes_per_table]
@@ -714,7 +732,10 @@ def lsh_directed_probes_np(
     this package follows): margins are quantized to 6 places before the
     argsort and ties break on plane index, so the DuckDB oracle reproduces
     the probe CHOICE bit-for-bit with ROW_NUMBER() OVER (ORDER BY
-    ROUND(ABS(dot), 6), j).  Same Arrow/NumPy physical path as
+    ROUND(ABS(dot), 6), j).  The home bits take the same quantization
+    before their sign (``sign_bits``: ``round(dot, 6) >= 0``, an exact tie
+    is bit 1), so neither the home bucket nor the probes depend on which
+    rows share the vector's Arrow batch.  Same Arrow/NumPy physical path as
     ``lsh_bucket_tables_np``: one matmul per batch, O(batch × P) memory,
     L·(1+T) small rows out per vector."""
     import numpy as np
@@ -732,7 +753,7 @@ def lsh_directed_probes_np(
             ids = pdf[id_col].to_numpy()
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
             dots = mat @ signs.T  # (B, P)
-            bits = np.where(dots >= 0, "1", "0")
+            bits = sign_bits(dots)
             nb = len(ids)
             out_ids, out_tbl, out_bucket = [], [], []
             for t in range(n_tables):

@@ -1747,7 +1747,7 @@ def test_directed_probes_pick_smallest_margin_planes(spark):
     signs = np.array([sim.hyperplane(p) for p in range(n_tables * k)])
     for vid, vec in rng_rows:
         dots = np.asarray(vec) @ signs.T
-        bits = np.where(dots >= 0, "1", "0")
+        bits = np.where(np.round(dots, 6) >= 0, "1", "0")
         for t in range(n_tables):
             d_t = dots[t * k : (t + 1) * k]
             b_t = list(bits[t * k : (t + 1) * k])
@@ -1761,6 +1761,33 @@ def test_directed_probes_pick_smallest_margin_planes(spark):
                 expect.add("".join(fl))
             assert set(by_key[(vid, t)]) == expect, (vid, t)
             assert len(by_key[(vid, t)]) == 1 + t_probes
+
+
+def test_sign_lsh_buckets_do_not_depend_on_arrow_batching(spark):
+    """A vector's sign-LSH buckets and probes are a function of the vector
+    alone, not of which rows share its Arrow batch.  The fixture's dots are
+    multiples of 1/6, and vector 6 has an exact-zero dot on plane 2, whose
+    unquantized float sign differs between a 1-row and an 8-row matmul."""
+    from pyspark.sql import functions as F
+
+    from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
+
+    rows = [
+        (i, [((i * 31 + d * 7) % 13 - 6) / 6.0 for d in range(64)])
+        for i in range(1, 9)
+    ]
+    schema = "vec_id long, embedding array<double>"
+    one_batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    one_row_batches = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    sizes = one_row_batches.groupBy(F.spark_partition_id()).count().collect()
+    assert sorted(r["count"] for r in sizes) == [1] * 8
+    for bucketing in (
+        lambda e: sim.lsh_bucket_tables_np(e, n_tables=3, planes_per_table=4),
+        lambda e: sim.lsh_directed_probes_np(e, n_tables=3, planes_per_table=4),
+    ):
+        whole = sorted(tuple(r) for r in bucketing(one_batch).collect())
+        split = sorted(tuple(r) for r in bucketing(one_row_batches).collect())
+        assert whole == split
 
 
 def test_packed_write_layout_contract(spark, tmp_path):
