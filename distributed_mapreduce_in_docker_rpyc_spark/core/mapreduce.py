@@ -29,7 +29,7 @@ operator in ``operators/`` uses DataFrames so Catalyst can optimize.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
-from typing import Any, TypeVar
+from typing import TypeVar
 
 from pyspark.rdd import RDD
 
@@ -49,18 +49,8 @@ def run_mapreduce(
 
     ``num_partitions`` is the reference's ``NUM_REDUCERS``
     (coordinator/coordinator.py:11; image default 3, coordinator/Dockerfile:8).
-    Results are independent of it — asserted by tests/test_mapreduce.py.
+    Results are independent of it — asserted by
+    tests/test_wordcount.py::test_partition_count_invariance.
     """
     return rdd.flatMap(map_fn).reduceByKey(reduce_fn, numPartitions=num_partitions)
 
-
-def run_mapreduce_dict(
-    rdd: RDD,
-    map_fn: Callable[[T], Iterable[tuple[K, V]]],
-    reduce_fn: Callable[[V, V], V],
-    num_partitions: int | None = None,
-) -> dict[K, V]:
-    """Like :func:`run_mapreduce` but collects to a driver-local dict — the
-    shape the reference's coordinator ends with (a global Counter,
-    coordinator/coordinator.py:240-244).  Only for small result domains."""
-    return dict(run_mapreduce(rdd, map_fn, reduce_fn, num_partitions).collect())

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_in_docker_rpyc_spark.operators import dedup as dd
+from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
 from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import shared_df
 from distributed_mapreduce_in_docker_rpyc_spark.registry import register
 from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
@@ -157,6 +158,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.jaccard_pairs(docs, threshold=0.3, shingles=shd, max_df=50)
 
 
+# Sign-LSH candidate CTEs replicating semantic_pairs_lsh's 16×3 buckets
+# (similarity.sign_lsh_bucket_ctes) over a `norms` CTE; candidate pairs =
+# ids sharing a (table, bucket) cell in any table.  Shared with
+# sim_cosine_pairs (queries_similarity).
+_DEDUP_BUCKET_CTES = sim.sign_lsh_bucket_ctes(
+    sim.DEDUP_N_TABLES * sim.DEDUP_PLANES_PER_TABLE, sim.DEDUP_PLANES_PER_TABLE
+) + """,
+    cand AS (
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM buckets a
+        JOIN buckets b ON b.tbl = a.tbl AND b.bucket = a.bucket
+                       AND a.vec_id < b.vec_id
+    )
+"""
+
+
 @register(
     "dedup_embedding_cosine",
     oracle="""
@@ -165,31 +182,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
                      FROM generate_series(1, 64) g(i))) AS nrm
         FROM embeddings
-    ),
-    planes AS (
-        SELECT j.j AS j, d.d AS d,
-               CASE WHEN (strpos('0123456789abcdef',
-                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END AS s
-        FROM generate_series(0, 47) j(j), generate_series(0, 63) d(d)
-    ),
-    dots AS (
-        SELECT n.vec_id, p.j,
-               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
-        FROM norms n, planes p
-        GROUP BY n.vec_id, p.j
-    ),
-    buckets AS (
-        SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM dots GROUP BY vec_id, j // 3
-    ),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM buckets a
-        JOIN buckets b ON b.tbl = a.tbl AND b.bucket = a.bucket
-                       AND a.vec_id < b.vec_id
-    ),
+    )"""
+    + _DEDUP_BUCKET_CTES
+    + """,
     pairs AS (
         SELECT c.vec_a AS doc_a, c.vec_b AS doc_b,
                ROUND((SELECT SUM(CAST(a.embedding[g.i] AS DOUBLE) * CAST(b.embedding[g.i] AS DOUBLE))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
 from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import shared, shared_df
+from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_dedup import _DEDUP_BUCKET_CTES
 from distributed_mapreduce_in_docker_rpyc_spark.registry import register
 from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
 
@@ -32,13 +33,11 @@ def semantic_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.4) -> 
     )
 
 
-def _topk_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared 6×3 sign-LSH bucket frame (query-set independent).
-    NumPy/Arrow path — identical bucket decisions to the expression path
-    (differential-tested), no codegen-size cliff."""
+def _topk_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-shared 6×3 sign-LSH bucket frame (query-set independent)."""
     return shared_df(
         spark,
-        ("lsh_buckets", sf_dir, sim.N_TABLES, sim.PLANES_PER_TABLE),
+        ("topk_buckets", sf_dir, sim.N_TABLES, sim.PLANES_PER_TABLE),
         lambda: sim.lsh_bucket_tables_np(load_table(spark, sf_dir, "embeddings")),
     )
 
@@ -80,7 +79,7 @@ def _directed_probes(spark: SparkSession, sf_dir: str, n_probes: int = 2) -> Dat
     return shared_df(
         spark,
         ("directed_probes", sf_dir, sim.N_TABLES, k, n_probes),
-        lambda: sim.lsh_directed_probes_np(
+        lambda: sim.lsh_bucket_tables_np(
             sim.non_null_vectors(
                 load_table(spark, sf_dir, "embeddings"), "embedding"
             ).filter(F.col("vec_id") % 17 == 3),
@@ -148,36 +147,6 @@ _COSINE_CTES = """
     )
 """
 
-# Bucket CTEs replicating semantic_pairs_lsh's 16×3 sign-LSH bit-for-bit
-# (same md5-derived plane family as sim_topk_lsh's oracle, planes 0..29);
-# candidate pairs = ids sharing a (table, bucket) cell in any table.
-_DEDUP_BUCKET_CTES = """,
-    planes AS (
-        SELECT j.j AS j, d.d AS d,
-               CASE WHEN (strpos('0123456789abcdef',
-                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END AS s
-        FROM generate_series(0, 47) j(j), generate_series(0, 63) d(d)
-    ),
-    dots AS (
-        SELECT n.vec_id, p.j,
-               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
-        FROM norms n, planes p
-        GROUP BY n.vec_id, p.j
-    ),
-    buckets AS (
-        SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM dots GROUP BY vec_id, j // 3
-    ),
-    cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM buckets a
-        JOIN buckets b ON b.tbl = a.tbl AND b.bucket = a.bucket
-                       AND a.vec_id < b.vec_id
-    )
-"""
-
 
 @register(
     "sim_cosine_pairs",
@@ -232,31 +201,18 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.topk_bruteforce(load_table(spark, sf_dir, "embeddings"), query_ids_below=5, k=10)
 
 
-# Sign-LSH candidate CTEs (18 md5-derived hyperplanes in 6 tables of 3) and
-# the candidate-reranking top-10 SELECT — shared by sim_topk_lsh,
-# sim_lsh_recall, and sim_ann_recall_report (nq=50).  Every bucket CTE in
-# this module and queries_dedup takes a bit as ROUND(dot, 6) >= 0, the tie
-# rule of similarity.sign_bits.
+# The 6×3 sign-LSH bucket CTEs (18 md5-derived hyperplanes in 6 tables of
+# 3) of the top-k and ANN-join oracles; every sign-LSH oracle builds its
+# buckets with similarity.sign_lsh_bucket_ctes.
+_TOPK_BUCKET_CTES = sim.sign_lsh_bucket_ctes(
+    sim.N_TABLES * sim.PLANES_PER_TABLE, sim.PLANES_PER_TABLE
+)
+
+
+# Sign-LSH candidate CTEs and the candidate-reranking top-10 SELECT —
+# shared by sim_topk_lsh, sim_lsh_recall, and sim_ann_recall_report (nq=50).
 def _lsh_cand_ctes(nq: int) -> str:
-    return f""",
-    planes AS (
-        SELECT j.j AS j, d.d AS d,
-               CASE WHEN (strpos('0123456789abcdef',
-                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END AS s
-        FROM generate_series(0, 17) j(j), generate_series(0, 63) d(d)
-    ),
-    dots AS (
-        SELECT n.vec_id, p.j,
-               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
-        FROM norms n, planes p
-        GROUP BY n.vec_id, p.j
-    ),
-    buckets AS (
-        SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM dots GROUP BY vec_id, j // 3
-    ),
+    return _TOPK_BUCKET_CTES + f""",
     cand AS (
         SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
         FROM buckets qb
@@ -293,7 +249,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"),
         query_ids_below=5,
         k=10,
-        buckets=_topk_lsh_buckets(spark, sf_dir),
+        buckets=_topk_buckets(spark, sf_dir),
     )
 
 
@@ -328,7 +284,7 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     lsh = sim.topk_lsh(
-        emb, query_ids_below=5, k=10, buckets=_topk_lsh_buckets(spark, sf_dir)
+        emb, query_ids_below=5, k=10, buckets=_topk_buckets(spark, sf_dir)
     ).select("query_id", "neighbor_id")
     hits = (
         brute.join(lsh, ["query_id", "neighbor_id"])
@@ -614,7 +570,7 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_queries"),
         )
 
-    lsh = sim.topk_lsh(emb, n_queries, k, buckets=_topk_lsh_buckets(spark, sf_dir))
+    lsh = sim.topk_lsh(emb, n_queries, k, buckets=_topk_buckets(spark, sf_dir))
     ivf = sim.topk_ivf(emb, n_queries, k, index=_ivf(spark, sf_dir))
     return recall_of(lsh, "sign_lsh").unionAll(recall_of(ivf, "ivf_det_lloyd"))
 
@@ -2443,25 +2399,7 @@ def _ann_join_cand_ctes(
     query/index slice predicate injectable (the streaming index-maintenance
     sibling adds an arrival-order term so batch b only links against
     vectors already IN the index when it arrived)."""
-    return f""",
-    planes AS (
-        SELECT j.j AS j, d.d AS d,
-               CASE WHEN (strpos('0123456789abcdef',
-                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END AS s
-        FROM generate_series(0, 17) j(j), generate_series(0, 63) d(d)
-    ),
-    dots AS (
-        SELECT n.vec_id, p.j,
-               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
-        FROM norms n, planes p
-        GROUP BY n.vec_id, p.j
-    ),
-    buckets AS (
-        SELECT vec_id, j // 3 AS tbl,
-               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM dots GROUP BY vec_id, j // 3
-    ),
+    return _TOPK_BUCKET_CTES + f""",
     cand AS (
         SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
         FROM buckets qb
@@ -2509,7 +2447,7 @@ def ann_join_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"),
         left_pred=lambda c: c % 17 == 3,
         k=1,
-        buckets=_topk_lsh_buckets(spark, sf_dir),
+        buckets=_topk_buckets(spark, sf_dir),
     )
 
 
@@ -2556,7 +2494,7 @@ def sim_ann_join_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings"),
         left_pred=lambda c: c % 17 == 3,
         k=1,
-        buckets=_topk_lsh_buckets(spark, sf_dir),
+        buckets=_topk_buckets(spark, sf_dir),
     ).select("query_id", F.col("neighbor_id").alias("lsh_id"))
     joined = brute.join(lsh, "query_id", "left")
     return joined.agg(
@@ -2654,11 +2592,8 @@ def ann_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same integer rule as similarity.auto_planes_per_table (smallest k with
 # 2^k ≥ ⌈n/16⌉; POWER(2,p) over integer p ≤ 40 is exact in double, so the
 # comparison has no float-log boundary), then the plane family / table split
-# parameterize on it via scalar subqueries.  DuckDB's generate_series takes
-# only constant bounds, so the plane family is generated as a fixed
-# superset (j ≤ 239, i.e. k ≤ 40 — beyond any conceivable replay scale) and
-# filtered to the 6·k planes in play; no SQL comments in oracle strings
-# (registration collapses whitespace, so `--` would comment out the rest).
+# parameterize on it via scalar subqueries (similarity.sign_lsh_bucket_ctes
+# filters its fixed plane superset, k ≤ 40, to the 6·k planes in play).
 def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
     """Auto-k bucket + candidate CTEs, optionally with a probe family on
     the query side (r10):
@@ -2671,8 +2606,8 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
     * ``directed_probes=T`` — query-directed: only the T flips whose plane
       margin |dot| is smallest, ranked by ROW_NUMBER OVER (ORDER BY
       ROUND(ABS(dot), 6), j) — bit-for-bit the quantize+tie-break contract
-      of ``similarity.lsh_directed_probes_np``; the bit position within
-      the bucket string is j % k (string_agg orders by j).
+      of ``similarity.lsh_bucket_tables_np(n_probes=T)``; the bit position
+      within the bucket string is j % k (string_agg orders by j).
 
     Either way the candidate join probes qprobes against the unexpanded
     index buckets."""
@@ -2740,27 +2675,10 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
                             WHERE POWER(2, p.p) >= CEIL(c.cnt / 16.0))) AS k
         FROM (SELECT COUNT(*) AS cnt FROM norms
               WHERE vec_id % 17 != 3 AND embedding IS NOT NULL) c
-    ),
-    planes AS (
-        SELECT j.j AS j, d.d AS d,
-               CASE WHEN (strpos('0123456789abcdef',
-                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
-                    THEN 1.0 ELSE -1.0 END AS s
-        FROM generate_series(0, 239) j(j),
-             generate_series(0, 63) d(d)
-        WHERE j.j < (SELECT 6 * k FROM params)
-    ),
-    dots AS (
-        SELECT n.vec_id, p.j,
-               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
-        FROM norms n, planes p
-        GROUP BY n.vec_id, p.j
-    ),
-    buckets AS (
-        SELECT vec_id, j // (SELECT k FROM params) AS tbl,
-               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-        FROM dots GROUP BY vec_id, j // (SELECT k FROM params)
     )"""
+        + sim.sign_lsh_bucket_ctes(
+            f"(SELECT {sim.N_TABLES} * k FROM params)", "(SELECT k FROM params)"
+        )
         + cand
     )
 
@@ -2918,7 +2836,7 @@ def ann_join_query_directed_probe(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Cross-engine determinism: margins quantize to 6 places before the
     probe ranking and ties break on plane index
-    (``similarity.lsh_directed_probes_np``); the oracle replays the
+    (``similarity.lsh_bucket_tables_np``); the oracle replays the
     identical choice with ROW_NUMBER() OVER (ORDER BY ROUND(ABS(dot), 6),
     j), so the probe family — like every ranking in this package — is
     bit-replayable, not approximately-compared.

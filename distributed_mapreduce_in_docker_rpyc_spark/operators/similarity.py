@@ -7,18 +7,23 @@ Three execution strategies for approximate/exact nearest neighbors over
      set, cosine via JVM array expressions (zip_with/aggregate — codegen, no
      Python), ranking window per query. Exact; O(Q × N). The default when Q is
      small (the common "probe set vs corpus" shape).
-  2. **LSH-bucketed path** (`lsh_buckets`, `topk_lsh`): random-hyperplane
-     signs → bucket key; candidates restricted to the query's bucket. The
-     100 TB path: bucketing is per-row math, the join is an equi-join on the
-     bucket key (shuffle both sides by bucket, no cross product). Hyperplanes
-     are md5-derived (deterministic, engine-portable, seed-free).
+  2. **LSH-bucketed path** (`lsh_bucket_tables_np`, `topk_lsh`):
+     random-hyperplane signs → bucket key; candidates restricted to the
+     query's buckets. The 100 TB path: bucketing is one scan of per-batch
+     BLAS, the join is an equi-join on the bucket key (shuffle both sides by
+     bucket, no cross product). Hyperplanes are md5-derived (deterministic,
+     engine-portable, seed-free); `sign_lsh_bucket_ctes` replays the same
+     buckets in DuckDB.
   3. **Vectorized pandas path** (`topk_numpy`): mapInPandas + NumPy matmul
      against a broadcast query matrix — Arrow-batched, BLAS throughput when
      the expression path's per-element codegen becomes the bottleneck (wide
      vectors × many queries).
 
-All three return the same neighbors (asserted in tests); strategy 1 and 2 are
-oracle-checked end-to-end.
+Strategies 1 and 3 return the same neighbors
+(``test_numpy_path_equals_expression_path``); strategy 2's recall against 1
+is asserted (``test_lsh_topk_recall_vs_bruteforce``). All three back
+registered queries that are oracle-checked end-to-end (``sim_topk_bruteforce``,
+``sim_topk_lsh``, ``sim_topk_vectorized``).
 """
 
 from __future__ import annotations
@@ -33,12 +38,10 @@ from pyspark.sql import functions as F
 from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity_col,
-    dot_col,
     norm_col,
 )
 
 DIM = 64
-N_PLANES = 4
 # Multi-table LSH defaults: L tables × k planes. One table of k bits has
 # per-neighbor hit probability (1 - θ/π)^k — too lossy alone; L independent
 # tables lift recall to 1 - (1 - p^k)^L while each table's bucket join still
@@ -93,25 +96,48 @@ def sign_bits(dots):
     margins), so a bit never rests on the summation order: a true zero
     computes as -4.4e-16 or 0.0 depending on how many rows share the BLAS
     call.
-    Every |dot| < 5e-7, an exact tie included, is bit 1; the JVM paths and
-    the SQL oracles apply the same rule."""
+    Every |dot| < 5e-7, an exact tie included, is bit 1; the SQL oracles
+    apply the same rule through ``sign_lsh_bucket_ctes``."""
     import numpy as np
 
     return np.where(np.round(dots, 6) >= 0, "1", "0")
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES, vec_col: str = "embedding") -> DataFrame:
-    """Add a sign-LSH ``bucket`` column ('0'/'1' per plane, concatenated).
+def sign_lsh_bucket_ctes(n_planes: int | str, planes_per_table: int | str) -> str:
+    """DuckDB ``planes``, ``dots`` and ``buckets`` CTEs that replay the home
+    buckets of ``lsh_bucket_tables_np`` bit-for-bit over a
+    ``norms(vec_id, embedding)`` CTE — the SQL side of ``hyperplane`` and
+    ``sign_bits``, shared by every sign-LSH oracle.
 
-    Per-row expression math — bucketing 100 TB of vectors costs one scan, no
-    shuffle."""
-    emb = non_null_vectors(emb, vec_col)
-    bits = []
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(s) for s in hyperplane(j)])
-        dot = dot_col(F.col(vec_col), plane)
-        bits.append(F.when(F.round(dot, 6) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return emb.withColumn("bucket", F.concat(*bits))
+    Returned as a ``,``-led fragment to append after the caller's ``WITH``;
+    the caller adds its own candidate/probe CTEs on ``buckets`` (and on
+    ``dots`` for margin-directed probes).  Both arguments are SQL
+    expressions: an int, or a scalar subquery such as
+    ``(SELECT k FROM params)`` for the auto-sized width.  DuckDB's
+    generate_series takes only constant bounds, so the plane family is a
+    fixed superset (j < 240: 6 tables of up to 40 planes) filtered to
+    the ``n_planes`` in play.  No SQL comments: registration collapses
+    whitespace, so ``--`` would comment out the rest."""
+    return f""",
+    planes AS (
+        SELECT j.j AS j, d.d AS d,
+               CASE WHEN (strpos('0123456789abcdef',
+                                 substr(md5('p' || j.j || ':' || d.d), 1, 1)) - 1) % 2 = 0
+                    THEN 1.0 ELSE -1.0 END AS s
+        FROM generate_series(0, 239) j(j), generate_series(0, {DIM - 1}) d(d)
+        WHERE j.j < {n_planes}
+    ),
+    dots AS (
+        SELECT n.vec_id, p.j,
+               SUM(CAST(n.embedding[p.d + 1] AS DOUBLE) * p.s) AS dot
+        FROM norms n, planes p
+        GROUP BY n.vec_id, p.j
+    ),
+    buckets AS (
+        SELECT vec_id, j // {planes_per_table} AS tbl,
+               string_agg(CASE WHEN ROUND(dot, 6) >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
+        FROM dots GROUP BY vec_id, j // {planes_per_table}
+    )"""
 
 
 def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -166,13 +192,15 @@ def semantic_pairs_lsh(
     size of the duplicate clusters, not N².  Approximate with measured
     recall (tests assert 1.0 on the fixture; see parameter note above).
 
-    Bucketing takes the NumPy/Arrow path: at 16×3 = 48 planes the
-    expression formulation blows janino's 64 KB codegen limit and falls
-    back to interpreted eval (~10× slower, measured) — see
-    ``lsh_bucket_tables_np``; the two paths are differential-tested."""
+    Bucketing is ``lsh_bucket_tables_np`` (per-batch BLAS; 48 planes of
+    expression math would blow janino's 64 KB codegen limit), and the
+    ``sim_cosine_pairs`` / ``dedup_embedding_cosine`` oracles replay its
+    buckets in SQL."""
     import numpy as np
 
-    bucketed = lsh_bucket_tables_np(emb, n_tables, planes_per_table, id_col, vec_col).persist()
+    bucketed = lsh_bucket_tables_np(
+        emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col
+    ).persist()
     a = bucketed.select(
         F.col(id_col).alias("vec_a"), F.col("tbl").alias("_ta"), F.col("bucket").alias("_ba")
     )
@@ -264,106 +292,77 @@ def topk_bruteforce(
     )
 
 
-def lsh_bucket_tables(
-    emb: DataFrame,
-    n_tables: int = N_TABLES,
-    planes_per_table: int = PLANES_PER_TABLE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, table, bucket) rows for multi-table sign-LSH.
-
-    Table t uses planes t·k … t·k+k-1 from the shared md5-derived family.
-    Per-row expression math + one posexplode — no shuffle; at 100 TB this is
-    one scan emitting L small rows per vector.
-
-    Physical shape (both measured at sf0.1): plane signs are plan-time
-    literals folded into ±vec[i] terms (indexing a rebuilt array literal per
-    term is 10× slower), and the L·k·dim-term dot computation is split into
-    CHUNK-term partial-sum columns materialized behind a persist barrier —
-    one monolithic projection exceeds the JVM's JIT method limit and runs as
-    interpreted bytecode (~60× slower); the barrier is required because
-    Catalyst's CollapseProject would otherwise merge the stages back."""
-    CHUNK = 16
-    vec = F.col(vec_col)
-    dim = len(hyperplane(0))
-    n_planes = n_tables * planes_per_table
-    chunk_cols = []
-    for p in range(n_planes):
-        signs = hyperplane(p)
-        for c in range(0, dim, CHUNK):
-            expr = None
-            for i in range(c, min(c + CHUNK, dim)):
-                term = vec[i].cast("double") if signs[i] > 0 else -vec[i].cast("double")
-                expr = term if expr is None else expr + term
-            chunk_cols.append(expr.alias(f"_p{p}_c{c}"))
-    stage1 = emb.select(F.col(id_col), *chunk_cols).persist()
-    per_table = []
-    for t in range(n_tables):
-        bits = []
-        for j in range(planes_per_table):
-            p = t * planes_per_table + j
-            dot = None
-            for c in range(0, dim, CHUNK):
-                col = F.col(f"_p{p}_c{c}")
-                dot = col if dot is None else dot + col
-            bits.append(F.when(F.round(dot, 6) >= 0, F.lit("1")).otherwise(F.lit("0")))
-        per_table.append(F.concat(*bits))
-    return stage1.select(
-        F.col(id_col), F.posexplode(F.array(*per_table)).alias("tbl", "bucket")
-    )
-
-
 def lsh_bucket_tables_np(
     emb: DataFrame,
     n_tables: int = N_TABLES,
     planes_per_table: int = PLANES_PER_TABLE,
+    n_probes: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, table, bucket) rows for multi-table sign-LSH via mapInPandas +
-    one NumPy matmul per Arrow batch — same bucket decisions as
-    ``lsh_bucket_tables`` (differential-tested), different physical path.
+    one NumPy matmul per Arrow batch — the package's one bucketing kernel.
 
-    Why it exists: the expression formulation materializes P×(dim/CHUNK)
-    partial-sum columns; at P = 48 planes the projection exceeds janino's
-    64 KB method limit ("Code grows beyond 64 KB"), whole-stage codegen
-    bails, and the interpreted fallback is ~10× slower — measured here.  A
-    (batch × dim) @ (dim × P) BLAS matmul is one Arrow round-trip of
-    (id, vec) and no codegen at all; it is also the only shape that stays
-    viable at real embedding widths (768-4096 dims), where the expression
-    tree would be 50× larger still.  Per-batch memory is O(batch × P) —
-    constant in corpus size, so the 100 TB posture is unchanged: one scan,
-    no shuffle, L small rows out per vector.
+    Table t uses planes t·k … t·k+k-1 from the md5 family of ``hyperplane``.
+    A (batch × dim) @ (dim × P) BLAS matmul is one Arrow round-trip of
+    (id, vec) and no codegen at all, so there is no janino 64 KB method
+    limit to hit at 48 planes, and the shape stays viable at real embedding
+    widths (768-4096 dims).  Per-batch memory is O(batch × P) — constant in
+    corpus size, so the 100 TB posture is one scan, no shuffle, L·(1+T)
+    small rows out per vector.
+
+    ``n_probes=T > 0`` adds QUERY-DIRECTED multiprobe (Lv et al., VLDB 2007,
+    §4): per (vector, table), besides the home bucket, the ``T`` single-bit
+    flips (clamped to k) whose plane margin |dot| is SMALLEST — the planes
+    the vector sits closest to, i.e. the flips a true neighbor is most
+    likely to land behind.  Against blind Hamming-1 (all k flips) this fixes
+    the probe budget at T per table regardless of k, so the candidate bound
+    is Θ(L·T·B) per query — CONSTANT in corpus size under auto-k's
+    occupancy-B rule.  ``n_probes=0`` emits the home buckets only and skips
+    the margin sort.
 
     Determinism contract: each bit is ``sign_bits``, ``round(dot, 6) >= 0``,
     so a vector's buckets do not depend on which rows share its Arrow batch
-    (the matmul's summation order does), and an exact tie is bit 1."""
+    (the matmul's summation order does), and an exact tie is bit 1.  Probe
+    margins take the same 6-place quantization before a stable argsort, so
+    ties break on plane index and ``sign_lsh_bucket_ctes`` plus ROW_NUMBER()
+    OVER (ORDER BY ROUND(ABS(dot), 6), j) replays the probe CHOICE in SQL."""
     import numpy as np
 
     emb = non_null_vectors(emb, vec_col)
-    n_planes = n_tables * planes_per_table
-    signs = np.array([hyperplane(p) for p in range(n_planes)], dtype=np.float64)  # (P, dim)
-    tbl_idx = np.arange(n_tables, dtype=np.int32)
+    k = planes_per_table
+    t_probes = min(n_probes, k)
+    signs = np.array([hyperplane(p) for p in range(n_tables * k)], dtype=np.float64)  # (P, dim)
+    tbl_idx = np.repeat(np.arange(n_tables, dtype=np.int32), 1 + t_probes)
+
+    def joined(bits):  # (B, L, k) of '1'/'0' -> (B, L) bucket strings
+        out = bits[..., 0]
+        for j in range(1, k):
+            out = np.char.add(out, bits[..., j])
+        return out
 
     def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)  # (B, dim)
-            bits = sign_bits(mat @ signs.T)  # (B, P) of '1'/'0'
-            buckets = []
-            for t in range(n_tables):
-                b = bits[:, t * planes_per_table]
-                for j in range(1, planes_per_table):
-                    b = np.char.add(b, bits[:, t * planes_per_table + j])
-                buckets.append(b)
+            dots = (np.array(list(pdf[vec_col]), dtype=np.float64) @ signs.T).reshape(
+                len(ids), n_tables, k
+            )
+            bits = sign_bits(dots)
+            variants = [joined(bits)]
+            if t_probes:
+                flipped = np.where(bits == "1", "0", "1")
+                # stable argsort on the quantized margins == (round6, j)
+                order = np.argsort(np.round(np.abs(dots), 6), axis=2, kind="stable")
+                for r in range(t_probes):
+                    flip = np.arange(k) == order[..., r : r + 1]
+                    variants.append(joined(np.where(flip, flipped, bits)))
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(ids, n_tables),
+                    id_col: np.repeat(ids, len(tbl_idx)),
                     "tbl": np.tile(tbl_idx, len(ids)),
-                    "bucket": np.stack(buckets, axis=1).ravel(),
+                    "bucket": np.stack(variants, axis=2).ravel(),
                 }
             )
 
@@ -389,19 +388,21 @@ def topk_lsh(
     candidate pairs before rerank so each pair's cosine is computed once.
     Recall vs brute force is asserted in tests.
 
-    ``buckets``: a prebuilt (persisted) ``lsh_bucket_tables`` frame — the
-    bucketing is query-set independent, so consumers probing the same corpus
-    with different query sets (the registered top-k query, the recall
-    report) should build it once and pass it in."""
+    ``buckets``: a prebuilt (persisted) ``lsh_bucket_tables_np`` frame —
+    the bucketing is query-set independent, so consumers probing the same
+    corpus with different query sets (the registered top-k query, the
+    recall report) should build it once and pass it in."""
     from pyspark.sql import Window
 
-    # Persisted: the bucket projection (L×k plane dots per row) feeds both
-    # join sides — without reuse it is evaluated twice (no cross-DAG subplan
-    # dedup in Spark; same finding as operators/dedup.py).
+    # Persisted: the bucket frame feeds both join sides — without reuse it
+    # is evaluated twice (no cross-DAG subplan dedup in Spark; same finding
+    # as operators/dedup.py).
     bucketed = (
         buckets
         if buckets is not None
-        else lsh_bucket_tables(emb, n_tables, planes_per_table, id_col, vec_col).persist()
+        else lsh_bucket_tables_np(
+            emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col
+        ).persist()
     )
     q = bucketed.filter(F.col(id_col) < query_ids_below).select(
         F.col(id_col).alias("query_id"), F.col("tbl").alias("_qt"), F.col("bucket").alias("_qb")
@@ -710,89 +711,6 @@ def dequantized(
     )
 
 
-def lsh_directed_probes_np(
-    emb: DataFrame,
-    n_tables: int = N_TABLES,
-    planes_per_table: int = PLANES_PER_TABLE,
-    n_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """QUERY-DIRECTED multiprobe (Lv et al., VLDB 2007, §4): per (vector,
-    table), emit the home bucket plus the ``n_probes`` single-bit flips
-    whose plane margin |dot| is SMALLEST — the planes the vector sits
-    closest to, i.e. the flips a true neighbor is most likely to land
-    behind.  Against blind Hamming-1 (all k flips) this fixes the probe
-    budget at T per table regardless of k, so the candidate bound is
-    Θ(L·T·B) per query — CONSTANT in corpus size under auto-k's
-    occupancy-B rule, while blind multiprobe's (1+k) factor still grows
-    logarithmically.
-
-    Determinism contract (the cross-engine replay rule every ranking in
-    this package follows): margins are quantized to 6 places before the
-    argsort and ties break on plane index, so the DuckDB oracle reproduces
-    the probe CHOICE bit-for-bit with ROW_NUMBER() OVER (ORDER BY
-    ROUND(ABS(dot), 6), j).  The home bits take the same quantization
-    before their sign (``sign_bits``: ``round(dot, 6) >= 0``, an exact tie
-    is bit 1), so neither the home bucket nor the probes depend on which
-    rows share the vector's Arrow batch.  Same Arrow/NumPy physical path as
-    ``lsh_bucket_tables_np``: one matmul per batch, O(batch × P) memory,
-    L·(1+T) small rows out per vector."""
-    import numpy as np
-
-    emb = non_null_vectors(emb, vec_col)
-    k = planes_per_table
-    t_probes = min(n_probes, k)
-    n_planes = n_tables * k
-    signs = np.array([hyperplane(p) for p in range(n_planes)], dtype=np.float64)
-
-    def per_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            dots = mat @ signs.T  # (B, P)
-            bits = sign_bits(dots)
-            nb = len(ids)
-            out_ids, out_tbl, out_bucket = [], [], []
-            for t in range(n_tables):
-                d_t = dots[:, t * k : (t + 1) * k]
-                b_t = bits[:, t * k : (t + 1) * k]
-
-                def joined(b):
-                    s = b[:, 0]
-                    for j in range(1, k):
-                        s = np.char.add(s, b[:, j])
-                    return s
-
-                home = joined(b_t)
-                out_ids.append(ids)
-                out_tbl.append(np.full(nb, t, dtype=np.int32))
-                out_bucket.append(home)
-                # stable argsort on the quantized margins == (round6, j)
-                order = np.argsort(np.round(np.abs(d_t), 6), axis=1, kind="stable")
-                for r in range(t_probes):
-                    pos = order[:, r]
-                    flipped = b_t.copy()
-                    cur = flipped[np.arange(nb), pos]
-                    flipped[np.arange(nb), pos] = np.where(cur == "1", "0", "1")
-                    out_ids.append(ids)
-                    out_tbl.append(np.full(nb, t, dtype=np.int32))
-                    out_bucket.append(joined(flipped))
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_ids),
-                    "tbl": np.concatenate(out_tbl),
-                    "bucket": np.concatenate(out_bucket),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(
-        per_batch, schema=f"{id_col} long, tbl int, bucket string"
-    )
-
-
 def hamming1_probes(
     buckets: DataFrame, planes_per_table: int, id_col: str = "vec_id"
 ) -> DataFrame:
@@ -872,8 +790,8 @@ def nn_join_lsh(
     trading one for the other (SCALING.md round 10).
 
     ``query_probes``: a prebuilt (id, tbl, bucket) PROBE frame for the
-    query side (e.g. :func:`lsh_directed_probes_np`'s margin-directed
-    family) — replaces the query slice of ``buckets`` entirely; the index
+    query side (e.g. :func:`lsh_bucket_tables_np`'s margin-directed
+    ``n_probes`` family) — replaces the query slice of ``buckets`` entirely; the index
     side still joins from the unexpanded bucket frame."""
     bucketed = (
         buckets

@@ -22,7 +22,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -105,9 +105,3 @@ def interval_join_binned(
         (F.col(point_ts) >= F.col(start_ts)) & (F.col(point_ts) <= F.col(end_ts))
     ).drop("_bin")
 
-
-def lead_lag_gap(df: DataFrame, on: str, ts: str = "ts") -> Column:
-    """Seconds since the previous row in the same key partition (null for the
-    first) — building block shared by sessionize and as-of diagnostics."""
-    w = Window.partitionBy(on).orderBy(ts)
-    return F.unix_timestamp(F.col(ts)) - F.unix_timestamp(F.lag(ts).over(w))

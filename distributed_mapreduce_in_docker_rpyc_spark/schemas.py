@@ -1,9 +1,10 @@
-"""Explicit StructType schemas for every engine table (FIXTURES.md).
+"""The engine's table names and its word-count result schema.
 
 The reference's schema system is fixed-and-implicit — ``str`` keys and ``int``
 counts hardcoded in the map/reduce bodies (reference worker/worker.py:21,31).
-Here every table gets an explicit schema so scans never pay inference and
-readers can column-prune (ReadSchema in the physical plan).
+Here the word-count result carries an explicit schema.  The fixture tables
+(FIXTURES.md) are read with Parquet's embedded schema: ``load_table`` passes
+none, so Spark infers it from the file footers.
 """
 
 from __future__ import annotations
@@ -18,121 +19,16 @@ WORD_COUNT = T.StructType(
     ]
 )
 
-REGION = T.StructType(
-    [
-        T.StructField("r_regionkey", T.IntegerType(), False),
-        T.StructField("r_name", T.StringType(), False),
-    ]
+# The ten fixture tables ``sources.tables.load_table`` knows.
+TABLES: tuple[str, ...] = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
 )
-
-NATION = T.StructType(
-    [
-        T.StructField("n_nationkey", T.IntegerType(), False),
-        T.StructField("n_name", T.StringType(), False),
-        T.StructField("n_regionkey", T.IntegerType(), False),
-    ]
-)
-
-CUSTOMER = T.StructType(
-    [
-        T.StructField("c_custkey", T.LongType(), False),
-        T.StructField("c_name", T.StringType(), False),
-        T.StructField("c_nationkey", T.IntegerType(), False),
-        T.StructField("c_acctbal", T.DoubleType(), False),
-        T.StructField("c_mktsegment", T.StringType(), False),
-    ]
-)
-
-SUPPLIER = T.StructType(
-    [
-        T.StructField("s_suppkey", T.LongType(), False),
-        T.StructField("s_name", T.StringType(), False),
-        T.StructField("s_nationkey", T.IntegerType(), False),
-        T.StructField("s_acctbal", T.DoubleType(), False),
-    ]
-)
-
-PART = T.StructType(
-    [
-        T.StructField("p_partkey", T.LongType(), False),
-        T.StructField("p_name", T.StringType(), False),
-        T.StructField("p_brand", T.StringType(), False),
-        T.StructField("p_type", T.StringType(), False),
-        T.StructField("p_size", T.IntegerType(), False),
-        T.StructField("p_retailprice", T.DoubleType(), False),
-    ]
-)
-
-ORDERS = T.StructType(
-    [
-        T.StructField("o_orderkey", T.LongType(), False),
-        T.StructField("o_custkey", T.LongType(), False),
-        T.StructField("o_orderstatus", T.StringType(), False),
-        T.StructField("o_totalprice", T.DoubleType(), False),
-        T.StructField("o_orderdate", T.TimestampType(), False),
-        T.StructField("o_orderpriority", T.StringType(), False),
-    ]
-)
-
-LINEITEM = T.StructType(
-    [
-        T.StructField("l_orderkey", T.LongType(), False),
-        T.StructField("l_partkey", T.LongType(), False),
-        T.StructField("l_suppkey", T.LongType(), False),
-        T.StructField("l_linenumber", T.IntegerType(), False),
-        T.StructField("l_quantity", T.DoubleType(), False),
-        T.StructField("l_extendedprice", T.DoubleType(), False),
-        T.StructField("l_discount", T.DoubleType(), False),
-        T.StructField("l_tax", T.DoubleType(), False),
-        T.StructField("l_returnflag", T.StringType(), False),
-        T.StructField("l_linestatus", T.StringType(), False),
-        T.StructField("l_shipdate", T.TimestampType(), False),
-    ]
-)
-
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-TABLES: dict[str, T.StructType] = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}
-
-# Dimension tables small enough to broadcast at ANY scale factor (they grow
-# sub-linearly or are bounded: 5 regions, 25 nations always).  Used by the
-# operator library to pick broadcast joins explicitly.
-BROADCAST_SAFE = {"region", "nation"}

@@ -286,10 +286,6 @@ SESSION_STATE = StructType(
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
-def _us(ts) -> int:
-    return int(ts.value // 1000) if hasattr(ts, "value") else int(ts)
-
-
 def _fmt(us: int) -> str:
     return pd.Timestamp(us * 1000).strftime("%Y-%m-%d %H:%M:%S.%f")
 

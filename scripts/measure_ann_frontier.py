@@ -55,7 +55,7 @@ def main() -> int:
             ("auto-k + directed T=2", "directed"),
         ):
             if probe == "directed":
-                qside = sim.lsh_directed_probes_np(
+                qside = sim.lsh_bucket_tables_np(
                     nn.filter(F.col("vec_id") % 17 == 3),
                     n_tables=sim.N_TABLES,
                     planes_per_table=k,

@@ -212,17 +212,45 @@ def test_int8_quantization_error_bound_and_recall(spark, sf_dir):
     assert row.mean_recall_at_10 >= 0.9
 
 
-def test_lsh_bucketing_np_equals_expression_path(spark, sf_dir):
-    """The NumPy/Arrow bucketing must make bit-identical bucket decisions to
-    the expression path for BOTH plane families (6×3 top-k, 16×3 dedup) —
-    it is the production path (the 48-plane expression projection exceeds
-    janino's 64 KB codegen limit), and every LSH oracle replicates the
-    expression math in SQL, so the two must agree everywhere."""
+def test_lsh_bucketing_np_equals_sql_oracle(spark, sf_dir):
+    """The NumPy bucketing kernel must make the bucket decisions every
+    sign-LSH oracle replays in SQL (``sim.sign_lsh_bucket_ctes``): the home
+    buckets for BOTH plane families (6×3 top-k, 16×3 dedup) over the whole
+    corpus, and the ``n_probes=2`` directed-probe family of the auto-k ANN
+    join's query slice against that oracle's ``qprobes`` CTE."""
+    from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_similarity import (
+        _COSINE_CTES,
+        _ann_auto_k_ctes,
+    )
+    from tests.oracle import duckdb_conn
+
+    con = duckdb_conn(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    for n_tables, k in ((sim.N_TABLES, sim.PLANES_PER_TABLE), (16, 3)):
-        expr = {tuple(r) for r in sim.lsh_bucket_tables(emb, n_tables, k).collect()}
-        np_ = {tuple(r) for r in sim.lsh_bucket_tables_np(emb, n_tables, k).collect()}
-        assert np_ == expr and expr
+    for n_tables, k in (
+        (sim.N_TABLES, sim.PLANES_PER_TABLE),
+        (sim.DEDUP_N_TABLES, sim.DEDUP_PLANES_PER_TABLE),
+    ):
+        sql = _COSINE_CTES + sim.sign_lsh_bucket_ctes(n_tables * k, k) + (
+            " SELECT vec_id, tbl, bucket FROM buckets"
+        )
+        want = sorted(con.execute(sql).fetchall())
+        got = sorted(tuple(r) for r in sim.lsh_bucket_tables_np(emb, n_tables, k).collect())
+        assert got == want and want
+
+    k = sim.auto_planes_per_table(
+        sim.non_null_vectors(emb, "embedding").filter(F.col("vec_id") % 17 != 3).count()
+    )
+    sql = _COSINE_CTES + _ann_auto_k_ctes(directed_probes=2) + (
+        " SELECT vec_id, tbl, bucket FROM qprobes"
+    )
+    want = sorted(con.execute(sql).fetchall())
+    got = sorted(
+        tuple(r)
+        for r in sim.lsh_bucket_tables_np(
+            emb.filter(F.col("vec_id") % 17 == 3), sim.N_TABLES, k, n_probes=2
+        ).collect()
+    )
+    assert got == want and want
 
 
 def test_numpy_path_equals_expression_path(spark, sf_dir):
@@ -1723,29 +1751,31 @@ def test_multiprobe_dominates_plain_auto_k(spark, sf_dir):
     assert directed["n_candidates"] <= multi["n_candidates"]
 
 
+# Eight vectors whose coordinates are multiples of 1/6: every plane dot is
+# n/6 exactly, and vector 6's dot on plane 2 is an exact zero — the sign-LSH
+# tie that an unquantized float sign decides by summation order.
+_SIXTHS_ROWS = [
+    (i, [((i * 31 + d * 7) % 13 - 6) / 6.0 for d in range(64)]) for i in range(1, 9)
+]
+
+
 def test_directed_probes_pick_smallest_margin_planes(spark):
-    """lsh_directed_probes_np's probe CHOICE must equal the spec: per
-    (vector, table), flip exactly the T planes with the smallest
+    """lsh_bucket_tables_np's probe CHOICE (``n_probes``) must equal the
+    spec: per (vector, table), flip exactly the T planes with the smallest
     quantized |dot| (ties on plane index) — recomputed independently here
     with the same md5 hyperplanes in plain NumPy."""
     import numpy as np
 
-    from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
-
-    rng_rows = [
-        (i, [((i * 31 + d * 7) % 13 - 6) / 6.0 for d in range(64)])
-        for i in range(1, 9)
-    ]
-    emb = spark.createDataFrame(rng_rows, "vec_id long, embedding array<double>")
+    emb = spark.createDataFrame(_SIXTHS_ROWS, "vec_id long, embedding array<double>")
     k, n_tables, t_probes = 4, 3, 2
-    got = sim.lsh_directed_probes_np(
+    got = sim.lsh_bucket_tables_np(
         emb, n_tables=n_tables, planes_per_table=k, n_probes=t_probes
     ).collect()
     by_key = {}
     for r in got:
         by_key.setdefault((r["vec_id"], r["tbl"]), []).append(r["bucket"])
     signs = np.array([sim.hyperplane(p) for p in range(n_tables * k)])
-    for vid, vec in rng_rows:
+    for vid, vec in _SIXTHS_ROWS:
         dots = np.asarray(vec) @ signs.T
         bits = np.where(np.round(dots, 6) >= 0, "1", "0")
         for t in range(n_tables):
@@ -1765,29 +1795,65 @@ def test_directed_probes_pick_smallest_margin_planes(spark):
 
 def test_sign_lsh_buckets_do_not_depend_on_arrow_batching(spark):
     """A vector's sign-LSH buckets and probes are a function of the vector
-    alone, not of which rows share its Arrow batch.  The fixture's dots are
-    multiples of 1/6, and vector 6 has an exact-zero dot on plane 2, whose
-    unquantized float sign differs between a 1-row and an 8-row matmul."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
-
-    rows = [
-        (i, [((i * 31 + d * 7) % 13 - 6) / 6.0 for d in range(64)])
-        for i in range(1, 9)
-    ]
+    alone, not of which rows share its Arrow batch: vector 6's exact-zero
+    dot on plane 2 has an unquantized float sign that differs between a
+    1-row and an 8-row matmul."""
     schema = "vec_id long, embedding array<double>"
-    one_batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    one_row_batches = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    one_batch = spark.createDataFrame(spark.sparkContext.parallelize(_SIXTHS_ROWS, 1), schema)
+    one_row_batches = spark.createDataFrame(
+        spark.sparkContext.parallelize(_SIXTHS_ROWS, 8), schema
+    )
     sizes = one_row_batches.groupBy(F.spark_partition_id()).count().collect()
     assert sorted(r["count"] for r in sizes) == [1] * 8
-    for bucketing in (
-        lambda e: sim.lsh_bucket_tables_np(e, n_tables=3, planes_per_table=4),
-        lambda e: sim.lsh_directed_probes_np(e, n_tables=3, planes_per_table=4),
-    ):
-        whole = sorted(tuple(r) for r in bucketing(one_batch).collect())
-        split = sorted(tuple(r) for r in bucketing(one_row_batches).collect())
+    for n_probes in (0, 2):
+        whole, split = (
+            sorted(
+                tuple(r)
+                for r in sim.lsh_bucket_tables_np(
+                    e, n_tables=3, planes_per_table=4, n_probes=n_probes
+                ).collect()
+            )
+            for e in (one_batch, one_row_batches)
+        )
         assert whole == split
+
+
+def test_sign_lsh_sql_oracle_takes_the_same_tie_rule():
+    """The SQL side of the tie (no Spark): the oracles' bucket CTEs, run in
+    DuckDB over the 1/6-grid fixture, must give the buckets of
+    ``sign_bits(mat @ signs.T)`` — vector 6's exact zero on plane 2 is bit 1
+    on both sides."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    n_tables, k = 3, 4
+    mat = np.array([v for _, v in _SIXTHS_ROWS])
+    signs = np.array([sim.hyperplane(p) for p in range(n_tables * k)])
+    dots = mat @ signs.T
+    assert np.round(dots[5, 2], 6) == 0  # the tie is in the fixture
+    bits = sim.sign_bits(dots)
+    want = sorted(
+        (vid, t, "".join(bits[i, t * k : (t + 1) * k]))
+        for i, (vid, _) in enumerate(_SIXTHS_ROWS)
+        for t in range(n_tables)
+    )
+    con = duckdb.connect()
+    con.register(
+        "emb",
+        pa.table(
+            {
+                "vec_id": pa.array([vid for vid, _ in _SIXTHS_ROWS], pa.int64()),
+                "embedding": pa.array([v for _, v in _SIXTHS_ROWS], pa.list_(pa.float64())),
+            }
+        ),
+    )
+    sql = (
+        "WITH norms AS (SELECT vec_id, embedding FROM emb)"
+        + sim.sign_lsh_bucket_ctes(n_tables * k, k)
+        + " SELECT vec_id, tbl, bucket FROM buckets"
+    )
+    assert sorted(con.execute(sql).fetchall()) == want
 
 
 def test_packed_write_layout_contract(spark, tmp_path):
@@ -1937,7 +2003,7 @@ def test_directed_probes_clamp_to_k(spark):
     out-of-range flip index."""
     rows = [(i, [((i * 13 + d) % 7 - 3) / 3.0 for d in range(64)]) for i in range(1, 5)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = sim.lsh_directed_probes_np(
+    got = sim.lsh_bucket_tables_np(
         emb, n_tables=2, planes_per_table=2, n_probes=5
     ).collect()
     by_key = {}
