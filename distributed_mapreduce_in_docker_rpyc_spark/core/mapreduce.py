@@ -7,8 +7,14 @@ The reference hardcodes a single (map, reduce) pair behind an RPC dispatch
 reduce dispatch → merge).  Spark's RDD API *is* that architecture, made
 general:
 
-  - map tasks           → ``rdd.flatMap(map_fn)``                 (OP-5/6)
-  - map-side combiner   → ``reduceByKey``'s partial aggregation   (OP-7)
+  - map tasks           → ``rdd.mapPartitions(map_fn)``: like the reference's
+                          map task, which takes a whole chunk, ``map_fn``
+                          takes a whole partition                 (OP-5/6)
+  - map-side combiner   → the map function's own in-mapper combining (the
+                          word count counts each partition into one
+                          ``Counter``, as worker/worker.py:15-18 counts each
+                          chunk), then ``reduceByKey``'s partial
+                          aggregation of the pairs it emits        (OP-7)
   - MD5 hash partition  → ``HashPartitioner(num_partitions)``     (OP-8; MD5 vs
                           Murmur3 changes placement, never results — SURVEY §2.1)
   - coordinator shuffle → Spark's distributed shuffle             (OP-9)
@@ -40,17 +46,20 @@ T = TypeVar("T")
 
 def run_mapreduce(
     rdd: RDD,
-    map_fn: Callable[[T], Iterable[tuple[K, V]]],
+    map_fn: Callable[[Iterable[T]], Iterable[tuple[K, V]]],
     reduce_fn: Callable[[V, V], V],
     num_partitions: int | None = None,
 ) -> RDD:
-    """Run a classic MapReduce job: flatMap to KV pairs, combine map-side,
-    shuffle by key hash, reduce per key.
+    """Run a classic MapReduce job: map each partition to KV pairs, combine
+    map-side, shuffle by key hash, reduce per key.
+
+    ``map_fn`` receives one partition's iterator of records and returns its
+    KV pairs, so it can pre-aggregate the partition before the shuffle.
 
     ``num_partitions`` is the reference's ``NUM_REDUCERS``
     (coordinator/coordinator.py:11; image default 3, coordinator/Dockerfile:8).
     Results are independent of it — asserted by
     tests/test_wordcount.py::test_partition_count_invariance.
     """
-    return rdd.flatMap(map_fn).reduceByKey(reduce_fn, numPartitions=num_partitions)
+    return rdd.mapPartitions(map_fn).reduceByKey(reduce_fn, num_partitions)
 

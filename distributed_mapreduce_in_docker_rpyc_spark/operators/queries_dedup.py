@@ -176,13 +176,7 @@ _DEDUP_BUCKET_CTES = sim.sign_lsh_bucket_ctes(
 
 @register(
     "dedup_embedding_cosine",
-    oracle="""
-    WITH norms AS (
-        SELECT vec_id, embedding,
-               sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
-                     FROM generate_series(1, 64) g(i))) AS nrm
-        FROM embeddings
-    )"""
+    oracle=sim.COSINE_CTES
     + _DEDUP_BUCKET_CTES
     + """,
     pairs AS (

@@ -138,19 +138,9 @@ def _ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
     return shared(spark, ("ivf_index", sf_dir), build)
 
-_COSINE_CTES = """
-    WITH norms AS (
-        SELECT vec_id, embedding,
-               sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
-                     FROM generate_series(1, 64) g(i))) AS nrm
-        FROM embeddings
-    )
-"""
-
-
 @register(
     "sim_cosine_pairs",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _DEDUP_BUCKET_CTES
     + """
     SELECT c.vec_a, c.vec_b,
@@ -191,7 +181,7 @@ def _brute_topk_select(nq: int, k: int = 10) -> str:
 
 _BRUTE_TOPK_SELECT = _brute_topk_select(5)
 
-_TOPK_BRUTE_ORACLE = _COSINE_CTES + _BRUTE_TOPK_SELECT
+_TOPK_BRUTE_ORACLE = sim.COSINE_CTES + _BRUTE_TOPK_SELECT
 
 
 @register("sim_topk_bruteforce", oracle=_TOPK_BRUTE_ORACLE)
@@ -241,7 +231,7 @@ _LSH_TOPK_SELECT = """
 """
 
 
-@register("sim_topk_lsh", oracle=_COSINE_CTES + _LSH_CAND_CTES + _LSH_TOPK_SELECT)
+@register("sim_topk_lsh", oracle=sim.COSINE_CTES + _LSH_CAND_CTES + _LSH_TOPK_SELECT)
 def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN: multi-table sign-LSH (6 tables × 3 md5-derived
     hyperplanes) pruning candidates, exact-cosine rerank — the 100 TB path."""
@@ -255,7 +245,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_lsh_recall",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _LSH_CAND_CTES
     + f""",
     lsh AS ({_LSH_TOPK_SELECT}),
@@ -396,7 +386,7 @@ def _ivf_ctes(nq: int, n_probe: int = 4, k: int = 10, n_centroids: int = 16) -> 
 
 @register(
     "sim_topk_ivf",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ivf_ctes(5)
     + "SELECT query_id, neighbor_id, sim, rank FROM ivf",
 )
@@ -517,7 +507,7 @@ def _recall_cte(method: str, approx: str, k: int) -> str:
 
 @register(
     "sim_ann_recall_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _lsh_cand_ctes(50)
     + _ivf_ctes(50)
     + f""",
@@ -782,7 +772,7 @@ def _hybrid_oracle() -> str:
     )
 
     return (
-        _COSINE_CTES
+        sim.COSINE_CTES
         + ","
         + BM25_ORACLE_CTES
         + f""",
@@ -1120,7 +1110,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_kmeans_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ivf_ctes(5)
     + """,
     final_d2 AS (
@@ -1390,7 +1380,7 @@ _SIL_EXPR = (
 
 @register(
     "emb_silhouette",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ivf_ctes(5)
     + f""",
     sil_d2 AS (
@@ -1491,7 +1481,7 @@ _MMR_DOT = (
 
 @register(
     "sim_mmr_diversify",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + ",\n    cand AS ("
     + _brute_topk_select(5)
     + """),
@@ -2000,7 +1990,7 @@ def _pq_trained(spark: SparkSession, sf_dir: str):
 
 @register(
     "search_ndcg_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + ",\n    cand AS ("
     + _brute_topk_select(5)
     + """),
@@ -2429,7 +2419,7 @@ _ANN_JOIN_SELECT = """
 
 @register(
     "ann_join_nearest_neighbor",
-    oracle=_COSINE_CTES + _ANN_JOIN_CAND_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_JOIN_CAND_CTES + _ANN_JOIN_SELECT,
 )
 def ann_join_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding record linkage (VERDICT r7 "missing" #1): join each vector
@@ -2453,7 +2443,7 @@ def ann_join_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_join_recall_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ANN_JOIN_CAND_CTES
     + f""",
     lsh AS ({_ANN_JOIN_SELECT}),
@@ -2569,7 +2559,7 @@ _IVF_JOIN_SELECT = """
 
 @register(
     "ann_join_ivf",
-    oracle=_COSINE_CTES + _IVF_JOIN_CTES + _IVF_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _IVF_JOIN_CTES + _IVF_JOIN_SELECT,
 )
 def ann_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF variant of ``ann_join_nearest_neighbor`` — the LINEAR-candidates
@@ -2687,7 +2677,7 @@ _ANN_AUTO_K_CTES = _ann_auto_k_ctes(multiprobe=False)
 _ANN_AUTO_K_MP_CTES = _ann_auto_k_ctes(multiprobe=True)
 _ANN_AUTO_K_DP_CTES = _ann_auto_k_ctes(directed_probes=2)
 
-_ANN_AUTO_K_ORACLE = _COSINE_CTES + _ANN_AUTO_K_CTES + _ANN_JOIN_SELECT
+_ANN_AUTO_K_ORACLE = sim.COSINE_CTES + _ANN_AUTO_K_CTES + _ANN_JOIN_SELECT
 
 
 @register("ann_join_auto_k", oracle=_ANN_AUTO_K_ORACLE)
@@ -2722,7 +2712,7 @@ def ann_join_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_auto_k_recall_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ANN_AUTO_K_CTES
     + f""",
     lsh AS ({_ANN_JOIN_SELECT}),
@@ -2785,7 +2775,7 @@ def sim_auto_k_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_join_auto_k_multiprobe",
-    oracle=_COSINE_CTES + _ANN_AUTO_K_MP_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_AUTO_K_MP_CTES + _ANN_JOIN_SELECT,
 )
 def ann_join_auto_k_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_join_auto_k`` + Hamming-1 multiprobe (r10, VERDICT r9
@@ -2820,7 +2810,7 @@ def ann_join_auto_k_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_join_query_directed_probe",
-    oracle=_COSINE_CTES + _ANN_AUTO_K_DP_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_AUTO_K_DP_CTES + _ANN_JOIN_SELECT,
 )
 def ann_join_query_directed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-DIRECTED multiprobe ANN join (r10, Lv et al. VLDB 2007 §4 —
@@ -2854,7 +2844,7 @@ def ann_join_query_directed_probe(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "sim_directed_probe_recall_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ANN_AUTO_K_DP_CTES
     + f""",
     lsh AS ({_ANN_JOIN_SELECT}),
@@ -2951,7 +2941,7 @@ def sim_directed_probe_recall_report(spark: SparkSession, sf_dir: str) -> DataFr
 
 @register(
     "sim_multiprobe_recall_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ANN_AUTO_K_MP_CTES
     + f""",
     lsh AS ({_ANN_JOIN_SELECT}),
@@ -3127,7 +3117,7 @@ def _semdedup_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
 
 @register(
     "dedup_semdedup_report",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ivf_ctes(5)
     + """,
     centn AS (
@@ -3250,7 +3240,7 @@ def dedup_semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_semdedup_survivors",
-    oracle=_COSINE_CTES
+    oracle=sim.COSINE_CTES
     + _ivf_ctes(5)
     + """,
     centn AS (

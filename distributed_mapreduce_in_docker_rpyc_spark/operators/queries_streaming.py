@@ -700,14 +700,14 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries_similarity; the @register above passed oracle=None).
 from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_similarity import (  # noqa: E402
     _ANN_JOIN_SELECT,
-    _COSINE_CTES,
     _ann_join_cand_ctes,
 )
+from distributed_mapreduce_in_docker_rpyc_spark.operators.similarity import COSINE_CTES  # noqa: E402
 from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES  # noqa: E402
 
 ORACLES["stream_ann_index_maintenance"] = " ".join(
     (
-        _COSINE_CTES
+        COSINE_CTES
         + _ann_join_cand_ctes(
             "qb.vec_id % 17 = 3 AND (nb.vec_id % 17 != 3"
             " OR (nb.vec_id % 17 = 3 AND nb.vec_id % 3 < qb.vec_id % 3))"

@@ -90,7 +90,7 @@ def wordcount_rdd_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 def inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A SECOND job on the generic map/reduce core (core/mapreduce.py),
     proving the user-pluggable surface beyond word count: map emits
-    (word, {doc_id}), reduce is set-union — the classic inverted index.
+    (word, {doc_id}) for each row of its partition, reduce is set-union — the classic inverted index.
     Stats (posting-list size + smallest doc) are emitted rather than the
     lists so the oracle can hash-match.
 
@@ -103,9 +103,10 @@ def inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     rdd = docs.rdd.map(lambda r: (r[0], r[1]))
 
-    def map_fn(row):
-        doc_id, text = row
-        return ((w, {doc_id}) for w in set(tokenize_line(text or "")))
+    def map_fn(rows):
+        for doc_id, text in rows:
+            for w in set(tokenize_line(text or "")):
+                yield w, {doc_id}
 
     postings = run_mapreduce(rdd, map_fn, lambda a, b: a | b)
     stats = postings.map(lambda kv: (kv[0], len(kv[1]), min(kv[1])))

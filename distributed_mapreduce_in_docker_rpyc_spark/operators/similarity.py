@@ -103,6 +103,18 @@ def sign_bits(dots):
     return np.where(np.round(dots, 6) >= 0, "1", "0")
 
 
+# DuckDB ``WITH norms(vec_id, embedding, nrm)``: the head of every embedding
+# oracle, with the same explicit double arithmetic as the Spark cosine.
+COSINE_CTES = """
+    WITH norms AS (
+        SELECT vec_id, embedding,
+               sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
+                     FROM generate_series(1, 64) g(i))) AS nrm
+        FROM embeddings
+    )
+"""
+
+
 def sign_lsh_bucket_ctes(n_planes: int | str, planes_per_table: int | str) -> str:
     """DuckDB ``planes``, ``dots`` and ``buckets`` CTEs that replay the home
     buckets of ``lsh_bucket_tables_np`` bit-for-bit over a

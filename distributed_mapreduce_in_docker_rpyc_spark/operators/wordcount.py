@@ -17,12 +17,19 @@ Two implementations with identical results (asserted in tests):
     before the exchange, TakeOrderedAndProject for top-k. The 100 TB path.
   - RDD path: the paradigm-faithful map/reduce core on
     ``core.run_mapreduce`` — the reference's architecture in Spark-native form.
+    The text column reaches Python as UTF-8 strings (``text_rdd``), and each
+    partition is counted into one ``Counter`` before the shuffle, as the
+    reference's map task counts its chunk (``count_partition_words``).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Iterable
 from operator import add
 
+from pyspark.rdd import RDD
+from pyspark.serializers import UTF8Deserializer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,26 +64,41 @@ def top_k_words(df: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame
     ).limit(k)
 
 
+def text_rdd(df: DataFrame, text_col: str = "text") -> RDD:
+    """The text column as an RDD of ``str`` (``None`` for a null row).
+
+    The column reaches Python as UTF-8 strings, the way
+    ``SparkContext.textFile`` builds its RDD, instead of as pickled ``Row``s.
+    """
+    spark = df.sparkSession
+    jdf = df.select(F.col(text_col).cast("string"))._jdf
+    jrdd = getattr(jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING()).javaRDD()
+    return RDD(jrdd, spark.sparkContext, UTF8Deserializer())
+
+
+def count_partition_words(lines: Iterable[str | None]):
+    """Map function: one partition of lines → its (word, count) pairs, counted
+    into one ``Counter`` (reference worker/worker.py:15-18)."""
+    counts = Counter()
+    for line in lines:
+        counts.update(tokenize_line(line or ""))
+    return counts.items()
+
+
+def _rdd_counts(df: DataFrame, text_col: str, num_partitions: int | None = None) -> RDD:
+    return run_mapreduce(text_rdd(df, text_col), count_partition_words, add, num_partitions)
+
+
 def word_counts_rdd(df: DataFrame, text_col: str = "text", num_partitions: int | None = None) -> DataFrame:
     """The same counts via the generic RDD map/reduce core (reference paradigm)."""
-    spark = df.sparkSession
-    rdd = df.select(text_col).rdd.map(lambda row: row[0])
-    counted = run_mapreduce(rdd, tokenize_line_kv, add, num_partitions)
-    return spark.createDataFrame(counted, WORD_COUNT)
-
-
-def tokenize_line_kv(text: str):
-    """Map function: text → (word, 1) pairs (reference worker/worker.py:17-18)."""
-    return ((w, 1) for w in tokenize_line(text or ""))
+    return df.sparkSession.createDataFrame(_rdd_counts(df, text_col, num_partitions), WORD_COUNT)
 
 
 def top_k_words_rdd(df: DataFrame, k: int = 20, text_col: str = "text") -> list[tuple[str, int]]:
     """OP-13 on the RDD path: ``takeOrdered`` = per-partition heap + driver
     merge (strictly better than the reference's full driver-side sort,
     coordinator/coordinator.py:251)."""
-    counts = df.select(text_col).rdd.map(lambda row: row[0])
-    counted = run_mapreduce(counts, tokenize_line_kv, add)
-    return counted.takeOrdered(k, key=lambda kv: (-kv[1], -len(kv[0]), kv[0]))
+    return _rdd_counts(df, text_col).takeOrdered(k, key=lambda kv: (-kv[1], -len(kv[0]), kv[0]))
 
 
 def write_json_sink(df: DataFrame, path: str, num_partitions: int | None = None) -> None:

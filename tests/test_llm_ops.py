@@ -218,10 +218,7 @@ def test_lsh_bucketing_np_equals_sql_oracle(spark, sf_dir):
     buckets for BOTH plane families (6×3 top-k, 16×3 dedup) over the whole
     corpus, and the ``n_probes=2`` directed-probe family of the auto-k ANN
     join's query slice against that oracle's ``qprobes`` CTE."""
-    from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_similarity import (
-        _COSINE_CTES,
-        _ann_auto_k_ctes,
-    )
+    from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_similarity import _ann_auto_k_ctes
     from tests.oracle import duckdb_conn
 
     con = duckdb_conn(sf_dir)
@@ -230,7 +227,7 @@ def test_lsh_bucketing_np_equals_sql_oracle(spark, sf_dir):
         (sim.N_TABLES, sim.PLANES_PER_TABLE),
         (sim.DEDUP_N_TABLES, sim.DEDUP_PLANES_PER_TABLE),
     ):
-        sql = _COSINE_CTES + sim.sign_lsh_bucket_ctes(n_tables * k, k) + (
+        sql = sim.COSINE_CTES + sim.sign_lsh_bucket_ctes(n_tables * k, k) + (
             " SELECT vec_id, tbl, bucket FROM buckets"
         )
         want = sorted(con.execute(sql).fetchall())
@@ -240,7 +237,7 @@ def test_lsh_bucketing_np_equals_sql_oracle(spark, sf_dir):
     k = sim.auto_planes_per_table(
         sim.non_null_vectors(emb, "embedding").filter(F.col("vec_id") % 17 != 3).count()
     )
-    sql = _COSINE_CTES + _ann_auto_k_ctes(directed_probes=2) + (
+    sql = sim.COSINE_CTES + _ann_auto_k_ctes(directed_probes=2) + (
         " SELECT vec_id, tbl, bucket FROM qprobes"
     )
     want = sorted(con.execute(sql).fetchall())

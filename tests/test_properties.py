@@ -44,12 +44,13 @@ def test_spark_tokenizer_equals_reference_python(spark, texts):
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(TEXT, min_size=1, max_size=20))
 def test_wordcount_equals_python_counter(spark, texts):
-    from distributed_mapreduce_in_docker_rpyc_spark.operators.wordcount import word_counts
+    from distributed_mapreduce_in_docker_rpyc_spark.operators.wordcount import word_counts, word_counts_rdd
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     got = {r["word"]: r["cnt"] for r in word_counts(df).collect()}
     want = Counter(w for t in texts for w in tokenize_line(t))
     assert got == dict(want)
+    assert {r["word"]: r["cnt"] for r in word_counts_rdd(df).collect()} == dict(want)
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
@@ -57,12 +58,13 @@ def test_wordcount_equals_python_counter(spark, texts):
 def test_counts_invariant_under_repartition(spark, texts, nparts):
     """OP-4/OP-16 invariance (SURVEY.md §5): results never depend on the
     partition count."""
-    from distributed_mapreduce_in_docker_rpyc_spark.operators.wordcount import word_counts
+    from distributed_mapreduce_in_docker_rpyc_spark.operators.wordcount import word_counts, word_counts_rdd
 
     df = spark.createDataFrame([(t,) for t in texts], ["text"]).repartition(nparts)
     got = {r["word"]: r["cnt"] for r in word_counts(df).collect()}
     want = Counter(w for t in texts for w in tokenize_line(t))
     assert got == dict(want)
+    assert {r["word"]: r["cnt"] for r in word_counts_rdd(df).collect()} == dict(want)
 
 
 def test_shingles_match_token_slices_on_fixture(spark, sf_dir):

@@ -67,9 +67,14 @@ def test_tokenizer_semantics(spark):
 
 def test_rdd_path_equals_df_path_on_case_expanding_letters(spark):
     """The Kelvin sign lowercases to ``k`` and ``İ`` to ``i`` + U+0307; the
-    DataFrame and RDD paths both lower before matching, so they agree."""
-    df = spark.createDataFrame([("\u212aelvin \u0130stanbul ok",)], ["text"])
-    want = {("kelvin", 1), ("i", 1), ("stanbul", 1), ("ok", 1)}
+    DataFrame and RDD paths both lower before matching, so they agree.  A
+    null row counts nothing, and partitions left empty (more partitions than
+    rows) emit no pairs."""
+    df = spark.createDataFrame(
+        [("\u212aelvin \u0130stanbul ok",), (None,), ("ok",)], "text string"
+    ).repartition(7)
+    assert wc.text_rdd(df).getNumPartitions() == 7
+    want = {("kelvin", 1), ("i", 1), ("stanbul", 1), ("ok", 2)}
     assert {(r["word"], r["cnt"]) for r in wc.word_counts(df).collect()} == want
     assert {(r["word"], r["cnt"]) for r in wc.word_counts_rdd(df).collect()} == want
 
