@@ -320,6 +320,9 @@ def _replay_feed(spark, sf_dir: str, cols: list[str], work_name: str, splits=Non
         shutil.move(part, dst)
         # file-source order = modification time, oldest first; pin it
         os.utime(dst, (1_700_000_000 + 100 * n, 1_700_000_000 + 100 * n))
+    # Not sources.tables.parquet_schema, here or at the two feeds below:
+    # each call writes a new feed directory, so the session's schema memo
+    # would only gain one entry per invocation.
     schema = spark.read.parquet(feed).schema
     stream = (
         spark.readStream.schema(schema)

@@ -19,6 +19,17 @@ Shuffle fan-out is split between batch and streaming:
   session's core count.  Each state partition costs a state-store load and
   commit per micro-batch, so one per core keeps every core busy without
   paying that fixed cost 32 times per batch.
+
+Codegen cache: Spark keeps the classes janino compiles for whole-stage
+codegen and expressions in one JVM-wide cache, 100 entries by default.
+The six headline_mix queries of ``perfbench`` generate 102 classes at
+sf0.01 and the 16 ``bench.py`` HEADLINE queries 242–247 at sf0.1, so with
+100 entries every warm pass evicted and recompiled classes it had compiled
+before (47–48 per headline_mix pass, 235 per ``bench.py`` rep; 4 cores), and
+the JVM's JIT then compiled the fresh classes again.  ``CODEGEN_CACHE_ENTRIES``
+holds that working set several times over.  The conf is static: it takes
+effect only in a session built here (or one whose builder sets it), so a
+caller that builds its own session keeps Spark's 100.
 """
 
 from __future__ import annotations
@@ -33,6 +44,8 @@ from pyspark.sql import SparkSession
 # neither affects results.  The fan-out is AQE's initial batch partition count.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
+# spark.sql.codegen.cache.maxEntries: see the module docstring.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _default_driver_mem() -> str:
@@ -79,6 +92,7 @@ def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, s
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/sg-warehouse"))
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long and convert at load (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

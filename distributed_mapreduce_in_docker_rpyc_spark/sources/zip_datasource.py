@@ -101,6 +101,10 @@ class ZipTextStreamReader(SimpleDataSourceStreamReader):
     lists alone, so recovery needs no side state).  The per-batch unit of
     parallelism is still the whole archive — ZIP stays non-splittable
     whether batch or streaming.
+
+    As with Spark's file sources, an archive must appear atomically (written
+    elsewhere, then renamed to a name the glob matches): the stream lists
+    the glob while it runs and would open a half-written archive.
     """
 
     def __init__(self, options: dict):

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import normalize_events_ts, parquet_schema
+
 if TYPE_CHECKING:
     from pyspark.sql.streaming import StreamingQuery
 
@@ -36,42 +38,30 @@ DEFAULT_WATERMARK = "2 hours"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over ``events.parquet`` (schema from a batch peek;
-    streams require an explicit schema).  Handles the TIMESTAMP(NANOS) →
-    bigint → timestamp conversion exactly like the batch loader
-    (sources/tables.py)."""
+    """File-source stream over ``events.parquet`` (streams require an
+    explicit schema: the batch loader's memoized one).  Converts ``ts``
+    exactly like the batch loader (sources/tables.py)."""
     path = f"{sf_dir}/events.parquet"
     # Same driver-session safety as sources/tables.py: the schema peek below
     # hits TIMESTAMP(NANOS) and needs the legacy conf in sessions that didn't
     # set it at build time.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
     # events.parquet is a single file; the file stream source wants a
     # directory, so scan the parent with a glob filter.
     df = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # Watermarks require TIMESTAMP (with local timezone); the session
-        # timezone is pinned to UTC so this cast is value-preserving and the
-        # collected values equal the oracle's naive reading of the parquet.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_events_ts(df)
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over ``documents.parquet`` — the incoming-document
     feed of a continuous ingest pipeline (same single-file-glob trick as
     ``events_stream``; no timestamp columns, so no conversion needed)."""
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/documents.parquet"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -341,9 +341,13 @@ def test_ziptext_streaming_source_incremental(spark, tmp_path):
     from distributed_mapreduce_in_docker_rpyc_spark.sources.zip_datasource import register_ziptext
 
     def make_zip(name, lines):
+        # Publish atomically, as a file source requires: the running stream
+        # polls the glob and would otherwise open a half-written archive.
         p = tmp_path / name
-        with zipfile.ZipFile(p, "w") as zf:
+        tmp = tmp_path / f"{name}.part"
+        with zipfile.ZipFile(tmp, "w") as zf:
             zf.writestr("doc.txt", "\n".join(lines))
+        os.replace(tmp, p)
         return p
 
     make_zip("a.zip", ["alpha one", "alpha two"])
