@@ -178,11 +178,9 @@ _DEDUP_BUCKET_CTES = sim.sign_lsh_bucket_ctes(
     "dedup_embedding_cosine",
     oracle=sim.COSINE_CTES
     + _DEDUP_BUCKET_CTES
-    + """,
+    + f""",
     pairs AS (
-        SELECT c.vec_a AS doc_a, c.vec_b AS doc_b,
-               ROUND((SELECT SUM(CAST(a.embedding[g.i] AS DOUBLE) * CAST(b.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (a.nrm * b.nrm), 6) AS sim
+        SELECT c.vec_a AS doc_a, c.vec_b AS doc_b, {sim.cosine_sql("a", "b")} AS sim
         FROM cand c
         JOIN norms a ON a.vec_id = c.vec_a
         JOIN norms b ON b.vec_id = c.vec_b

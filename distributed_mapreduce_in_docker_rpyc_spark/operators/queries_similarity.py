@@ -11,7 +11,7 @@ before compare/order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
@@ -97,30 +97,11 @@ def _ann_exact_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     it once per session).  The allowlisted tiny-broadcast BNLJ pattern."""
 
     def build() -> DataFrame:
-        from pyspark.sql import Window
-
-        from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import cosine_from_norms, norm_col
-
         emb = sim.non_null_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
-        qv = emb.filter(F.col("vec_id") % 17 == 3).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("_qv"),
-            norm_col("embedding").alias("_qn"),
+        pairs = F.broadcast(sim.vector_side(emb.filter(F.col("vec_id") % 17 == 3), "q")).crossJoin(
+            sim.vector_side(emb.filter(F.col("vec_id") % 17 != 3), "n")
         )
-        nv = emb.filter(F.col("vec_id") % 17 != 3).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("_nv"),
-            norm_col("embedding").alias("_nn"),
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            F.broadcast(qv)
-            .crossJoin(nv)
-            .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") == 1)
-            .select("query_id", F.col("neighbor_id").alias("exact_id"))
-        )
+        return sim.top_k(pairs, 1).select("query_id", F.col("neighbor_id").alias("exact_id"))
 
     return shared_df(spark, ("ann_exact_nn", sf_dir), build)
 
@@ -142,15 +123,12 @@ def _ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     "sim_cosine_pairs",
     oracle=sim.COSINE_CTES
     + _DEDUP_BUCKET_CTES
-    + """
-    SELECT c.vec_a, c.vec_b,
-           ROUND((SELECT SUM(CAST(a.embedding[g.i] AS DOUBLE) * CAST(b.embedding[g.i] AS DOUBLE))
-                  FROM generate_series(1, 64) g(i)) / (a.nrm * b.nrm), 6) AS sim
+    + f"""
+    SELECT c.vec_a, c.vec_b, {sim.cosine_sql("a", "b")} AS sim
     FROM cand c
     JOIN norms a ON a.vec_id = c.vec_a
     JOIN norms b ON b.vec_id = c.vec_b
-    WHERE ROUND((SELECT SUM(CAST(a.embedding[g.i] AS DOUBLE) * CAST(b.embedding[g.i] AS DOUBLE))
-                 FROM generate_series(1, 64) g(i)) / (a.nrm * b.nrm), 6) >= 0.4
+    WHERE {sim.cosine_sql("a", "b")} >= 0.4
     """,
 )
 def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,20 +141,9 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Exact top-10 cosine neighbors for queries vec_id < nq, as a bare SELECT so
 # it can serve standalone (sim_topk_bruteforce / sim_topk_vectorized) or as a
-# CTE body (sim_lsh_recall / sim_ann_recall_report).
+# CTE body (the recall oracles).
 def _brute_topk_select(nq: int, k: int = 10) -> str:
-    return f"""
-    SELECT query_id, neighbor_id, sim, rank FROM (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                  FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                           n.vec_id ASC) AS rank
-        FROM norms q JOIN norms n ON q.vec_id < {nq} AND n.vec_id != q.vec_id
-    ) WHERE rank <= {k}
-"""
+    return sim.top_k_sql(f"norms q JOIN norms n ON q.vec_id < {nq} AND n.vec_id != q.vec_id", k)
 
 
 _BRUTE_TOPK_SELECT = _brute_topk_select(5)
@@ -191,44 +158,15 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.topk_bruteforce(load_table(spark, sf_dir, "embeddings"), query_ids_below=5, k=10)
 
 
-# The 6×3 sign-LSH bucket CTEs (18 md5-derived hyperplanes in 6 tables of
-# 3) of the top-k and ANN-join oracles; every sign-LSH oracle builds its
-# buckets with similarity.sign_lsh_bucket_ctes.
-_TOPK_BUCKET_CTES = sim.sign_lsh_bucket_ctes(
-    sim.N_TABLES * sim.PLANES_PER_TABLE, sim.PLANES_PER_TABLE
-)
-
-
 # Sign-LSH candidate CTEs and the candidate-reranking top-10 SELECT —
 # shared by sim_topk_lsh, sim_lsh_recall, and sim_ann_recall_report (nq=50).
 def _lsh_cand_ctes(nq: int) -> str:
-    return _TOPK_BUCKET_CTES + f""",
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
-        FROM buckets qb
-        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
-                        AND nb.vec_id != qb.vec_id
-        WHERE qb.vec_id < {nq}
-    )
-"""
+    return sim.LSH_BUCKET_CTES + sim.lsh_cand_cte(f"qb.vec_id < {nq} AND nb.vec_id != qb.vec_id")
 
 
 _LSH_CAND_CTES = _lsh_cand_ctes(5)
 
-_LSH_TOPK_SELECT = """
-    SELECT query_id, neighbor_id, sim, rank FROM (
-        SELECT c.query_id, c.neighbor_id,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim,
-               ROW_NUMBER() OVER (PARTITION BY c.query_id
-                                  ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                  FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                           c.neighbor_id ASC) AS rank
-        FROM cand c
-        JOIN norms q ON q.vec_id = c.query_id
-        JOIN norms n ON n.vec_id = c.neighbor_id
-    ) WHERE rank <= 10
-"""
+_LSH_TOPK_SELECT = sim.top_k_sql(sim.CAND_PAIRS, 10)
 
 
 @register("sim_topk_lsh", oracle=sim.COSINE_CTES + _LSH_CAND_CTES + _LSH_TOPK_SELECT)
@@ -249,16 +187,8 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _LSH_CAND_CTES
     + f""",
     lsh AS ({_LSH_TOPK_SELECT}),
-    brute AS ({_BRUTE_TOPK_SELECT}),
-    hits AS (
-        SELECT b.query_id, COUNT(*) AS h
-        FROM brute b
-        JOIN lsh l ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-        GROUP BY b.query_id
-    ),
-    qs AS (SELECT DISTINCT query_id FROM brute)
-    SELECT ROUND(AVG(COALESCE(h, 0) / 10.0), 6) AS recall_at_10
-    FROM qs LEFT JOIN hits USING (query_id)
+    brute AS ({_BRUTE_TOPK_SELECT})
+    SELECT ROUND(AVG(recall), 6) AS recall_at_10 FROM {sim.recall_at_k_sql("lsh", 10)}
     """,
 )
 def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,31 +196,11 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline, HASH-CHECKED end-to-end: both neighbor sets are deterministic
     and SQL-expressible, so their intersection is too — the oracle recomputes
     LSH buckets, both top-10 sets, and the averaged overlap from scratch.
-    (The IVF recall stays in ``sim_ann_recall_report`` as a rows-only check:
-    its KMeans cells are Spark-ML state no SQL engine can replay.)
     Zero-hit queries count as recall 0, not dropped (ADVICE r2)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    brute = sim.topk_bruteforce(emb, query_ids_below=5, k=10).select(
-        "query_id", "neighbor_id"
-    )
-    lsh = sim.topk_lsh(
-        emb, query_ids_below=5, k=10, buckets=_topk_buckets(spark, sf_dir)
-    ).select("query_id", "neighbor_id")
-    hits = (
-        brute.join(lsh, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
-    )
-    return (
-        brute.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .agg(
-            F.round(
-                F.avg(F.coalesce(F.col("h"), F.lit(0)) / F.lit(10.0)), 6
-            ).alias("recall_at_10")
-        )
-    )
+    brute = sim.topk_bruteforce(emb, query_ids_below=5, k=10)
+    lsh = sim.topk_lsh(emb, query_ids_below=5, k=10, buckets=_topk_buckets(spark, sf_dir))
+    return sim.recall_at_k(brute, lsh, 10).agg(F.round(F.avg("recall"), 6).alias("recall_at_10"))
 
 
 # Deterministic-IVF replay CTEs: md5-seeded picks, two unrolled Lloyd rounds
@@ -299,7 +209,8 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per query, exact-cosine rerank.  Mirrors ``similarity.ivf_index`` +
 # ``similarity.topk_ivf`` step for step; every ranking input is rounded, so
 # the SQL engine reproduces the identical index and neighbor sets.
-def _ivf_assign_subquery(cent: str, where: str = "") -> str:
+def _ivf_assign_subquery(cent: str, where: str = "", n: int = 1) -> str:
+    """Each embedding's ``n`` nearest cells of centroid table ``cent``."""
     return f"""
         SELECT vec_id, cluster FROM (
             SELECT vec_id, cluster,
@@ -313,7 +224,7 @@ def _ivf_assign_subquery(cent: str, where: str = "") -> str:
                 {where}
                 GROUP BY e.vec_id, c.cluster
             )
-        ) WHERE rnk = 1
+        ) WHERE rnk <= {n}
     """
 
 
@@ -331,7 +242,17 @@ def _ivf_update_cte(name: str, prev: str, assign: str) -> str:
     )"""
 
 
-def _ivf_ctes(nq: int, n_probe: int = 4, k: int = 10, n_centroids: int = 16) -> str:
+def _ivf_ctes(
+    queries: str, pairs: str = "a.vec_id != p.query_id", k: int = 10, n_probe: int = 4, n_centroids: int = 16
+) -> str:
+    """IVF index, probe and ``ivf`` top-k CTEs: embeddings ``e`` matching
+    ``queries`` probe their ``n_probe`` nearest cells and rank the index
+    vectors ``a`` there that match ``pairs`` (the slice predicate against
+    the probing query ``p``)."""
+    probed = (
+        f"ivfprobes p JOIN ivfafin a ON a.cluster = p.cluster AND {pairs}"
+        " JOIN norms q ON q.vec_id = p.query_id JOIN norms n ON n.vec_id = a.vec_id"
+    )
     return f""",
     ivfseeds AS (
         SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cluster, embedding
@@ -352,42 +273,17 @@ def _ivf_ctes(nq: int, n_probe: int = 4, k: int = 10, n_centroids: int = 16) -> 
     {_ivf_update_cte("ivfc2", "ivfc1", "ivfa2")},
     ivfafin AS ({_ivf_assign_subquery("ivfc2")}),
     ivfprobes AS (
-        SELECT vec_id AS query_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id
-                                      ORDER BY d2 ASC, cluster ASC) AS rnk
-            FROM (
-                SELECT e.vec_id, c.cluster,
-                       ROUND(SUM((CAST(e.embedding[c.d] AS DOUBLE) - c.c)
-                               * (CAST(e.embedding[c.d] AS DOUBLE) - c.c)), 6) AS d2
-                FROM embeddings e CROSS JOIN ivfc2 c
-                WHERE e.vec_id < {nq}
-                GROUP BY e.vec_id, c.cluster
-            )
-        ) WHERE rnk <= {n_probe}
+        SELECT vec_id AS query_id, cluster
+        FROM ({_ivf_assign_subquery("ivfc2", f"WHERE {queries}", n_probe)})
     ),
-    ivf AS (
-        SELECT query_id, neighbor_id, sim, rank FROM (
-            SELECT p.query_id, a.vec_id AS neighbor_id,
-                   ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                          FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim,
-                   ROW_NUMBER() OVER (PARTITION BY p.query_id
-                                      ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                               a.vec_id ASC) AS rank
-            FROM ivfprobes p
-            JOIN ivfafin a ON a.cluster = p.cluster AND a.vec_id != p.query_id
-            JOIN norms q ON q.vec_id = p.query_id
-            JOIN norms n ON n.vec_id = a.vec_id
-        ) WHERE rank <= {k}
-    )
+    ivf AS ({sim.top_k_sql(probed, k)})
 """
 
 
 @register(
     "sim_topk_ivf",
     oracle=sim.COSINE_CTES
-    + _ivf_ctes(5)
+    + _ivf_ctes("e.vec_id < 5")
     + "SELECT query_id, neighbor_id, sim, rank FROM ivf",
 )
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,34 +384,17 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_cte(method: str, approx: str, k: int) -> str:
-    """Recall@k of CTE ``approx`` vs CTE ``brute``, zero-hit queries kept."""
-    return f"""
-        SELECT '{method}' AS method,
-               ROUND(AVG(COALESCE(h, 0) / {k}.0), 4) AS mean_recall_at_10,
-               CAST(COUNT(*) AS BIGINT) AS n_queries
-        FROM (SELECT DISTINCT query_id FROM brute) qs
-        LEFT JOIN (
-            SELECT b.query_id, COUNT(*) AS h
-            FROM brute b
-            JOIN {approx} a ON a.query_id = b.query_id
-                           AND a.neighbor_id = b.neighbor_id
-            GROUP BY b.query_id
-        ) hits USING (query_id)
-    """
-
-
 @register(
     "sim_ann_recall_report",
     oracle=sim.COSINE_CTES
     + _lsh_cand_ctes(50)
-    + _ivf_ctes(50)
+    + _ivf_ctes("e.vec_id < 50")
     + f""",
     lsh AS ({_LSH_TOPK_SELECT}),
     brute AS ({_brute_topk_select(50)})
-    {_recall_cte("sign_lsh", "lsh", 10)}
+    {sim.recall_report_sql("sign_lsh", "lsh", 10)}
     UNION ALL
-    {_recall_cte("ivf_det_lloyd", "ivf", 10)}
+    {sim.recall_report_sql("ivf_det_lloyd", "ivf", 10)}
     """,
 )
 def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,38 +410,12 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall rows — are recomputed from scratch by the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     k, n_queries = 10, 50
-    truth = sim.topk_bruteforce(emb, n_queries, k).select(
-        "query_id", F.col("neighbor_id").alias("true_neighbor")
-    )
-
-    def recall_of(approx: DataFrame, method: str) -> DataFrame:
-        # Count hits per query, then LEFT-join onto the full query set with a
-        # coalesce-to-0: a query with ZERO recovered neighbors must drag the
-        # mean down, not vanish from it (and n_queries must stay the full set).
-        hits = (
-            truth.join(
-                approx.select("query_id", "neighbor_id"),
-                (truth.query_id == approx.query_id)
-                & (truth.true_neighbor == approx.neighbor_id),
-                "left_semi",
-            )
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n_hits"))
-        )
-        per_query = (
-            truth.select("query_id").distinct()
-            .join(hits, "query_id", "left")
-            .select((F.coalesce("n_hits", F.lit(0)) / k).alias("recall"))
-        )
-        return per_query.agg(
-            F.lit(method).alias("method"),
-            F.round(F.avg("recall"), 4).alias("mean_recall_at_10"),
-            F.count("*").alias("n_queries"),
-        )
-
+    truth = sim.topk_bruteforce(emb, n_queries, k)
     lsh = sim.topk_lsh(emb, n_queries, k, buckets=_topk_buckets(spark, sf_dir))
     ivf = sim.topk_ivf(emb, n_queries, k, index=_ivf(spark, sf_dir))
-    return recall_of(lsh, "sign_lsh").unionAll(recall_of(ivf, "ivf_det_lloyd"))
+    return sim.recall_report(truth, lsh, k, "sign_lsh").unionAll(
+        sim.recall_report(truth, ivf, k, "ivf_det_lloyd")
+    )
 
 
 @register(
@@ -601,13 +454,8 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_quantized_recall",
-    oracle="""
-    WITH norms AS (
-        SELECT vec_id, embedding,
-               sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
-                     FROM generate_series(1, 64) g(i))) AS nrm
-        FROM embeddings
-    ),
+    oracle=sim.COSINE_CTES
+    + f""",
     sc AS (
         SELECT vec_id, embedding,
                GREATEST(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))), 1e-30) / 127.0 AS s
@@ -623,38 +471,13 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                sqrt((SELECT SUM(d[g.i] * d[g.i]) FROM generate_series(1, 64) g(i))) AS nrm
         FROM deq
     ),
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY ROUND((SELECT SUM(q.d[g.i] * n.d[g.i])
-                                                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                               n.vec_id ASC) AS rank
-            FROM deqn q JOIN deqn n ON q.vec_id < 50 AND n.vec_id != q.vec_id
-        ) WHERE rank <= 10
-    ),
-    truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                               n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n ON q.vec_id < 50 AND n.vec_id != q.vec_id
-        ) WHERE rank <= 10
-    ),
-    hits AS (
-        SELECT t.query_id, COUNT(*) AS h
-        FROM truth t JOIN approx a
-          ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-        GROUP BY t.query_id
-    ),
-    qs AS (SELECT DISTINCT query_id FROM truth)
-    SELECT 'int8_dequant' AS method,
-           ROUND(AVG(COALESCE(h, 0) / 10.0), 4) AS mean_recall_at_10,
-           CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(4.0 AS DOUBLE) AS compression_vs_float32
-    FROM qs LEFT JOIN hits USING (query_id)
+    approx AS ({sim.top_k_sql(
+        "deqn q JOIN deqn n ON q.vec_id < 50 AND n.vec_id != q.vec_id",
+        10, "query_id, neighbor_id", sim.cosine_sql(vec="d"),
+    )}),
+    brute AS ({_brute_topk_select(50)})
+    SELECT *, CAST(4.0 AS DOUBLE) AS compression_vs_float32
+    FROM ({sim.recall_report_sql("int8_dequant", "approx", 10)})
     """,
 )
 def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,33 +493,10 @@ def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(scale, 9) the store persists."""
     emb = load_table(spark, sf_dir, "embeddings")
     k, n_queries = 10, 50
-    truth = sim.topk_bruteforce(emb, n_queries, k).select(
-        "query_id", F.col("neighbor_id").alias("true_neighbor")
-    )
-    deq = sim.dequantized(sim.quantize_int8(emb))
-    approx = sim.topk_numpy(deq, n_queries, k)
-    # Per-query hit counts LEFT-joined onto the full query set (coalesce 0):
-    # a zero-hit query must count as recall 0, not disappear from the mean.
-    hits = (
-        truth.join(
-            approx.select("query_id", "neighbor_id"),
-            (truth.query_id == approx.query_id)
-            & (truth.true_neighbor == approx.neighbor_id),
-            "left_semi",
-        )
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        truth.select("query_id").distinct()
-        .join(hits, "query_id", "left")
-        .select((F.coalesce("n_hits", F.lit(0)) / k).alias("recall"))
-    )
-    return per_query.agg(
-        F.lit("int8_dequant").alias("method"),
-        F.round(F.avg("recall"), 4).alias("mean_recall_at_10"),
-        F.count("*").alias("n_queries"),
-        F.lit(4.0).alias("compression_vs_float32"),
+    truth = sim.topk_bruteforce(emb, n_queries, k)
+    approx = sim.topk_numpy(sim.dequantized(sim.quantize_int8(emb)), n_queries, k)
+    return sim.recall_report(truth, approx, k, "int8_dequant").withColumn(
+        "compression_vs_float32", F.lit(4.0)
     )
 
 
@@ -1015,7 +815,7 @@ def emb_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "knn_label_vote",
-    oracle="""
+    oracle=f"""
     WITH norms AS (
         SELECT vec_id, embedding, label,
                sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
@@ -1026,8 +826,7 @@ def emb_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims AS (
         SELECT q.vec_id AS query_id, q.label AS true_label,
                n.vec_id AS neighbor_id, n.label AS n_label,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim
+               {sim.cosine_sql()} AS sim
         FROM norms q JOIN norms n ON n.vec_id >= 50
         WHERE q.vec_id < 50
     ),
@@ -1111,7 +910,7 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sim_kmeans_report",
     oracle=sim.COSINE_CTES
-    + _ivf_ctes(5)
+    + _ivf_ctes("e.vec_id < 5")
     + """,
     final_d2 AS (
         SELECT e.vec_id, c.cluster,
@@ -1177,7 +976,7 @@ def sim_kmeans_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_matryoshka_recall",
-    oracle="""
+    oracle=f"""
     WITH norms AS (
         SELECT vec_id, embedding,
                sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE) * CAST(embedding[g.i] AS DOUBLE))
@@ -1186,38 +985,13 @@ def sim_kmeans_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                      FROM generate_series(1, 16) g(i))) AS tnrm
         FROM embeddings
     ),
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                      FROM generate_series(1, 16) g(i)) / (q.tnrm * n.tnrm), 6) DESC,
-                                               n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n ON q.vec_id < 50 AND n.vec_id != q.vec_id
-        ) WHERE rank <= 10
-    ),
-    truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                               n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n ON q.vec_id < 50 AND n.vec_id != q.vec_id
-        ) WHERE rank <= 10
-    ),
-    hits AS (
-        SELECT t.query_id, COUNT(*) AS h
-        FROM truth t JOIN approx a
-          ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-        GROUP BY t.query_id
-    ),
-    qs AS (SELECT DISTINCT query_id FROM truth)
-    SELECT 'matryoshka_16_of_64' AS method,
-           ROUND(AVG(COALESCE(h, 0) / 10.0), 4) AS mean_recall_at_10,
-           CAST(COUNT(*) AS BIGINT) AS n_queries,
-           CAST(4.0 AS DOUBLE) AS compression_vs_full
-    FROM qs LEFT JOIN hits USING (query_id)
+    approx AS ({sim.top_k_sql(
+        "norms q JOIN norms n ON q.vec_id < 50 AND n.vec_id != q.vec_id",
+        10, "query_id, neighbor_id", sim.cosine_sql(nrm="tnrm", dim=16),
+    )}),
+    brute AS ({_brute_topk_select(50)})
+    SELECT *, CAST(4.0 AS DOUBLE) AS compression_vs_full
+    FROM ({sim.recall_report_sql("matryoshka_16_of_64", "approx", 10)})
     """,
 )
 def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,31 +1008,11 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     and only the reranker touches full vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
     k, n_queries = 10, 50
-    truth = sim.topk_bruteforce(emb, n_queries, k).select(
-        "query_id", F.col("neighbor_id").alias("true_neighbor")
-    )
+    truth = sim.topk_bruteforce(emb, n_queries, k)
     trunc = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
     approx = sim.topk_bruteforce(trunc, n_queries, k, dim=16)
-    hits = (
-        truth.join(
-            approx.select("query_id", "neighbor_id"),
-            (truth.query_id == approx.query_id)
-            & (truth.true_neighbor == approx.neighbor_id),
-            "left_semi",
-        )
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    per_query = (
-        truth.select("query_id").distinct()
-        .join(hits, "query_id", "left")
-        .select((F.coalesce("n_hits", F.lit(0)) / k).alias("recall"))
-    )
-    return per_query.agg(
-        F.lit("matryoshka_16_of_64").alias("method"),
-        F.round(F.avg("recall"), 4).alias("mean_recall_at_10"),
-        F.count("*").alias("n_queries"),
-        F.lit(4.0).alias("compression_vs_full"),
+    return sim.recall_report(truth, approx, k, "matryoshka_16_of_64").withColumn(
+        "compression_vs_full", F.lit(4.0)
     )
 
 
@@ -1381,7 +1135,7 @@ _SIL_EXPR = (
 @register(
     "emb_silhouette",
     oracle=sim.COSINE_CTES
-    + _ivf_ctes(5)
+    + _ivf_ctes("e.vec_id < 5")
     + f""",
     sil_d2 AS (
         SELECT e.vec_id, c.cluster,
@@ -1484,12 +1238,10 @@ _MMR_DOT = (
     oracle=sim.COSINE_CTES
     + ",\n    cand AS ("
     + _brute_topk_select(5)
-    + """),
+    + f"""),
     pairs AS (
         SELECT a.query_id, a.neighbor_id AS ida, b.neighbor_id AS idb,
-               ROUND((SELECT SUM(CAST(x.embedding[g.i] AS DOUBLE)
-                                 * CAST(y.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (x.nrm * y.nrm), 6) AS ps
+               {sim.cosine_sql("x", "y")} AS ps
         FROM cand a
         JOIN cand b ON b.query_id = a.query_id AND b.neighbor_id != a.neighbor_id
         JOIN norms x ON x.vec_id = a.neighbor_id
@@ -2278,7 +2030,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "contrastive_pair_mining",
-    oracle="""
+    oracle=f"""
     WITH lnorms AS (
         SELECT vec_id, label, embedding,
                sqrt((SELECT SUM(CAST(embedding[g.i] AS DOUBLE)
@@ -2290,10 +2042,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT q.vec_id AS anchor_id, q.label AS anchor_label,
                n.vec_id AS cand_id,
                CASE WHEN n.label = q.label THEN 'pos' ELSE 'neg' END AS kind,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE)
-                               * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6)
-                   AS sim
+               {sim.cosine_sql()} AS sim
         FROM lnorms q JOIN lnorms n
           ON q.vec_id < 3 AND n.vec_id != q.vec_id
     ),
@@ -2382,44 +2131,38 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5-derived plane family as sim_topk_lsh), restricted to cross-slice
 # pairs, then exact-reranks to top-1 — so LSH approximation can never show
 # as a hash mismatch.
-def _ann_join_cand_ctes(
-    where: str = "qb.vec_id % 17 = 3 AND nb.vec_id % 17 != 3",
-) -> str:
-    """Bucket + candidate CTEs for the two-table ANN joins, with the
-    query/index slice predicate injectable (the streaming index-maintenance
-    sibling adds an arrival-order term so batch b only links against
-    vectors already IN the index when it arrived)."""
-    return _TOPK_BUCKET_CTES + f""",
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
-        FROM buckets qb
-        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
-        WHERE {where}
+_ANN_JOIN_SLICES = "qb.vec_id % 17 = 3 AND nb.vec_id % 17 != 3"
+
+_ANN_JOIN_CAND_CTES = sim.LSH_BUCKET_CTES + sim.lsh_cand_cte(_ANN_JOIN_SLICES)
+
+# The exact cross-slice nearest neighbor each recall@1 oracle grades against
+# (the SQL side of ``_ann_exact_nn``).
+_EXACT_NN_SELECT = sim.top_k_sql(
+    "norms q JOIN norms n ON q.vec_id % 17 = 3 AND n.vec_id % 17 != 3", 1, "query_id, neighbor_id"
+)
+
+
+def _ann_join_recall_oracle(cand_ctes: str, *lead: str) -> str:
+    """Recall@1 oracle of an ANN join whose candidates ``cand_ctes`` build:
+    the join's top-1 ``lsh`` against the exact ``brute``, with the optional
+    ``lead`` columns (k_auto, n_candidates) first."""
+    return (
+        sim.COSINE_CTES
+        + cand_ctes
+        + f""",
+    lsh AS ({sim.ANN_JOIN_SELECT}),
+    brute AS ({_EXACT_NN_SELECT})
+    {sim.recall_at_1_sql(*lead)}"""
     )
-"""
 
 
-_ANN_JOIN_CAND_CTES = _ann_join_cand_ctes()
-
-_ANN_JOIN_SELECT = """
-    SELECT query_id, neighbor_id, sim FROM (
-        SELECT c.query_id, c.neighbor_id,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim,
-               ROW_NUMBER() OVER (PARTITION BY c.query_id
-                                  ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                  FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                           c.neighbor_id ASC) AS rank
-        FROM cand c
-        JOIN norms q ON q.vec_id = c.query_id
-        JOIN norms n ON n.vec_id = c.neighbor_id
-    ) WHERE rank <= 1
-"""
+_K_AUTO = "(SELECT k FROM params) AS k_auto"
+_N_CANDIDATES = "(SELECT COUNT(*) FROM cand) AS n_candidates"
 
 
 @register(
     "ann_join_nearest_neighbor",
-    oracle=sim.COSINE_CTES + _ANN_JOIN_CAND_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_JOIN_CAND_CTES + sim.ANN_JOIN_SELECT,
 )
 def ann_join_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding record linkage (VERDICT r7 "missing" #1): join each vector
@@ -2443,32 +2186,7 @@ def ann_join_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_join_recall_report",
-    oracle=sim.COSINE_CTES
-    + _ANN_JOIN_CAND_CTES
-    + f""",
-    lsh AS ({_ANN_JOIN_SELECT}),
-    brute AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                       FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n
-              ON q.vec_id % 17 = 3 AND n.vec_id % 17 != 3
-        ) WHERE rank = 1
-    )
-    SELECT (SELECT COUNT(*) FROM brute) AS n_queries,
-           (SELECT COUNT(*) FROM lsh) AS n_linked,
-           (SELECT COUNT(*) FROM brute b
-             JOIN lsh l ON l.query_id = b.query_id
-                       AND l.neighbor_id = b.neighbor_id) AS n_correct,
-           ROUND((SELECT COUNT(*) FROM brute b
-                   JOIN lsh l ON l.query_id = b.query_id
-                             AND l.neighbor_id = b.neighbor_id)
-                 / CAST(NULLIF((SELECT COUNT(*) FROM brute), 0) AS DOUBLE), 6)
-               AS recall_at_1
-    """,
+    oracle=_ann_join_recall_oracle(_ANN_JOIN_CAND_CTES),
 )
 def sim_ann_join_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@1 of ``ann_join_nearest_neighbor`` against the exact
@@ -2479,87 +2197,14 @@ def sim_ann_join_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowlisted tiny-broadcast BNLJ recall pattern); the approximate side
     reuses the session-shared bucket frame (and, since r10, the
     session-shared exact-NN frame ``_ann_exact_nn``)."""
-    brute = _ann_exact_nn(spark, sf_dir)
-    lsh = sim.nn_join_lsh(
-        load_table(spark, sf_dir, "embeddings"),
-        left_pred=lambda c: c % 17 == 3,
-        k=1,
-        buckets=_topk_buckets(spark, sf_dir),
-    ).select("query_id", F.col("neighbor_id").alias("lsh_id"))
-    joined = brute.join(lsh, "query_id", "left")
-    return joined.agg(
-        F.count("*").alias("n_queries"),
-        F.count("lsh_id").alias("n_linked"),
-        F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1)).alias("n_correct"),
-        F.round(
-            F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1))
-            # NULLIF: empty query slice → NULL recall, not an ANSI-mode
-            # divide-by-zero (caught by the fleet empty-input sweep)
-            / F.nullif(F.count("*").cast("double"), F.lit(0.0)),
-            6,
-        ).alias("recall_at_1"),
-    )
-
-
-# IVF record-linkage CTEs: the same md5-seeded Lloyd index build as
-# _ivf_ctes, with the probe set = the incoming-batch slice (vec_id % 17 = 3)
-# and candidates restricted to index-side vectors (% 17 != 3), rank <= 1.
-_IVF_JOIN_CTES = f""",
-    ivfseeds AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cluster, embedding
-        FROM (
-            SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec_id, embedding
-            FROM embeddings
-            ORDER BY h, vec_id
-            LIMIT 16
-        )
-    ),
-    ivfc0 AS (
-        SELECT cluster, g.i AS d, ROUND(CAST(embedding[g.i] AS DOUBLE), 6) AS c
-        FROM ivfseeds, generate_series(1, 64) g(i)
-    ),
-    ivfa1 AS ({_ivf_assign_subquery("ivfc0")}),
-    {_ivf_update_cte("ivfc1", "ivfc0", "ivfa1")},
-    ivfa2 AS ({_ivf_assign_subquery("ivfc1")}),
-    {_ivf_update_cte("ivfc2", "ivfc1", "ivfa2")},
-    ivfafin AS ({_ivf_assign_subquery("ivfc2")}),
-    ivfprobes AS (
-        SELECT vec_id AS query_id, cluster FROM (
-            SELECT vec_id, cluster,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id
-                                      ORDER BY d2 ASC, cluster ASC) AS rnk
-            FROM (
-                SELECT e.vec_id, c.cluster,
-                       ROUND(SUM((CAST(e.embedding[c.d] AS DOUBLE) - c.c)
-                               * (CAST(e.embedding[c.d] AS DOUBLE) - c.c)), 6) AS d2
-                FROM embeddings e CROSS JOIN ivfc2 c
-                WHERE e.vec_id % 17 = 3
-                GROUP BY e.vec_id, c.cluster
-            )
-        ) WHERE rnk <= 4
-    )
-"""
-
-_IVF_JOIN_SELECT = """
-    SELECT query_id, neighbor_id, sim FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                      FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) AS sim,
-               ROW_NUMBER() OVER (PARTITION BY p.query_id
-                                  ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                                  FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                           a.vec_id ASC) AS rank
-        FROM ivfprobes p
-        JOIN ivfafin a ON a.cluster = p.cluster AND a.vec_id % 17 != 3
-        JOIN norms q ON q.vec_id = p.query_id
-        JOIN norms n ON n.vec_id = a.vec_id
-    ) WHERE rank <= 1
-"""
+    return sim.recall_at_1(_ann_exact_nn(spark, sf_dir), ann_join_nearest_neighbor(spark, sf_dir))
 
 
 @register(
     "ann_join_ivf",
-    oracle=sim.COSINE_CTES + _IVF_JOIN_CTES + _IVF_JOIN_SELECT,
+    oracle=sim.COSINE_CTES
+    + _ivf_ctes("e.vec_id % 17 = 3", "a.vec_id % 17 != 3", k=1)
+    + "SELECT query_id, neighbor_id, sim FROM ivf",
 )
 def ann_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF variant of ``ann_join_nearest_neighbor`` — the LINEAR-candidates
@@ -2602,7 +2247,7 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
     Either way the candidate join probes qprobes against the unexpanded
     index buckets."""
     if directed_probes:
-        cand = f""",
+        probes = f""",
     qprobes AS (
         SELECT vec_id, tbl, bucket FROM buckets WHERE vec_id % 17 = 3
         UNION ALL
@@ -2621,16 +2266,9 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
             FROM dots
         ) f ON f.vec_id = b.vec_id AND f.tbl = b.tbl
         WHERE b.vec_id % 17 = 3 AND f.rnk <= {directed_probes}
-    ),
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
-        FROM qprobes qb
-        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
-        WHERE nb.vec_id % 17 != 3
-    )
-"""
+    )"""
     elif multiprobe:
-        cand = """,
+        probes = """,
     qprobes AS (
         SELECT vec_id, tbl, bucket FROM buckets WHERE vec_id % 17 = 3
         UNION ALL
@@ -2641,23 +2279,9 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
                substr(b.bucket, f.i + 2) AS bucket
         FROM buckets b, generate_series(0, 39) f(i)
         WHERE b.vec_id % 17 = 3 AND f.i < (SELECT k FROM params)
-    ),
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
-        FROM qprobes qb
-        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
-        WHERE nb.vec_id % 17 != 3
-    )
-"""
+    )"""
     else:
-        cand = """,
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
-        FROM buckets qb
-        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
-        WHERE qb.vec_id % 17 = 3 AND nb.vec_id % 17 != 3
-    )
-"""
+        probes = ""
     return (
         """,
     params AS MATERIALIZED (
@@ -2669,7 +2293,8 @@ def _ann_auto_k_ctes(multiprobe: bool = False, directed_probes: int = 0) -> str:
         + sim.sign_lsh_bucket_ctes(
             f"(SELECT {sim.N_TABLES} * k FROM params)", "(SELECT k FROM params)"
         )
-        + cand
+        + probes
+        + sim.lsh_cand_cte(_ANN_JOIN_SLICES, "qprobes" if probes else "buckets")
     )
 
 
@@ -2677,10 +2302,8 @@ _ANN_AUTO_K_CTES = _ann_auto_k_ctes(multiprobe=False)
 _ANN_AUTO_K_MP_CTES = _ann_auto_k_ctes(multiprobe=True)
 _ANN_AUTO_K_DP_CTES = _ann_auto_k_ctes(directed_probes=2)
 
-_ANN_AUTO_K_ORACLE = sim.COSINE_CTES + _ANN_AUTO_K_CTES + _ANN_JOIN_SELECT
 
-
-@register("ann_join_auto_k", oracle=_ANN_AUTO_K_ORACLE)
+@register("ann_join_auto_k", oracle=sim.COSINE_CTES + _ANN_AUTO_K_CTES + sim.ANN_JOIN_SELECT)
 def ann_join_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_join_nearest_neighbor`` with the LSH width AUTO-SIZED from the
     corpus (r9, VERDICT r8 next-round #8): k = smallest integer with
@@ -2710,40 +2333,11 @@ def ann_join_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_auto_k_recall_report",
-    oracle=sim.COSINE_CTES
-    + _ANN_AUTO_K_CTES
-    + f""",
-    lsh AS ({_ANN_JOIN_SELECT}),
-    brute AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                       FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n
-              ON q.vec_id % 17 = 3 AND n.vec_id % 17 != 3
-        ) WHERE rank = 1
-    )
-    SELECT (SELECT GREATEST(1, (SELECT MIN(p.p) FROM generate_series(0, 40) p(p)
-                                WHERE POWER(2, p.p) >= CEIL(c.cnt / 16.0)))
-            FROM (SELECT COUNT(*) AS cnt FROM norms
-                  WHERE vec_id % 17 != 3 AND embedding IS NOT NULL) c)
-               AS k_auto,
-           (SELECT COUNT(*) FROM brute) AS n_queries,
-           (SELECT COUNT(*) FROM lsh) AS n_linked,
-           (SELECT COUNT(*) FROM brute b
-             JOIN lsh l ON l.query_id = b.query_id
-                       AND l.neighbor_id = b.neighbor_id) AS n_correct,
-           ROUND((SELECT COUNT(*) FROM brute b
-                   JOIN lsh l ON l.query_id = b.query_id
-                             AND l.neighbor_id = b.neighbor_id)
-                 / CAST(NULLIF((SELECT COUNT(*) FROM brute), 0) AS DOUBLE), 6)
-               AS recall_at_1
-    """,
-)
+def _k_auto_col(spark: SparkSession, sf_dir: str) -> Column:
+    return F.lit(_auto_k(spark, sf_dir)).cast("bigint").alias("k_auto")
+
+
+@register("sim_auto_k_recall_report", oracle=_ann_join_recall_oracle(_ANN_AUTO_K_CTES, _K_AUTO))
 def sim_auto_k_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@1 of ``ann_join_auto_k`` against the exact
     cross-slice nearest neighbor, plus the k the auto-sizer picked — the
@@ -2754,28 +2348,14 @@ def sim_auto_k_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny-broadcast BNLJ recall pattern (session-shared ``_ann_exact_nn``
     since r10); approximate side reuses the session-shared auto-k
     buckets."""
-    k_auto = _auto_k(spark, sf_dir)
-    brute = _ann_exact_nn(spark, sf_dir)
-    lsh = ann_join_auto_k(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("lsh_id")
-    )
-    joined = brute.join(lsh, "query_id", "left")
-    return joined.agg(
-        F.lit(k_auto).cast("bigint").alias("k_auto"),
-        F.count("*").alias("n_queries"),
-        F.count("lsh_id").alias("n_linked"),
-        F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1)).alias("n_correct"),
-        F.round(
-            F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1))
-            / F.nullif(F.count("*").cast("double"), F.lit(0.0)),
-            6,
-        ).alias("recall_at_1"),
+    return sim.recall_at_1(
+        _ann_exact_nn(spark, sf_dir), ann_join_auto_k(spark, sf_dir), _k_auto_col(spark, sf_dir)
     )
 
 
 @register(
     "ann_join_auto_k_multiprobe",
-    oracle=sim.COSINE_CTES + _ANN_AUTO_K_MP_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_AUTO_K_MP_CTES + sim.ANN_JOIN_SELECT,
 )
 def ann_join_auto_k_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``ann_join_auto_k`` + Hamming-1 multiprobe (r10, VERDICT r9
@@ -2810,7 +2390,7 @@ def ann_join_auto_k_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_join_query_directed_probe",
-    oracle=sim.COSINE_CTES + _ANN_AUTO_K_DP_CTES + _ANN_JOIN_SELECT,
+    oracle=sim.COSINE_CTES + _ANN_AUTO_K_DP_CTES + sim.ANN_JOIN_SELECT,
 )
 def ann_join_query_directed_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-DIRECTED multiprobe ANN join (r10, Lv et al. VLDB 2007 §4 —
@@ -2842,36 +2422,33 @@ def ann_join_query_directed_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _probe_recall_report(
+    spark: SparkSession, sf_dir: str, qprobes: DataFrame, linked: DataFrame
+) -> DataFrame:
+    """(k_auto, n_candidates, recall@1 columns) of an auto-k probe join:
+    n_candidates is the distinct (query, neighbor) pair count the join
+    reranks — ``qprobes`` through the same ``similarity.lsh_candidates``
+    equi-join ``nn_join_lsh`` runs — the cost axis the probe family is
+    supposed to bound."""
+    index = _auto_k_buckets(spark, sf_dir).filter(F.col("vec_id") % 17 != 3)
+    n_cand = sim.lsh_candidates(qprobes, index).groupBy().count().select(F.col("count").alias("_nc"))
+    return (
+        sim.recall_at_1(_ann_exact_nn(spark, sf_dir), linked, _k_auto_col(spark, sf_dir))
+        .crossJoin(F.broadcast(n_cand))
+        .select(
+            "k_auto",
+            F.col("_nc").cast("bigint").alias("n_candidates"),
+            "n_queries",
+            "n_linked",
+            "n_correct",
+            "recall_at_1",
+        )
+    )
+
+
 @register(
     "sim_directed_probe_recall_report",
-    oracle=sim.COSINE_CTES
-    + _ANN_AUTO_K_DP_CTES
-    + f""",
-    lsh AS ({_ANN_JOIN_SELECT}),
-    brute AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                       FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n
-              ON q.vec_id % 17 = 3 AND n.vec_id % 17 != 3
-        ) WHERE rank = 1
-    )
-    SELECT (SELECT k FROM params) AS k_auto,
-           (SELECT COUNT(*) FROM cand) AS n_candidates,
-           (SELECT COUNT(*) FROM brute) AS n_queries,
-           (SELECT COUNT(*) FROM lsh) AS n_linked,
-           (SELECT COUNT(*) FROM brute b
-             JOIN lsh l ON l.query_id = b.query_id
-                       AND l.neighbor_id = b.neighbor_id) AS n_correct,
-           ROUND((SELECT COUNT(*) FROM brute b
-                   JOIN lsh l ON l.query_id = b.query_id
-                             AND l.neighbor_id = b.neighbor_id)
-                 / CAST(NULLIF((SELECT COUNT(*) FROM brute), 0) AS DOUBLE), 6)
-               AS recall_at_1
-    """,
+    oracle=_ann_join_recall_oracle(_ANN_AUTO_K_DP_CTES, _K_AUTO, _N_CANDIDATES),
 )
 def sim_directed_probe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@1 + distinct candidate count of
@@ -2882,93 +2459,17 @@ def sim_directed_probe_recall_report(spark: SparkSession, sf_dir: str) -> DataFr
     allowlisted tiny-broadcast BNLJ recall pattern; approximate side
     rebuilds the auto-k buckets + the directed probe family (session-shared
     persisted frames since r10, as is the exact side ``_ann_exact_nn``)."""
-    k_auto = _auto_k(spark, sf_dir)
-    buckets = _auto_k_buckets(spark, sf_dir)
-    qprobes = _directed_probes(spark, sf_dir)
-    qp = qprobes.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("tbl").alias("_qt"),
-        F.col("bucket").alias("_qb"),
-    )
-    nb = buckets.filter(F.col("vec_id") % 17 != 3).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("tbl").alias("_nt"),
-        F.col("bucket").alias("_nb"),
-    )
-    cand = (
-        nb.join(
-            F.broadcast(qp),
-            (F.col("_qt") == F.col("_nt")) & (F.col("_qb") == F.col("_nb")),
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    brute = _ann_exact_nn(spark, sf_dir)
-    lsh = sim.nn_join_lsh(
-        load_table(spark, sf_dir, "embeddings"),
-        left_pred=lambda c: c % 17 == 3,
-        k=1,
-        buckets=buckets,
-        query_probes=qprobes,
-    ).select("query_id", F.col("neighbor_id").alias("lsh_id"))
-    n_cand = cand.groupBy().count().select(F.col("count").alias("_nc"))
-    joined = brute.join(lsh, "query_id", "left")
-    return (
-        joined.agg(
-            F.lit(k_auto).cast("bigint").alias("k_auto"),
-            F.count("*").alias("n_queries"),
-            F.count("lsh_id").alias("n_linked"),
-            F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1)).alias(
-                "n_correct"
-            ),
-            F.round(
-                F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1))
-                / F.nullif(F.count("*").cast("double"), F.lit(0.0)),
-                6,
-            ).alias("recall_at_1"),
-        )
-        .crossJoin(F.broadcast(n_cand))
-        .select(
-            "k_auto",
-            F.col("_nc").cast("bigint").alias("n_candidates"),
-            "n_queries",
-            "n_linked",
-            "n_correct",
-            "recall_at_1",
-        )
+    return _probe_recall_report(
+        spark,
+        sf_dir,
+        _directed_probes(spark, sf_dir),
+        ann_join_query_directed_probe(spark, sf_dir),
     )
 
 
 @register(
     "sim_multiprobe_recall_report",
-    oracle=sim.COSINE_CTES
-    + _ANN_AUTO_K_MP_CTES
-    + f""",
-    lsh AS ({_ANN_JOIN_SELECT}),
-    brute AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY ROUND((SELECT SUM(CAST(q.embedding[g.i] AS DOUBLE) * CAST(n.embedding[g.i] AS DOUBLE))
-                                       FROM generate_series(1, 64) g(i)) / (q.nrm * n.nrm), 6) DESC,
-                                n.vec_id ASC) AS rank
-            FROM norms q JOIN norms n
-              ON q.vec_id % 17 = 3 AND n.vec_id % 17 != 3
-        ) WHERE rank = 1
-    )
-    SELECT (SELECT k FROM params) AS k_auto,
-           (SELECT COUNT(*) FROM cand) AS n_candidates,
-           (SELECT COUNT(*) FROM brute) AS n_queries,
-           (SELECT COUNT(*) FROM lsh) AS n_linked,
-           (SELECT COUNT(*) FROM brute b
-             JOIN lsh l ON l.query_id = b.query_id
-                       AND l.neighbor_id = b.neighbor_id) AS n_correct,
-           ROUND((SELECT COUNT(*) FROM brute b
-                   JOIN lsh l ON l.query_id = b.query_id
-                             AND l.neighbor_id = b.neighbor_id)
-                 / CAST(NULLIF((SELECT COUNT(*) FROM brute), 0) AS DOUBLE), 6)
-               AS recall_at_1
-    """,
+    oracle=_ann_join_recall_oracle(_ANN_AUTO_K_MP_CTES, _K_AUTO, _N_CANDIDATES),
 )
 def sim_multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@1 AND total candidate count of
@@ -2978,69 +2479,13 @@ def sim_multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes) and ``sim_ann_join_recall_report`` (fixed 6×3), the driver's
     correctness history now tracks recall and candidate volume for all
     three parameterizations every time the fixture regenerates.
-    n_candidates is the distinct (query, neighbor) pair count actually
-    reranked — the cost axis the probe factor is supposed to bound.
     Exact side = the allowlisted tiny-broadcast BNLJ recall pattern
     (session-shared ``_ann_exact_nn`` since r10, as is the persisted
     bucket frame)."""
-    k_auto = _auto_k(spark, sf_dir)
-    buckets = _auto_k_buckets(spark, sf_dir)
-    # candidate count: replay the probe expansion + equi-join (same frame
-    # the linkage reranks — distinct pairs, the reranked volume)
-    qp = sim.hamming1_probes(
-        buckets.filter(F.col("vec_id") % 17 == 3), k_auto
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("tbl").alias("_qt"),
-        F.col("bucket").alias("_qb"),
+    qprobes = sim.hamming1_probes(
+        _auto_k_buckets(spark, sf_dir).filter(F.col("vec_id") % 17 == 3), _auto_k(spark, sf_dir)
     )
-    nb = buckets.filter(F.col("vec_id") % 17 != 3).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("tbl").alias("_nt"),
-        F.col("bucket").alias("_nb"),
-    )
-    cand = (
-        nb.join(
-            F.broadcast(qp),
-            (F.col("_qt") == F.col("_nt")) & (F.col("_qb") == F.col("_nb")),
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    brute = _ann_exact_nn(spark, sf_dir)
-    lsh = sim.nn_join_lsh(
-        load_table(spark, sf_dir, "embeddings"),
-        left_pred=lambda c: c % 17 == 3,
-        k=1,
-        buckets=buckets,
-        probe_hamming1=k_auto,
-    ).select("query_id", F.col("neighbor_id").alias("lsh_id"))
-    n_cand = cand.groupBy().count().select(F.col("count").alias("_nc"))
-    joined = brute.join(lsh, "query_id", "left")
-    return (
-        joined.agg(
-            F.lit(k_auto).cast("bigint").alias("k_auto"),
-            F.count("*").alias("n_queries"),
-            F.count("lsh_id").alias("n_linked"),
-            F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1)).alias(
-                "n_correct"
-            ),
-            F.round(
-                F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1))
-                / F.nullif(F.count("*").cast("double"), F.lit(0.0)),
-                6,
-            ).alias("recall_at_1"),
-        )
-        .crossJoin(F.broadcast(n_cand))
-        .select(
-            "k_auto",
-            F.col("_nc").cast("bigint").alias("n_candidates"),
-            "n_queries",
-            "n_linked",
-            "n_correct",
-            "recall_at_1",
-        )
-    )
+    return _probe_recall_report(spark, sf_dir, qprobes, ann_join_auto_k_multiprobe(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -3118,7 +2563,7 @@ def _semdedup_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
 @register(
     "dedup_semdedup_report",
     oracle=sim.COSINE_CTES
-    + _ivf_ctes(5)
+    + _ivf_ctes("e.vec_id < 5")
     + """,
     centn AS (
         SELECT cluster, sqrt(SUM(c * c)) AS cnrm FROM ivfc2 GROUP BY cluster
@@ -3241,7 +2686,7 @@ def dedup_semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_semdedup_survivors",
     oracle=sim.COSINE_CTES
-    + _ivf_ctes(5)
+    + _ivf_ctes("e.vec_id < 5")
     + """,
     centn AS (
         SELECT cluster, sqrt(SUM(c * c)) AS cnrm FROM ivfc2 GROUP BY cluster

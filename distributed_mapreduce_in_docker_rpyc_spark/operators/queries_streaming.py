@@ -15,6 +15,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
+from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_text import PACK_SEQUENCES_MANIFEST_ORACLE
 from distributed_mapreduce_in_docker_rpyc_spark.registry import register
 from distributed_mapreduce_in_docker_rpyc_spark.streaming import jobs
 
@@ -560,9 +562,18 @@ def stream_wordcount_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run(jobs.wordcount_totals(jobs.documents_stream(spark, sf_dir)))
 
 
+# Oracle: the batch ANN-join replay with the arrival-order candidate
+# predicate — batch b's queries link against the index slice plus earlier
+# batches only.
 @register(
     "stream_ann_index_maintenance",
-    oracle=None,  # assigned below — built from the shared ANN-join CTEs
+    oracle=sim.COSINE_CTES
+    + sim.LSH_BUCKET_CTES
+    + sim.lsh_cand_cte(
+        "qb.vec_id % 17 = 3 AND (nb.vec_id % 17 != 3"
+        " OR (nb.vec_id % 17 = 3 AND nb.vec_id % 3 < qb.vec_id % 3))"
+    )
+    + sim.ANN_JOIN_SELECT,
 )
 def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN index maintenance (r9, VERDICT r8 next-round #7 /
@@ -597,10 +608,6 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from pyspark.sql import Window
-
-    from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import cosine_from_norms, norm_col
-    from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
     from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import work_dir
     from distributed_mapreduce_in_docker_rpyc_spark.operators.maintenance import upsert_parquet
     from distributed_mapreduce_in_docker_rpyc_spark.sources.tables import load_table
@@ -634,43 +641,9 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         bb = sim.lsh_bucket_tables_np(batch_df).persist()
-        frame = s.read.parquet(bucket_table)
-        cand = (
-            frame.join(
-                F.broadcast(
-                    bb.select(
-                        F.col("vec_id").alias("query_id"), "tbl", "bucket"
-                    )
-                ),
-                ["tbl", "bucket"],
-            )
-            .select("query_id", F.col("vec_id").alias("neighbor_id"))
-            .distinct()
-        )
-        # r10: norms precomputed per side (see similarity.topk_bruteforce)
-        qv = batch_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("_qv"),
-            norm_col("embedding").alias("_qn"),
-        )
-        nv = sim.non_null_vectors(
-            load_table(s, sf_dir, "embeddings"), "embedding"
-        ).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("_nv"),
-            norm_col("embedding").alias("_nn"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        links = (
-            cand.join(F.broadcast(qv), "query_id")
-            .join(nv, "neighbor_id")
-            .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 1)
-            .select("query_id", "neighbor_id", "sim")
-        )
+        cand = sim.lsh_candidates(bb, s.read.parquet(bucket_table))
+        index = sim.non_null_vectors(load_table(s, sf_dir, "embeddings"), "embedding")
+        links = sim.rerank(cand, batch_df, index, 1).select("query_id", "neighbor_id", "sim")
         # link FIRST (against the pre-batch frame), then admit the batch
         upsert_parquet(s, links_table, links, "query_id")
         upsert_parquet(
@@ -697,33 +670,9 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(links_table)
 
 
-# Oracle: the batch ANN-join replay with the arrival-order candidate
-# predicate — batch b's queries link against the index slice plus earlier
-# batches only (registered here because the CTE builders live in
-# queries_similarity; the @register above passed oracle=None).
-from distributed_mapreduce_in_docker_rpyc_spark.operators.queries_similarity import (  # noqa: E402
-    _ANN_JOIN_SELECT,
-    _ann_join_cand_ctes,
-)
-from distributed_mapreduce_in_docker_rpyc_spark.operators.similarity import COSINE_CTES  # noqa: E402
-from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES  # noqa: E402
-
-ORACLES["stream_ann_index_maintenance"] = " ".join(
-    (
-        COSINE_CTES
-        + _ann_join_cand_ctes(
-            "qb.vec_id % 17 = 3 AND (nb.vec_id % 17 != 3"
-            " OR (nb.vec_id % 17 = 3 AND nb.vec_id % 3 < qb.vec_id % 3))"
-        )
-        + _ANN_JOIN_SELECT
-    ).split()
-)
-
-
-@register(
-    "stream_pack_sequences",
-    oracle=None,  # assigned below — identical to pack_sequences_manifest's
-)
+# Oracle: the batch manifest's SQL verbatim — the strongest stream ≡ batch
+# statement available.
+@register("stream_pack_sequences", oracle=PACK_SEQUENCES_MANIFEST_ORACLE)
 def stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming concat-and-chunk packing (r10): the packing manifest as a
     CONTINUOUSLY-RUNNING ingest job — documents arrive in corpus order
@@ -889,12 +838,3 @@ def stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
         )
     )
-
-
-# Oracle: the batch manifest's SQL verbatim — the strongest stream ≡ batch
-# statement available (the CTE lives in queries_text's registration; both
-# modules are loaded by registry.load_all before any driver use).
-from distributed_mapreduce_in_docker_rpyc_spark.operators import queries_text as _qt  # noqa: E402,F401
-from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES as _ORACLES  # noqa: E402
-
-_ORACLES["stream_pack_sequences"] = _ORACLES["pack_sequences_manifest"]

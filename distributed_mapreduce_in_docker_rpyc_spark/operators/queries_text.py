@@ -5037,9 +5037,9 @@ def dataloader_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pack_sequences_manifest",
-    oracle=f"""
+# The manifest's oracle, also the oracle of the streaming packing job
+# (queries_streaming.stream_pack_sequences): stream ≡ batch.
+PACK_SEQUENCES_MANIFEST_ORACLE = f"""
     WITH d AS (
         SELECT doc_id,
                COALESCE(len(regexp_extract_all(lower(text), '[a-z'']+')), 0)
@@ -5067,8 +5067,10 @@ def dataloader_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - GREATEST(seq_id * {_PACK_CTX}, cb)) AS BIGINT)
                AS n_tokens
     FROM expanded GROUP BY seq_id
-    """,
-)
+    """
+
+
+@register("pack_sequences_manifest", oracle=PACK_SEQUENCES_MANIFEST_ORACLE)
 def pack_sequences_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-per-sequence packing manifest (r9): the companion to
     ``pack_sequences_plan`` that materializes WHICH context window gets

@@ -1,29 +1,48 @@
 """Similarity search over embedding columns (SURVEY.md §7 M4).
 
-Three execution strategies for approximate/exact nearest neighbors over
+Every ANN query is filter-and-refine: a strategy makes candidate pairs,
+and one shared refine step scores, ranks and grades them.  Strategies over
 ``array<float>``:
 
   1. **Brute-force expression path** (`topk_bruteforce`): broadcast the query
-     set, cosine via JVM array expressions (zip_with/aggregate — codegen, no
-     Python), ranking window per query. Exact; O(Q × N). The default when Q is
+     set; every pair is a candidate.  The cosine is the dot product unrolled
+     by ``functions/vectors.dot_col`` (JVM codegen, no Python) over norms
+     computed once per vector.  Exact; O(Q × N).  The default when Q is
      small (the common "probe set vs corpus" shape).
-  2. **LSH-bucketed path** (`lsh_bucket_tables_np`, `topk_lsh`):
-     random-hyperplane signs → bucket key; candidates restricted to the
-     query's buckets. The 100 TB path: bucketing is one scan of per-batch
-     BLAS, the join is an equi-join on the bucket key (shuffle both sides by
-     bucket, no cross product). Hyperplanes are md5-derived (deterministic,
-     engine-portable, seed-free); `sign_lsh_bucket_ctes` replays the same
-     buckets in DuckDB.
+  2. **LSH-bucketed path** (`lsh_bucket_tables_np`, `lsh_candidates`,
+     `topk_lsh`): random-hyperplane signs → bucket key; candidates are the
+     vectors sharing a bucket with the query.  The 100 TB path: bucketing is
+     one scan of per-batch BLAS, the join is an equi-join on the bucket key
+     (shuffle both sides by bucket, no cross product).  Hyperplanes are
+     md5-derived (deterministic, engine-portable, seed-free).
   3. **Vectorized pandas path** (`topk_numpy`): mapInPandas + NumPy matmul
      against a broadcast query matrix — Arrow-batched, BLAS throughput when
      the expression path's per-element codegen becomes the bottleneck (wide
      vectors × many queries).
+  4. **IVF path** (`ivf_index`, `ivf_pairs`, `topk_ivf`): md5-seeded Lloyd
+     coarse cells; each query probes its ``n_probe`` nearest cells, so the
+     probed fraction of the corpus is ``n_probe / n_centroids`` at any scale.
+  5. **Record-linkage joins** (`nn_join_lsh`, `nn_join_ivf`): the LSH and IVF
+     candidates between two disjoint slices — an incoming batch against an
+     index corpus — top-k per left row.
+
+The refine step is shared: `vector_side` gives each side of a pair its
+vector and its norm, `top_k` rounds the cosine to 6 places and keeps
+rank ≤ k under the one tie rule (sim desc, neighbor_id asc), and `rerank`
+first joins a candidate frame to both sides.  Recall is graded by
+`recall_at_k` / `recall_report` (recall@10) and `recall_at_1` (k=1 joins).
+
+The DuckDB oracles replay the same steps from SQL fragments kept here:
+`COSINE_CTES` (per-vector norms), `cosine_sql` (the pairwise cosine),
+`top_k_sql` (the ranking), `sign_lsh_bucket_ctes` and `lsh_cand_cte` (the
+sign-LSH filter), and `recall_at_k_sql` / `recall_report_sql` /
+`recall_at_1_sql` (the grades).
 
 Strategies 1 and 3 return the same neighbors
-(``test_numpy_path_equals_expression_path``); strategy 2's recall against 1
-is asserted (``test_lsh_topk_recall_vs_bruteforce``). All three back
-registered queries that are oracle-checked end-to-end (``sim_topk_bruteforce``,
-``sim_topk_lsh``, ``sim_topk_vectorized``).
+(``test_numpy_path_equals_expression_path``); the recall of 2 and 4 against
+1 is asserted (``test_lsh_topk_recall_vs_bruteforce``,
+``test_ivf_topk_recall_vs_bruteforce``).  Every strategy backs registered
+queries that are oracle-checked end-to-end.
 """
 
 from __future__ import annotations
@@ -32,7 +51,7 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import (
@@ -152,6 +171,113 @@ def sign_lsh_bucket_ctes(n_planes: int | str, planes_per_table: int | str) -> st
     )"""
 
 
+# The 6×3 sign-LSH buckets (18 md5 planes in 6 tables of 3) of the top-k and
+# ANN-join oracles.
+LSH_BUCKET_CTES = sign_lsh_bucket_ctes(N_TABLES * PLANES_PER_TABLE, PLANES_PER_TABLE)
+
+
+def lsh_cand_cte(where: str, probes: str = "buckets") -> str:
+    """DuckDB ``cand(query_id, neighbor_id)`` CTE, the SQL side of
+    ``lsh_candidates``: distinct pairs whose query-side row ``qb`` (from
+    ``probes``: the home buckets or a probe family) shares a (tbl, bucket)
+    cell with an index-side row ``nb`` of ``buckets``, filtered by the
+    slice predicate ``where``.  A ``,``-led fragment, like
+    ``sign_lsh_bucket_ctes``."""
+    return f""",
+    cand AS (
+        SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
+        FROM {probes} qb
+        JOIN buckets nb ON nb.tbl = qb.tbl AND nb.bucket = qb.bucket
+        WHERE {where}
+    )
+"""
+
+
+def cosine_sql(
+    q: str = "q", n: str = "n", vec: str = "embedding", nrm: str = "nrm", dim: int = DIM
+) -> str:
+    """The pairwise cosine of rows ``q`` and ``n`` of a norms-shaped relation,
+    rounded to 6 places: the SQL side of ``top_k``'s score, with the same
+    explicit double products as ``functions/vectors.dot_col``."""
+    return (
+        f"ROUND((SELECT SUM(CAST({q}.{vec}[g.i] AS DOUBLE) * CAST({n}.{vec}[g.i] AS DOUBLE))"
+        f" FROM generate_series(1, {dim}) g(i)) / ({q}.{nrm} * {n}.{nrm}), 6)"
+    )
+
+
+# Candidate pairs joined to both sides' norms, for ``top_k_sql``.
+CAND_PAIRS = "cand c JOIN norms q ON q.vec_id = c.query_id JOIN norms n ON n.vec_id = c.neighbor_id"
+
+
+def top_k_sql(
+    pairs: str,
+    k: int,
+    cols: str = "query_id, neighbor_id, sim, rank",
+    cos: str = cosine_sql(),
+) -> str:
+    """The SQL side of ``top_k``: a bare SELECT of ``cols`` ranking the
+    ``q``/``n`` row pairs of the FROM body ``pairs`` by the cosine ``cos``,
+    ROW_NUMBER() OVER (PARTITION BY query ORDER BY sim DESC, neighbor ASC)
+    ≤ ``k``."""
+    return f"""
+    SELECT {cols} FROM (
+        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id, {cos} AS sim,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                                  ORDER BY {cos} DESC, n.vec_id ASC) AS rank
+        FROM {pairs}
+    ) WHERE rank <= {k}
+"""
+
+
+# Top-1 over the candidate pairs: the two-table ANN joins' SELECT.
+ANN_JOIN_SELECT = top_k_sql(CAND_PAIRS, 1, "query_id, neighbor_id, sim")
+
+
+def recall_at_k_sql(approx: str, k: int) -> str:
+    """FROM item ``(recall)``, the SQL side of ``recall_at_k``: per-query
+    recall@k of CTE ``approx`` against the exact top-k in CTE ``brute``
+    over every brute query, a zero-hit query kept as 0."""
+    return f"""(
+        SELECT COALESCE(h, 0) / {k}.0 AS recall
+        FROM (SELECT DISTINCT query_id FROM brute) qs
+        LEFT JOIN (
+            SELECT b.query_id, COUNT(*) AS h
+            FROM brute b
+            JOIN {approx} a ON a.query_id = b.query_id
+                           AND a.neighbor_id = b.neighbor_id
+            GROUP BY b.query_id
+        ) hits USING (query_id)
+    ) r"""
+
+
+def recall_report_sql(method: str, approx: str, k: int) -> str:
+    """The SQL side of ``recall_report``: one (method, mean_recall_at_10,
+    n_queries) row."""
+    return f"""
+        SELECT '{method}' AS method,
+               ROUND(AVG(recall), 4) AS mean_recall_at_10,
+               CAST(COUNT(*) AS BIGINT) AS n_queries
+        FROM {recall_at_k_sql(approx, k)}
+    """
+
+
+def recall_at_1_sql(*lead: str) -> str:
+    """The SQL side of ``recall_at_1``: a SELECT of (``*lead`` column
+    expressions, n_queries, n_linked, n_correct, recall_at_1) of CTE ``lsh``
+    against the exact nearest neighbors in CTE ``brute``."""
+    correct = """(SELECT COUNT(*) FROM brute b
+             JOIN lsh l ON l.query_id = b.query_id
+                       AND l.neighbor_id = b.neighbor_id)"""
+    return f"""
+    SELECT {"".join(f"{c}, " for c in lead)}(SELECT COUNT(*) FROM brute) AS n_queries,
+           (SELECT COUNT(*) FROM lsh) AS n_linked,
+           {correct} AS n_correct,
+           ROUND({correct}
+                 / CAST(NULLIF((SELECT COUNT(*) FROM brute), 0) AS DOUBLE), 6)
+               AS recall_at_1
+    """
+
+
 def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """All pairs with cosine ≥ threshold (brute force, id_a < id_b).
 
@@ -260,6 +386,117 @@ def semantic_pairs_lsh(
     )
 
 
+def vector_side(
+    df: DataFrame,
+    side: str,
+    *keep: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int | None = None,
+) -> DataFrame:
+    """One side of the pairs the refine step scores: ``side`` "q" gives
+    (query_id, _qv, _qn, *keep) and "n" gives (neighbor_id, _nv, _nn,
+    *keep).  r10 (guide §1.2 per-task work): each norm is computed ONCE per
+    vector on its own frame instead of twice per PAIR — identical IEEE
+    values (same unrolled sum), 3× less arithmetic in the pair stage, and
+    the rerank projection stays well under janino's 64 KB method limit."""
+    kw = {"dim": dim} if dim else {}
+    return df.select(
+        F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
+        F.col(vec_col).alias(f"_{side}v"),
+        norm_col(vec_col, **kw).alias(f"_{side}n"),
+        *keep,
+    )
+
+
+def top_k(
+    pairs: DataFrame, k: int, sim: Column | None = None, dim: int | None = None
+) -> DataFrame:
+    """The refine step's ranking, shared by every ANN path: score each
+    (query_id, neighbor_id) pair — by default the cosine of the
+    ``vector_side`` columns, else the raw ``sim`` given — rounded to 6
+    places so the order is engine-stable, and keep rank ≤ ``k`` per query
+    under the one tie rule (sim desc, neighbor_id asc).  Returns
+    (query_id, neighbor_id, sim, rank); ``top_k_sql`` is the oracle side."""
+    if sim is None:
+        sim = cosine_from_norms("_qv", "_nv", "_qn", "_nn", **({"dim": dim} if dim else {}))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("sim", F.round(sim, 6))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "sim", "rank")
+    )
+
+
+def rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    neighbors: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact-cosine top-k of the candidate pairs ``cand`` (query_id,
+    neighbor_id): join the query vectors (broadcast) and the neighbor
+    vectors onto the pairs, then ``top_k``."""
+    return top_k(
+        cand.join(F.broadcast(vector_side(queries, "q", id_col=id_col, vec_col=vec_col)), "query_id")
+        .join(vector_side(neighbors, "n", id_col=id_col, vec_col=vec_col), "neighbor_id"),
+        k,
+    )
+
+
+def recall_at_k(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """Per-query recall@k of ``approx`` against ``truth`` (both top-k
+    frames with query_id, neighbor_id), as one ``recall`` column over every
+    truth query.  Hits are counted per query and LEFT-joined onto the full
+    query set with a coalesce-to-0: a query with ZERO recovered neighbors
+    drags the mean down instead of vanishing from it."""
+    t = truth.select("query_id", F.col("neighbor_id").alias("true_neighbor"))
+    a = approx.select("query_id", "neighbor_id")
+    hits = (
+        t.join(a, (t.query_id == a.query_id) & (t.true_neighbor == a.neighbor_id), "left_semi")
+        .groupBy("query_id")
+        .agg(F.count("*").alias("n_hits"))
+    )
+    return (
+        t.select("query_id").distinct()
+        .join(hits, "query_id", "left")
+        .select((F.coalesce("n_hits", F.lit(0)) / k).alias("recall"))
+    )
+
+
+def recall_report(truth: DataFrame, approx: DataFrame, k: int, method: str) -> DataFrame:
+    """One (method, mean_recall_at_10, n_queries) row of ``recall_at_k``."""
+    return recall_at_k(truth, approx, k).agg(
+        F.lit(method).alias("method"),
+        F.round(F.avg("recall"), 4).alias("mean_recall_at_10"),
+        F.count("*").alias("n_queries"),
+    )
+
+
+def recall_at_1(exact: DataFrame, linked: DataFrame, *lead: Column) -> DataFrame:
+    """One (*lead, n_queries, n_linked, n_correct, recall_at_1) row for a
+    k=1 ANN join ``linked`` (query_id, neighbor_id) against the exact
+    nearest neighbors ``exact`` (query_id, exact_id).  Every exact query
+    counts, linked or not; an empty query slice gives a NULL recall, not an
+    ANSI-mode divide-by-zero (caught by the fleet empty-input sweep)."""
+    joined = exact.join(
+        linked.select("query_id", F.col("neighbor_id").alias("lsh_id")), "query_id", "left"
+    )
+    correct = F.count(F.when(F.col("lsh_id") == F.col("exact_id"), 1))
+    return joined.agg(
+        *lead,
+        F.count("*").alias("n_queries"),
+        F.count("lsh_id").alias("n_linked"),
+        correct.alias("n_correct"),
+        F.round(correct / F.nullif(F.count("*").cast("double"), F.lit(0.0)), 6).alias(
+            "recall_at_1"
+        ),
+    )
+
+
 def topk_bruteforce(
     emb: DataFrame,
     query_ids_below: int,
@@ -269,39 +506,15 @@ def topk_bruteforce(
     dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (vec_id below the
-    given bound), excluding self. Broadcast the small query side; rank with a
-    per-query window over (sim desc, neighbor asc) — rounded to 6 places so
-    ordering is engine-stable."""
-    from pyspark.sql import Window
-
+    given bound), excluding self: every pair with the broadcast query side
+    is a candidate for ``top_k``."""
     emb = non_null_vectors(emb, vec_col)
-    d = dim if dim else None
-    kw = {"dim": d} if d else {}
-    # r10 (guide §1.2 per-task work): precompute each side's norm ONCE on
-    # its own frame instead of re-deriving both 64-term norms per PAIR —
-    # identical IEEE values (same unrolled sum), 3× less arithmetic in the
-    # Q×N stage and the projection stays well under janino's 64 KB limit.
-    q = emb.filter(F.col(id_col) < query_ids_below).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm_col(vec_col, **kw).alias("_qn"),
+    queries = emb.filter(F.col(id_col) < query_ids_below)
+    pairs = vector_side(emb, "n", id_col=id_col, vec_col=vec_col, dim=dim).join(
+        F.broadcast(vector_side(queries, "q", id_col=id_col, vec_col=vec_col, dim=dim)),
+        F.col("query_id") != F.col("neighbor_id"),
     )
-    n = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        norm_col(vec_col, **kw).alias("_nn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        n.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim",
-            F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn", **kw), 6),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return top_k(pairs, k, dim=dim)
 
 
 def lsh_bucket_tables_np(
@@ -383,6 +596,30 @@ def lsh_bucket_tables_np(
     )
 
 
+def lsh_candidates(
+    qside: DataFrame,
+    nside: DataFrame,
+    pair_pred: Column | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The sign-LSH filter step: distinct (query_id, neighbor_id) pairs whose
+    query-side row (``qside``: home buckets or a probe family, broadcast)
+    shares a (tbl, bucket) cell with an index-side row of ``nside``, with
+    ``pair_pred`` an optional extra join term on the two ids.  An equi-join
+    on (tbl, bucket) — never a cross product — and distinct, so each pair's
+    cosine is computed once.  ``lsh_cand_cte`` is the oracle side."""
+    q = qside.select(
+        F.col(id_col).alias("query_id"), F.col("tbl").alias("_qt"), F.col("bucket").alias("_qb")
+    )
+    n = nside.select(
+        F.col(id_col).alias("neighbor_id"), F.col("tbl").alias("_nt"), F.col("bucket").alias("_nb")
+    )
+    on = (F.col("_qt") == F.col("_nt")) & (F.col("_qb") == F.col("_nb"))
+    if pair_pred is not None:
+        on = on & pair_pred
+    return n.join(F.broadcast(q), on).select("query_id", "neighbor_id").distinct()
+
+
 def topk_lsh(
     emb: DataFrame,
     query_ids_below: int,
@@ -403,54 +640,22 @@ def topk_lsh(
     ``buckets``: a prebuilt (persisted) ``lsh_bucket_tables_np`` frame —
     the bucketing is query-set independent, so consumers probing the same
     corpus with different query sets (the registered top-k query, the
-    recall report) should build it once and pass it in."""
-    from pyspark.sql import Window
-
-    # Persisted: the bucket frame feeds both join sides — without reuse it
-    # is evaluated twice (no cross-DAG subplan dedup in Spark; same finding
-    # as operators/dedup.py).
+    recall report) should build it once and pass it in.  Without it the
+    bucket frame is built here and evaluated once per join side: its rows
+    are a pure function of each vector (``sign_bits``), so both evaluations
+    agree, and nothing is left persisted."""
     bucketed = (
         buckets
         if buckets is not None
-        else lsh_bucket_tables_np(
-            emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col
-        ).persist()
+        else lsh_bucket_tables_np(emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col)
     )
-    q = bucketed.filter(F.col(id_col) < query_ids_below).select(
-        F.col(id_col).alias("query_id"), F.col("tbl").alias("_qt"), F.col("bucket").alias("_qb")
+    cand = lsh_candidates(
+        bucketed.filter(F.col(id_col) < query_ids_below),
+        bucketed,
+        F.col("query_id") != F.col("neighbor_id"),
+        id_col=id_col,
     )
-    n = bucketed.select(F.col(id_col).alias("neighbor_id"), F.col("tbl").alias("_nt"), F.col("bucket").alias("_nb"))
-    cand = (
-        n.join(
-            F.broadcast(q),
-            (F.col("_qt") == F.col("_nt"))
-            & (F.col("_qb") == F.col("_nb"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # r10: norms precomputed per side (see topk_bruteforce) — one dot per
-    # candidate pair instead of dot + two 64-term norms.
-    qv = emb.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm_col(vec_col).alias("_qn"),
-    )
-    nv = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        norm_col(vec_col).alias("_nn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return rerank(cand, emb, emb, k, id_col, vec_col)
 
 
 def topk_numpy(
@@ -470,7 +675,6 @@ def topk_numpy(
     reduces partial top-ks to global ones — the same partial/final split the
     reference used for counting (SURVEY.md OP-7/OP-10)."""
     import numpy as np
-    from pyspark.sql import Window
 
     emb = non_null_vectors(emb, vec_col)
     qrows = emb.filter(F.col(id_col) < query_ids_below).select(id_col, vec_col).collect()
@@ -513,13 +717,7 @@ def topk_numpy(
     # Raw sims cross the Arrow boundary; rounding happens JVM-side so the
     # half-up semantics match SQL ROUND (numpy rounds half-even — the exact
     # divergence the udf_scalar_pandas_net_price docstring warns about).
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("sim", F.round("sim", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return top_k(partial, k, sim=F.col("sim"))
 
 
 def ivf_index(
@@ -617,6 +815,45 @@ def ivf_index(
     return assigned, cent
 
 
+def ivf_pairs(
+    queries: DataFrame,
+    neighbors: DataFrame,
+    centroids: DataFrame,
+    n_probe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The IVF filter step: each query (``queries``, broadcast) ranks its
+    squared-L2 distance to every centroid, rounded to 6 places so the probe
+    choice is engine-portable (the oracle replays it; float summation order
+    must not flip the ranking), keeps its ``n_probe`` nearest cells (ties on
+    cluster id), and meets the ``neighbors`` (an ``ivf_index`` assignment)
+    assigned there.  Returns both ``vector_side`` frames joined, for
+    ``top_k``."""
+    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cluster"))
+    probes = (
+        vector_side(queries, "q", id_col=id_col, vec_col=vec_col)
+        .join(F.broadcast(centroids))
+        .withColumn(
+            "d2",
+            F.round(
+                F.aggregate(
+                    F.zip_with(F.col("_qv").cast("array<double>"), "centroid", lambda a, b: (a - b) * (a - b)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                6,
+            ),
+        )
+        .withColumn("prank", F.row_number().over(wq))
+        .filter(F.col("prank") <= n_probe)
+        .select("query_id", "_qv", "_qn", "cluster")
+    )
+    return vector_side(neighbors, "n", "cluster", id_col=id_col, vec_col=vec_col).join(
+        F.broadcast(probes), "cluster"
+    )
+
+
 def topk_ivf(
     emb: DataFrame,
     query_ids_below: int,
@@ -640,51 +877,11 @@ def topk_ivf(
 
     ``index``: a prebuilt ``ivf_index`` (assigned, centroids) pair — index
     construction is query-set independent; probe-time consumers share one."""
-    from pyspark.sql import Window
-
     assigned, centroids = index if index is not None else ivf_index(emb, n_centroids, id_col, vec_col)
-    # r10: norms precomputed per side (see topk_bruteforce).
-    q = assigned.filter(F.col(id_col) < query_ids_below).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm_col(vec_col).alias("_qn"),
+    pairs = ivf_pairs(
+        assigned.filter(F.col(id_col) < query_ids_below), assigned, centroids, n_probe, id_col, vec_col
     )
-    # Rank this query's distance to every centroid; keep the n_probe nearest.
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cluster"))
-    probes = (
-        q.join(F.broadcast(centroids))
-        .withColumn(
-            "d2",
-            # rounded to 6 so the probe choice is engine-portable (the oracle
-            # replays it; float summation order must not flip the ranking)
-            F.round(
-                F.aggregate(
-                    F.zip_with(F.col("_qv").cast("array<double>"), "centroid", lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-        .withColumn("prank", F.row_number().over(wq))
-        .filter(F.col("prank") <= n_probe)
-        .select("query_id", "_qv", "_qn", "cluster")
-    )
-    n = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        norm_col(vec_col).alias("_nn"),
-        "cluster",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        n.join(F.broadcast(probes), "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return top_k(pairs.filter(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def quantize_int8(
@@ -805,57 +1002,18 @@ def nn_join_lsh(
     query side (e.g. :func:`lsh_bucket_tables_np`'s margin-directed
     ``n_probes`` family) — replaces the query slice of ``buckets`` entirely; the index
     side still joins from the unexpanded bucket frame."""
-    bucketed = (
-        buckets
-        if buckets is not None
-        else lsh_bucket_tables_np(emb, id_col=id_col, vec_col=vec_col).persist()
-    )
+    in_left = left_pred(F.col(id_col))
+    bucketed = buckets if buckets is not None else lsh_bucket_tables_np(emb, id_col=id_col, vec_col=vec_col)
     if query_probes is not None:
         qside = query_probes
     else:
-        qside = bucketed.filter(left_pred(F.col(id_col)))
+        qside = bucketed.filter(in_left)
         if probe_hamming1 is not None:
             qside = hamming1_probes(qside, probe_hamming1, id_col=id_col)
-    lb = qside.select(
-        F.col(id_col).alias("query_id"),
-        F.col("tbl").alias("_qt"),
-        F.col("bucket").alias("_qb"),
-    )
-    rb = bucketed.filter(~left_pred(F.col(id_col))).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("tbl").alias("_nt"),
-        F.col("bucket").alias("_nb"),
-    )
-    cand = (
-        rb.join(
-            F.broadcast(lb),
-            (F.col("_qt") == F.col("_nt")) & (F.col("_qb") == F.col("_nb")),
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    cand = lsh_candidates(qside, bucketed.filter(~in_left), id_col=id_col)
     emb = non_null_vectors(emb, vec_col)
-    # r10: norms precomputed per side (see topk_bruteforce) — the combined
-    # rerank stage previously blew janino's 64 KB method limit (logged
-    # codegen ERROR + interpreted fallback per execution).
-    qv = emb.filter(left_pred(F.col(id_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm_col(vec_col).alias("_qn"),
-    )
-    nv = emb.filter(~left_pred(F.col(id_col))).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        norm_col(vec_col).alias("_nn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.join(F.broadcast(qv), "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim")
+    return rerank(cand, emb.filter(in_left), emb.filter(~in_left), k, id_col, vec_col).select(
+        "query_id", "neighbor_id", "sim"
     )
 
 
@@ -882,48 +1040,9 @@ def nn_join_ivf(
     Same determinism contract as ``topk_ivf``: md5-seeded Lloyd index, every
     ranking input rounded to 6 places, so the SQL oracle replays index
     build, probe choice, and rerank bit-for-bit."""
-    assigned, centroids = (
-        index if index is not None else ivf_index(emb, n_centroids, id_col, vec_col)
+    assigned, centroids = index if index is not None else ivf_index(emb, n_centroids, id_col, vec_col)
+    in_left = left_pred(F.col(id_col))
+    pairs = ivf_pairs(
+        assigned.filter(in_left), assigned.filter(~in_left), centroids, n_probe, id_col, vec_col
     )
-    # r10: norms precomputed per side (see topk_bruteforce).
-    q = assigned.filter(left_pred(F.col(id_col))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm_col(vec_col).alias("_qn"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cluster"))
-    probes = (
-        q.join(F.broadcast(centroids))
-        .withColumn(
-            "d2",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_qv").cast("array<double>"),
-                        "centroid",
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-        .withColumn("prank", F.row_number().over(wq))
-        .filter(F.col("prank") <= n_probe)
-        .select("query_id", "_qv", "_qn", "cluster")
-    )
-    n = assigned.filter(~left_pred(F.col(id_col))).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        norm_col(vec_col).alias("_nn"),
-        "cluster",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        n.join(F.broadcast(probes), "cluster")
-        .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return top_k(pairs, k).select("query_id", "neighbor_id", "sim")

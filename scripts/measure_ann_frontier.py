@@ -65,25 +65,9 @@ def main() -> int:
                 qside = buckets.filter(F.col("vec_id") % 17 == 3)
                 if probe is not None:
                     qside = sim.hamming1_probes(qside, probe)
-            q = qside.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("tbl").alias("_qt"),
-                F.col("bucket").alias("_qb"),
-            )
-            n = buckets.filter(F.col("vec_id") % 17 != 3).select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("tbl").alias("_nt"),
-                F.col("bucket").alias("_nb"),
-            )
-            n_cand = (
-                n.join(
-                    F.broadcast(q),
-                    (F.col("_qt") == F.col("_nt")) & (F.col("_qb") == F.col("_nb")),
-                )
-                .select("query_id", "neighbor_id")
-                .distinct()
-                .count()
-            )
+            n_cand = sim.lsh_candidates(
+                qside, buckets.filter(F.col("vec_id") % 17 != 3)
+            ).count()
             report_fn = {
                 None: sim_auto_k_recall_report,
                 k: sim_multiprobe_recall_report,

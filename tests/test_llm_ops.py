@@ -28,6 +28,23 @@ ORACLE_CHECKED = [
     "sim_cosine_pairs",
     "sim_topk_bruteforce",
     "sim_topk_lsh",
+    "sim_topk_ivf",
+    "sim_topk_vectorized",
+    "sim_lsh_recall",
+    "sim_ann_recall_report",
+    "sim_quantized_recall",
+    "emb_matryoshka_recall",
+    "knn_label_vote",
+    "ann_join_nearest_neighbor",
+    "sim_ann_join_recall_report",
+    "ann_join_ivf",
+    "ann_join_auto_k",
+    "sim_auto_k_recall_report",
+    "ann_join_auto_k_multiprobe",
+    "ann_join_query_directed_probe",
+    "sim_directed_probe_recall_report",
+    "sim_multiprobe_recall_report",
+    "dedup_embedding_cosine",
     "text_stats",
     "text_langid",
     "text_token_count_bpe",

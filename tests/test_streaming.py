@@ -618,10 +618,13 @@ def test_ann_index_maintenance_stream_equals_batch(spark, sf_dir):
     index slice or to earlier-batch vectors — never its own or later
     batches)."""
     from distributed_mapreduce_in_docker_rpyc_spark.operators import similarity as sim
-    from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
+    from distributed_mapreduce_in_docker_rpyc_spark.registry import ORACLES, QUERIES, load_all
+    from tests.oracle import compare
 
     load_all()
-    links = QUERIES["stream_ann_index_maintenance"](spark, sf_dir).collect()
+    links_df = QUERIES["stream_ann_index_maintenance"](spark, sf_dir)
+    compare(links_df, ORACLES["stream_ann_index_maintenance"], sf_dir)
+    links = links_df.collect()
 
     # the query's scratch root is memo-free, so rebuild the expected frame
     emb = sim.non_null_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
