@@ -333,12 +333,20 @@ def semantic_pairs_lsh(
     Bucketing is ``lsh_bucket_tables_np`` (per-batch BLAS; 48 planes of
     expression math would blow janino's 64 KB codegen limit), and the
     ``sim_cosine_pairs`` / ``dedup_embedding_cosine`` oracles replay its
-    buckets in SQL."""
+    buckets in SQL.
+
+    The bucket frame is not persisted: the caller memoizes the pair frame
+    (``queries_similarity.semantic_pairs``), so a persisted bucket frame
+    under it would stay pinned for the session, unused once the pair frame
+    is cached.  When the self-join shuffles, both sides plan the same
+    exchange and Spark reuses it, so the bucketing runs once; when it
+    broadcasts (the fixtures, sf0.1 included) each side buckets the
+    vectors, once per session."""
     import numpy as np
 
     bucketed = lsh_bucket_tables_np(
         emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col
-    ).persist()
+    )
     a = bucketed.select(
         F.col(id_col).alias("vec_a"), F.col("tbl").alias("_ta"), F.col("bucket").alias("_ba")
     )

@@ -30,6 +30,24 @@ the JVM's JIT then compiled the fresh classes again.  ``CODEGEN_CACHE_ENTRIES``
 holds that working set several times over.  The conf is static: it takes
 effect only in a session built here (or one whose builder sets it), so a
 caller that builds its own session keeps Spark's 100.
+
+JIT policy: the driver JVM (in local mode also the executor) starts with
+``JIT_OPTIONS``, which raise HotSpot 17's four tier-4 (C2) thresholds to
+10x their defaults.  Per-thread CPU of the six headline_mix queries at
+sf0.01 (4 cores, HotSpot's default thresholds) put the C2 compiler threads
+at 10.2 of the cold pass's 19.2 s and at about half of each warm pass
+(3.8 of 7.1 s, 2.4 of 5.3 s): first-time C2 compiles of Catalyst,
+analyzer, janino and Py4J methods whose counters crossed the default
+thresholds a little further on every pass, not deoptimization churn.
+Raised thresholds keep such plan-sized code in C1, while per-row and
+per-batch loops still cross them within one data-sized query and reach
+C2.  ``-XX:TieredStopAtLevel=1`` (C1 only) cuts the cold pass as well but
+gives up C2 on the data path too: the word count's DataFrame top-20 and
+JSON sink ran about twice as slow with it.  The conf is ``JIT_OPTIONS``
+verbatim; ``SPARK_GRAFT_EXTRA_CONFS``, applied last, can replace it, and a
+session built outside ``get_spark`` keeps HotSpot's defaults.  Cluster
+executors run data-sized code, so ``spark.executor.extraJavaOptions`` is
+left alone.
 """
 
 from __future__ import annotations
@@ -46,6 +64,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 DEFAULT_MAX_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
 # spark.sql.codegen.cache.maxEntries: see the module docstring.
 CODEGEN_CACHE_ENTRIES = 1000
+# spark.driver.extraJavaOptions: HotSpot 17's four tier-4 (C2) thresholds at
+# 10x their defaults; see "JIT policy" in the module docstring.
+JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def _default_driver_mem() -> str:
@@ -93,6 +117,7 @@ def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, s
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/sg-warehouse"))
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.extraJavaOptions", JIT_OPTIONS)
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long and convert at load (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

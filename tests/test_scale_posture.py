@@ -245,6 +245,22 @@ def test_extra_confs_override_both_shuffle_partition_settings(spark, reapplies_g
     assert {k: spark.conf.get(k) for k in (shuffle, initial)} == {shuffle: "3", initial: "5"}
 
 
+def test_driver_jvm_takes_the_jit_policy(spark):
+    """``get_spark`` starts the driver JVM with ``session.JIT_OPTIONS``: the
+    running JVM's input arguments hold every flag of it, and the session's
+    conf carries it as ``spark.driver.extraJavaOptions``.  The context's
+    copy of that conf ends with it: SparkContext puts Spark's own
+    ``--add-opens`` module options in front."""
+    from distributed_mapreduce_in_docker_rpyc_spark import session
+
+    key = "spark.driver.extraJavaOptions"
+    jvm = spark.sparkContext._jvm
+    args = set(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert set(session.JIT_OPTIONS.split()) <= args, sorted(args)
+    assert spark.conf.get(key) == session.JIT_OPTIONS
+    assert spark.sparkContext.getConf().get(key).endswith(" " + session.JIT_OPTIONS)
+
+
 def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir, tmp_path):
     """Runtime row-level filtering: with a selective build side, Spark
     injects a bloom filter (might_contain) on the probe side so the big
@@ -661,3 +677,34 @@ def test_shared_frame_memo_stays_bounded(spark, sf_dir):
                 assert df.storageLevel == StorageLevel.MEMORY_AND_DISK, df.storageLevel
                 checked += 1
     assert checked >= 1
+
+
+def test_memo_pins_one_rdd_per_memoized_frame(spark, sf_dir):
+    """A memoized frame pins only its own cache: ``semantic_pairs_lsh``
+    persists no 16-table bucket frame under the memoized pair frame, so
+    after ``sim_topk_lsh`` and ``sim_cosine_pairs`` in a fresh memo the
+    session holds one new persisted RDD per memoized frame, not three for
+    two."""
+    from pyspark.sql import DataFrame
+    from pyspark.storagelevel import StorageLevel
+
+    from distributed_mapreduce_in_docker_rpyc_spark.operators._shared import _MEMO_ATTR
+    from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
+
+    load_all()
+    spark.catalog.clearCache()
+    if hasattr(spark, _MEMO_ATTR):
+        delattr(spark, _MEMO_ATTR)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    for name in ("sim_topk_lsh", "sim_cosine_pairs"):
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    pinned = set(jsc.getPersistentRDDs().keys()) - before
+    frames = [
+        df
+        for v in getattr(spark, _MEMO_ATTR).values()
+        for df in (v if isinstance(v, tuple) else (v,))
+        if isinstance(df, DataFrame) and df.storageLevel != StorageLevel.NONE
+    ]
+    assert len(frames) == 2
+    assert len(pinned) == len(frames), sorted(pinned)
