@@ -1,11 +1,7 @@
 from distributed_mapreduce_in_docker_rpyc_spark.functions.text import WORD_PATTERN, tokenize_column, tokenize_line
-from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import cosine_similarity_col, dot_col, norm_col
 
 __all__ = [
     "WORD_PATTERN",
     "tokenize_column",
     "tokenize_line",
-    "cosine_similarity_col",
-    "dot_col",
-    "norm_col",
 ]

@@ -4,9 +4,9 @@ Extended scope: the reference has no vector/similarity operators
 (SURVEY.md §2.2); this family is the SURVEY.md §7 M4 extension.
 
 The oracle computes cosine with explicit double arithmetic
-(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) so it performs the same IEEE ops as
-the Spark expression path; results are rounded to 6 places on both sides
-before compare/order.
+(CAST(x AS DOUBLE) * CAST(y AS DOUBLE), summed left to right) so it performs
+the same IEEE ops as the Spark pair kernel (``similarity.seq_cosine``);
+results are rounded to 6 places on both sides before compare/order.
 """
 
 from __future__ import annotations
@@ -862,33 +862,25 @@ def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side streams linearly with no shuffle until the per-query
     top-10 window, whose input is 50 × |corpus| similarities reduced by
     the ranking window's partial top-k (TakeOrdered per query key).  The
-    vote itself is a 500-row aggregate.  The reference has no vector
-    operators at all (SURVEY.md §2.2)."""
+    vote itself is a 500-row aggregate.  Each pair is scored by the pair
+    kernel (``similarity.pair_cosine``), the labels riding along as
+    passthrough columns.  The reference has no vector operators at all
+    (SURVEY.md §2.2)."""
     from pyspark.sql import Window
-
-    from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import cosine_from_norms, norm_col
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & F.col("label").isNotNull()
     )
-
-    # r10: norms precomputed per side (see similarity.topk_bruteforce).
-    q = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("_qv"),
-        norm_col("embedding").alias("_qn"),
+    q = sim.vector_side(
+        emb.filter(F.col("vec_id") < 50), "q", F.col("label").alias("true_label")
     )
-    train = emb.filter(F.col("vec_id") >= 50).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("n_label"),
-        F.col("embedding").alias("_nv"),
-        norm_col("embedding").alias("_nn"),
+    train = sim.vector_side(
+        emb.filter(F.col("vec_id") >= 50), "n", F.col("label").alias("n_label")
     )
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     neigh = (
-        train.join(F.broadcast(q), F.lit(True))
-        .withColumn("sim", F.round(cosine_from_norms("_qv", "_nv", "_qn", "_nn"), 6))
+        sim.pair_cosine(train.join(F.broadcast(q), F.lit(True)))
+        .withColumn("sim", F.round("sim", 6))
         .withColumn("rnk", F.row_number().over(w_rank))
         .filter(F.col("rnk") <= 10)
     )
@@ -1010,7 +1002,7 @@ def emb_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, n_queries = 10, 50
     truth = sim.topk_bruteforce(emb, n_queries, k)
     trunc = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
-    approx = sim.topk_bruteforce(trunc, n_queries, k, dim=16)
+    approx = sim.topk_bruteforce(trunc, n_queries, k)
     return sim.recall_report(truth, approx, k, "matryoshka_16_of_64").withColumn(
         "compression_vs_full", F.lit(4.0)
     )
@@ -1223,14 +1215,8 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 # relational steps (the same discipline as the Lloyd rounds in sim_kmeans:
 # a bounded-depth iterative algorithm becomes bounded CTE layers), with
 # every similarity quantized to 6 places BEFORE an argmax so the selection
-# order is engine-stable.  Dot products use an ordered left fold over the
-# array (aggregate/zip_with), the same element order the oracle's
-# generate_series subquery scans.
+# order is engine-stable.
 _MMR_LAMBDA = "0.7"
-_MMR_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
 
 
 @register(
@@ -1307,10 +1293,9 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once as local relations (domain-bounded collect, same
     footprint class as the 16-centroid collects) and every selection step
     is a local-relation join on the query_id equi-key.  Every similarity is quantized to 6 places BEFORE any
-    argmax, and candidate-pair dots are an ORDERED left fold over the
-    array (`aggregate`/`zip_with` — the element order the oracle's
-    generate_series replay scans), so the selection sequence is
-    engine-stable.  At 100 TB only candidate generation touches the
+    argmax, and candidate-pair cosines are the pair kernel
+    (``similarity.pair_cosine``: the oracle's left-to-right sums), so the
+    selection sequence is engine-stable.  At 100 TB only candidate generation touches the
     corpus; MMR itself is candidate-set-sized regardless of data volume."""
     from pyspark.sql import Window
 
@@ -1339,18 +1324,13 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "semi",
         )
-        .selectExpr(
-            "vec_id",
-            "embedding",
-            f"sqrt({_MMR_DOT.format(a='embedding', b='embedding')}) AS nrm",
-        )
     )
-    a = vecs.selectExpr("vec_id AS ida", "embedding AS ea", "nrm AS na")
-    b = vecs.selectExpr("vec_id AS idb", "embedding AS eb", "nrm AS nb")
+    a = vecs.selectExpr("vec_id AS ida", "embedding AS ea")
+    b = vecs.selectExpr("vec_id AS idb", "embedding AS eb")
 
     def _build_pairs() -> DataFrame:
         # nq·k·(k−1) = 450 rows — materialized for the same reason as cand
-        return _mat(
+        pair_vecs = (
             cand.selectExpr("query_id", "neighbor_id AS ida")
             .join(
                 cand.selectExpr("query_id", "neighbor_id AS idb"),
@@ -1359,12 +1339,10 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("ida") != F.col("idb"))
             .join(F.broadcast(a), "ida")
             .join(F.broadcast(b), "idb")
-            .selectExpr(
-                "query_id",
-                "ida",
-                "idb",
-                f"ROUND({_MMR_DOT.format(a='ea', b='eb')} / (na * nb), 6) AS ps",
-            )
+            .select("query_id", "ida", "idb", "ea", "eb")
+        )
+        return _mat(
+            sim.pair_cosine(pair_vecs, "ea", "eb", "ps").withColumn("ps", F.round("ps", 6))
         )
 
     pairs = shared(spark, ("mmr_pairs", sf_dir), _build_pairs)
@@ -2067,35 +2045,19 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 6-rounded cosine, ready to assemble into triplets.
 
     Scale posture: the anchor set is a broadcast 3-row side (the vetted
-    `sim_topk_bruteforce` BNLJ pattern); the corpus is scanned once with
-    a JVM-side fold for the dot product; ranking reduces per (anchor,
+    `sim_topk_bruteforce` BNLJ pattern); the corpus is scanned once and
+    each pair scored by the pair kernel (``similarity.pair_cosine``);
+    ranking reduces per (anchor,
     kind) — at production query counts the same partial/final split as
     `sim_pq_adc_topk` applies."""
     from pyspark.sql import Window
 
     nn = sim.non_null_vectors(load_table(spark, sf_dir, "embeddings"), "embedding")
-    base = nn.filter(F.col("label").isNotNull()).select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("e"),
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    cand = base.select("vec_id", "label", "e", nrm.alias("nrm"))
+    cand = nn.filter(F.col("label").isNotNull()).select("vec_id", "label", "embedding")
     anchors = cand.filter(F.col("vec_id") < 3).selectExpr(
-        "vec_id AS anchor_id", "label AS anchor_label", "e AS qe", "nrm AS qnrm"
+        "vec_id AS anchor_id", "label AS anchor_label", "embedding AS qe"
     )
-    dot = F.aggregate(
-        F.zip_with("qe", "e", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
+    pairs = (
         cand.crossJoin(F.broadcast(anchors))
         .filter(F.col("vec_id") != F.col("anchor_id"))
         .select(
@@ -2105,9 +2067,11 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("label") == F.col("anchor_label"), F.lit("pos"))
             .otherwise(F.lit("neg"))
             .alias("kind"),
-            F.round(dot / (F.col("qnrm") * F.col("nrm")), 6).alias("sim"),
+            "qe",
+            "embedding",
         )
     )
+    scored = sim.pair_cosine(pairs, "qe", "embedding").withColumn("sim", F.round("sim", 6))
     w = Window.partitionBy("anchor_id", "kind").orderBy(
         F.desc("sim"), F.asc("cand_id")
     )
@@ -2501,56 +2465,33 @@ def sim_multiprobe_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # must rebuild the identical index.
 def _semdedup_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session-shared persisted ``(csim, duppairs)`` for the SemDeDup pair
-    (r10, guide §2.4/§4.2).  The report consumed csim 3× and duppairs 2×
-    (and the survivors query re-derived both) with NO materialization
-    barrier, so Catalyst inlined the unrolled 64-dim cosine into every
-    consumer of one giant projection — the combined stage blew janino's
-    64 KB method limit (3 logged codegen ERRORs per run, interpreted
-    fallback) and the verify-time cost was 216 s at sf0.01.  Persisting the
-    two narrow frames computes each cosine once, keeps every stage under
-    the codegen limit, and lets the survivors query reuse the report's
-    work in the same session."""
+    (r10, guide §2.4/§4.2).  The report consumes csim 3× and duppairs 2×,
+    and the survivors query re-derives both; persisting the two narrow
+    frames scores each cosine once per session and lets the survivors query
+    reuse the report's work.  Both cosines (row to centroid, row to row in
+    a cluster) are the pair kernel ``similarity.pair_cosine``."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         from pyspark.storagelevel import StorageLevel
 
-        from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import cosine_from_norms, norm_col
-
         assigned, cent = _ivf(spark, sf_dir)
-        # norms precomputed per side (see similarity.topk_bruteforce): the
-        # centroid norm once per 16-row broadcast frame, the row norm once
-        # per row, the pair-join norms once per side.
-        cent2 = cent.withColumn("_cn", norm_col("centroid"))
         csim = (
-            assigned.join(F.broadcast(cent2), "cluster")
-            .withColumn(
-                "cent_sim",
-                F.round(
-                    cosine_from_norms(
-                        "embedding", "centroid", norm_col("embedding"), F.col("_cn")
-                    ),
-                    6,
+            sim.pair_cosine(
+                assigned.join(F.broadcast(cent), "cluster").select(
+                    "vec_id", "cluster", "embedding", "centroid"
                 ),
+                "embedding",
+                "centroid",
+                "cent_sim",
             )
-            .select("vec_id", "cluster", "cent_sim")
+            .withColumn("cent_sim", F.round("cent_sim", 6))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        a = assigned.select(
-            "cluster",
-            F.col("vec_id").alias("va"),
-            F.col("embedding").alias("_av"),
-            norm_col("embedding").alias("_an"),
-        )
-        b = assigned.select(
-            "cluster",
-            F.col("vec_id").alias("vb"),
-            F.col("embedding").alias("_bv"),
-            norm_col("embedding").alias("_bn"),
-        )
+        a = assigned.select("cluster", F.col("vec_id").alias("va"), F.col("embedding").alias("_av"))
+        b = assigned.select("cluster", F.col("vec_id").alias("vb"), F.col("embedding").alias("_bv"))
         duppairs = (
-            a.join(b, "cluster")
-            .filter(F.col("va") < F.col("vb"))
-            .withColumn("sim", F.round(cosine_from_norms("_av", "_bv", "_an", "_bn"), 6))
+            sim.pair_cosine(a.join(b, "cluster").filter(F.col("va") < F.col("vb")), "_av", "_bv")
+            .withColumn("sim", F.round("sim", 6))
             .filter(F.col("sim") >= 0.4)
             .select("cluster", "va", "vb")
             .persist(StorageLevel.MEMORY_AND_DISK)

@@ -4,21 +4,20 @@ Every ANN query is filter-and-refine: a strategy makes candidate pairs,
 and one shared refine step scores, ranks and grades them.  Strategies over
 ``array<float>``:
 
-  1. **Brute-force expression path** (`topk_bruteforce`): broadcast the query
-     set; every pair is a candidate.  The cosine is the dot product unrolled
-     by ``functions/vectors.dot_col`` (JVM codegen, no Python) over norms
-     computed once per vector.  Exact; O(Q × N).  The default when Q is
-     small (the common "probe set vs corpus" shape).
+  1. **Brute-force path** (`topk_bruteforce`): broadcast the query set;
+     every pair is a candidate, scored by the pair kernel.  Exact;
+     O(Q × N).  The default when Q is small (the common "probe set vs
+     corpus" shape).
   2. **LSH-bucketed path** (`lsh_bucket_tables_np`, `lsh_candidates`,
      `topk_lsh`): random-hyperplane signs → bucket key; candidates are the
      vectors sharing a bucket with the query.  The 100 TB path: bucketing is
      one scan of per-batch BLAS, the join is an equi-join on the bucket key
      (shuffle both sides by bucket, no cross product).  Hyperplanes are
      md5-derived (deterministic, engine-portable, seed-free).
-  3. **Vectorized pandas path** (`topk_numpy`): mapInPandas + NumPy matmul
-     against a broadcast query matrix — Arrow-batched, BLAS throughput when
-     the expression path's per-element codegen becomes the bottleneck (wide
-     vectors × many queries).
+  3. **Broadcast-matrix path** (`topk_numpy`): mapInPandas against a
+     broadcast query matrix, scoring each Arrow batch of corpus vectors
+     against every query at once (a batch × Q block) and reducing to
+     per-batch top-k before the shuffle.
   4. **IVF path** (`ivf_index`, `ivf_pairs`, `topk_ivf`): md5-seeded Lloyd
      coarse cells; each query probes its ``n_probe`` nearest cells, so the
      probed fraction of the corpus is ``n_probe / n_centroids`` at any scale.
@@ -27,10 +26,18 @@ and one shared refine step scores, ranks and grades them.  Strategies over
      index corpus — top-k per left row.
 
 The refine step is shared: `vector_side` gives each side of a pair its
-vector and its norm, `top_k` rounds the cosine to 6 places and keeps
-rank ≤ k under the one tie rule (sim desc, neighbor_id asc), and `rerank`
-first joins a candidate frame to both sides.  Recall is graded by
-`recall_at_k` / `recall_report` (recall@10) and `recall_at_1` (k=1 joins).
+vector, `top_k` scores every pair with the pair kernel `pair_cosine`,
+rounds the cosine to 6 places in the JVM and keeps rank ≤ k under the one
+tie rule (sim desc, neighbor_id asc), and `rerank` first joins a candidate
+frame to both sides.  Recall is graded by `recall_at_k` / `recall_report`
+(recall@10) and `recall_at_1` (k=1 joins).
+
+Every pairwise cosine in the package is `seq_cosine`: float64 products
+added left to right over the dimensions, vectorized over rows — the IEEE
+operations, in the order, of the DuckDB oracles' SUM over
+generate_series — so no result rests on a BLAS or pairwise summation order.
+`pair_cosine` applies it per Arrow batch (mapInArrow) and `topk_numpy` to
+its batch × Q block.
 
 The DuckDB oracles replay the same steps from SQL fragments kept here:
 `COSINE_CTES` (per-vector norms), `cosine_sql` (the pairwise cosine),
@@ -38,11 +45,13 @@ The DuckDB oracles replay the same steps from SQL fragments kept here:
 sign-LSH filter), and `recall_at_k_sql` / `recall_report_sql` /
 `recall_at_1_sql` (the grades).
 
-Strategies 1 and 3 return the same neighbors
+Strategies 1 and 3 return the same neighbors with the same similarities
 (``test_numpy_path_equals_expression_path``); the recall of 2 and 4 against
 1 is asserted (``test_lsh_topk_recall_vs_bruteforce``,
-``test_ivf_topk_recall_vs_bruteforce``).  Every strategy backs registered
-queries that are oracle-checked end-to-end.
+``test_ivf_topk_recall_vs_bruteforce``); the kernel itself is checked bit
+for bit against sequential Python float math and DuckDB's ``cosine_sql``
+(``tests/test_pair_cosine.py``).  Every strategy backs registered queries
+that are oracle-checked end-to-end.
 """
 
 from __future__ import annotations
@@ -53,12 +62,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from distributed_mapreduce_in_docker_rpyc_spark.functions.vectors import (
-    cosine_from_norms,
-    cosine_similarity_col,
-    norm_col,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 DIM = 64
 # Multi-table LSH defaults: L tables × k planes. One table of k bits has
@@ -198,7 +202,7 @@ def cosine_sql(
 ) -> str:
     """The pairwise cosine of rows ``q`` and ``n`` of a norms-shaped relation,
     rounded to 6 places: the SQL side of ``top_k``'s score, with the same
-    explicit double products as ``functions/vectors.dot_col``."""
+    double products and left-to-right sums as ``seq_cosine``."""
     return (
         f"ROUND((SELECT SUM(CAST({q}.{vec}[g.i] AS DOUBLE) * CAST({n}.{vec}[g.i] AS DOUBLE))"
         f" FROM generate_series(1, {dim}) g(i)) / ({q}.{nrm} * {n}.{nrm}), 6)"
@@ -278,6 +282,95 @@ def recall_at_1_sql(*lead: str) -> str:
     """
 
 
+def _seq_sum(xs, ys):
+    """Σ xs[i] · ys[i] over the leading (dimension) axis, broadcast over the
+    rest and added strictly left to right from the first product: the
+    order of the oracles' ``SUM`` over ``generate_series``, which neither
+    BLAS nor NumPy's pairwise ``sum`` keeps."""
+    import numpy as np
+
+    acc = xs[0] * ys[0]
+    term = np.empty_like(acc)
+    for i in range(1, len(xs)):
+        np.multiply(xs[i], ys[i], out=term)
+        acc += term
+    return acc
+
+
+def seq_cosine(x, y):
+    """Cosine over the last axis of ``x`` and ``y`` (broadcast over the
+    leading ones) in float64: ``dot / (‖x‖·‖y‖)``, every sum sequential
+    (``_seq_sum``) and each norm the square root of its self-dot, and 0.0
+    where either norm is not > 0 (a zero vector, or a NaN from a NULL
+    element).  Raises on unequal widths."""
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    if x.shape[-1] != y.shape[-1]:
+        raise ValueError(f"vectors of unequal width: {x.shape[-1]} and {y.shape[-1]}")
+    # dimension-major copies, so each step reads two contiguous rows
+    xs = np.ascontiguousarray(np.moveaxis(x, -1, 0))
+    ys = np.ascontiguousarray(np.moveaxis(y, -1, 0))
+    dot = _seq_sum(xs, ys)
+    nx, ny = np.sqrt(_seq_sum(xs, xs)), np.sqrt(_seq_sum(ys, ys))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where((nx > 0) & (ny > 0), dot / (nx * ny), 0.0)
+
+
+def arrow_cosine(u, v):
+    """``seq_cosine`` per row of two Arrow list columns; 0.0 where either
+    vector is NULL.  Rows are scored in groups of one width, so a batch may
+    mix widths, but a row's two vectors must agree."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def widths(col):
+        return pc.list_value_length(col).fill_null(0).to_numpy(zero_copy_only=False)
+
+    def matrix(col, d):  # a NULL element reads as NaN
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return flat.astype(np.float64).reshape(-1, d)
+
+    ok = pc.and_(u.is_valid(), v.is_valid()).to_numpy(zero_copy_only=False)
+    du, dv = widths(u), widths(v)
+    if (du[ok] != dv[ok]).any():
+        raise ValueError("cosine of vectors of unequal width")
+    sim = np.zeros(len(u))
+    for d in np.unique(du[ok & (du > 0)]):
+        rows = ok & (du == d)
+        if rows.all():
+            sim = seq_cosine(matrix(u, d), matrix(v, d))
+        else:
+            keep = pa.array(rows)
+            sim[rows] = seq_cosine(matrix(u.filter(keep), d), matrix(v.filter(keep), d))
+    return sim
+
+
+def pair_cosine(pairs: DataFrame, u: str = "_qv", v: str = "_nv", out: str = "sim") -> DataFrame:
+    """The pair kernel: ``pairs`` with its vector columns ``u`` and ``v``
+    replaced by their raw ``seq_cosine`` in column ``out``; every other
+    column passes through.  One mapInArrow pass, no codegen: the cosine is
+    the same IEEE value the oracles' ``cosine_sql`` computes, and rounding
+    stays with the caller, in the JVM (SQL ROUND is half-up, NumPy's is
+    half-even)."""
+    keep = [f for f in pairs.schema.fields if f.name not in (u, v)]
+    names = [f.name for f in keep]
+
+    def per_batch(it):
+        import pyarrow as pa
+
+        for batch in it:
+            sim = arrow_cosine(batch.column(u), batch.column(v))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in names] + [pa.array(sim, pa.float64())],
+                names=[*names, out],
+            )
+
+    return pairs.mapInArrow(per_batch, StructType([*keep, StructField(out, DoubleType())]))
+
+
 def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """All pairs with cosine ≥ threshold (brute force, id_a < id_b).
 
@@ -290,10 +383,9 @@ def cosine_pairs(emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_c
     a = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))
     b = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"))
     return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim", F.round(cosine_similarity_col("_va", "_vb"), 6))
+        pair_cosine(a.join(b, F.col("vec_a") < F.col("vec_b")), "_va", "_vb")
+        .withColumn("sim", F.round("sim", 6))
         .filter(F.col("sim") >= threshold)
-        .select("vec_a", "vec_b", "sim")
     )
 
 
@@ -323,17 +415,16 @@ def semantic_pairs_lsh(
     sign-LSH candidates + exact-cosine rerank — the scale-safe formulation
     of ``cosine_pairs``.
 
-    Shape at 100 TB: bucketing is one scan of per-row expression math; the
+    Shape at 100 TB: bucketing is one scan of per-batch BLAS; the
     candidate self-join is an EQUI-join on (table, bucket) — shuffle both
     sides by bucket key, AQE-splittable, never a nested-loop broadcast; the
     rerank cost is ∝ |candidates|, which at real near-dup thresholds is the
     size of the duplicate clusters, not N².  Approximate with measured
     recall (tests assert 1.0 on the fixture; see parameter note above).
 
-    Bucketing is ``lsh_bucket_tables_np`` (per-batch BLAS; 48 planes of
-    expression math would blow janino's 64 KB codegen limit), and the
-    ``sim_cosine_pairs`` / ``dedup_embedding_cosine`` oracles replay its
-    buckets in SQL.
+    Bucketing is ``lsh_bucket_tables_np`` and the rerank is ``pair_cosine``;
+    the ``sim_cosine_pairs`` / ``dedup_embedding_cosine`` oracles replay
+    both in SQL, the cosine with the same left-to-right sums.
 
     The bucket frame is not persisted: the caller memoizes the pair frame
     (``queries_similarity.semantic_pairs``), so a persisted bucket frame
@@ -342,8 +433,6 @@ def semantic_pairs_lsh(
     exchange and Spark reuses it, so the bucketing runs once; when it
     broadcasts (the fixtures, sf0.1 included) each side buckets the
     vectors, once per session."""
-    import numpy as np
-
     bucketed = lsh_bucket_tables_np(
         emb, n_tables, planes_per_table, id_col=id_col, vec_col=vec_col
     )
@@ -366,71 +455,37 @@ def semantic_pairs_lsh(
     va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))
     vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"))
     with_vecs = cand.join(va, "vec_a").join(vb, "vec_b")
-
-    # Vectorized exact rerank: one einsum per Arrow batch instead of a
-    # per-row 64-term aggregate HOF (higher-order functions never enter
-    # whole-stage codegen — interpreted eval measured ~5× slower here).
-    def rerank(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            x = np.array(list(pdf["_va"]), dtype=np.float64)
-            y = np.array(list(pdf["_vb"]), dtype=np.float64)
-            sim = np.einsum("ij,ij->i", x, y) / (
-                np.linalg.norm(x, axis=1) * np.linalg.norm(y, axis=1)
-            )
-            out = pdf[["vec_a", "vec_b"]].copy()
-            # Emit the RAW cosine: rounding happens JVM-side with F.round
-            # (SQL half-up) — np.round is banker's half-even, which would
-            # diverge from the DuckDB oracle and from cosine_pairs (F.round)
-            # on exact 5e-7 ties.
-            out["sim"] = sim
-            yield out
-
     return (
-        with_vecs.mapInPandas(rerank, schema="vec_a long, vec_b long, sim double")
+        pair_cosine(with_vecs, "_va", "_vb")
         .withColumn("sim", F.round("sim", 6))
         .filter(F.col("sim") >= threshold)
     )
 
 
 def vector_side(
-    df: DataFrame,
-    side: str,
-    *keep: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    df: DataFrame, side: str, *keep: Column | str, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """One side of the pairs the refine step scores: ``side`` "q" gives
-    (query_id, _qv, _qn, *keep) and "n" gives (neighbor_id, _nv, _nn,
-    *keep).  r10 (guide §1.2 per-task work): each norm is computed ONCE per
-    vector on its own frame instead of twice per PAIR — identical IEEE
-    values (same unrolled sum), 3× less arithmetic in the pair stage, and
-    the rerank projection stays well under janino's 64 KB method limit."""
-    kw = {"dim": dim} if dim else {}
+    (query_id, _qv, *keep) and "n" gives (neighbor_id, _nv, *keep)."""
     return df.select(
         F.col(id_col).alias("query_id" if side == "q" else "neighbor_id"),
         F.col(vec_col).alias(f"_{side}v"),
-        norm_col(vec_col, **kw).alias(f"_{side}n"),
         *keep,
     )
 
 
-def top_k(
-    pairs: DataFrame, k: int, sim: Column | None = None, dim: int | None = None
-) -> DataFrame:
+def top_k(pairs: DataFrame, k: int, scored: bool = False) -> DataFrame:
     """The refine step's ranking, shared by every ANN path: score each
-    (query_id, neighbor_id) pair — by default the cosine of the
-    ``vector_side`` columns, else the raw ``sim`` given — rounded to 6
-    places so the order is engine-stable, and keep rank ≤ ``k`` per query
-    under the one tie rule (sim desc, neighbor_id asc).  Returns
+    (query_id, neighbor_id) pair of ``vector_side`` columns with
+    ``pair_cosine`` (or take the raw ``sim`` of a ``scored`` frame), round
+    it to 6 places so the order is engine-stable, and keep rank ≤ ``k`` per
+    query under the one tie rule (sim desc, neighbor_id asc).  Returns
     (query_id, neighbor_id, sim, rank); ``top_k_sql`` is the oracle side."""
-    if sim is None:
-        sim = cosine_from_norms("_qv", "_nv", "_qn", "_nn", **({"dim": dim} if dim else {}))
+    if not scored:
+        pairs = pair_cosine(pairs.select("query_id", "neighbor_id", "_qv", "_nv"))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        pairs.withColumn("sim", F.round(sim, 6))
+        pairs.withColumn("sim", F.round("sim", 6))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "sim", "rank")
@@ -511,18 +566,17 @@ def topk_bruteforce(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (vec_id below the
     given bound), excluding self: every pair with the broadcast query side
-    is a candidate for ``top_k``."""
+    is a candidate for ``top_k``.  The vectors may be of any one width."""
     emb = non_null_vectors(emb, vec_col)
     queries = emb.filter(F.col(id_col) < query_ids_below)
-    pairs = vector_side(emb, "n", id_col=id_col, vec_col=vec_col, dim=dim).join(
-        F.broadcast(vector_side(queries, "q", id_col=id_col, vec_col=vec_col, dim=dim)),
+    pairs = vector_side(emb, "n", id_col=id_col, vec_col=vec_col).join(
+        F.broadcast(vector_side(queries, "q", id_col=id_col, vec_col=vec_col)),
         F.col("query_id") != F.col("neighbor_id"),
     )
-    return top_k(pairs, k, dim=dim)
+    return top_k(pairs, k)
 
 
 def lsh_bucket_tables_np(
@@ -673,15 +727,18 @@ def topk_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Vectorized brute-force top-k via mapInPandas + NumPy matmul.
+    """Vectorized brute-force top-k via mapInPandas against a broadcast
+    query matrix.
 
     The query matrix is collected once and shipped as a Spark BROADCAST
     VARIABLE — torrent-distributed once per executor, not serialized into
     every task closure, so a large query set costs O(executors), not
-    O(tasks); each Arrow batch of corpus vectors computes a (batch × Q) sim
-    matrix with BLAS, emits per-batch top-k, and a final per-query window
-    reduces partial top-ks to global ones — the same partial/final split the
-    reference used for counting (SURVEY.md OP-7/OP-10)."""
+    O(tasks); each Arrow batch of corpus vectors scores a (batch × Q) block
+    with ``seq_cosine`` (the brute-force oracle's left-to-right sums, so the
+    similarities equal ``topk_bruteforce``'s), emits per-batch top-k, and a
+    final per-query window reduces partial top-ks to global ones — the same
+    partial/final split the reference used for counting (SURVEY.md
+    OP-7/OP-10)."""
     import numpy as np
 
     emb = non_null_vectors(emb, vec_col)
@@ -697,14 +754,12 @@ def topk_numpy(
         q_ids, q_mat = q_broadcast.value
         if q_mat.size == 0:  # empty query set -> empty result, not AxisError
             return
-        q_norm = np.linalg.norm(q_mat, axis=1)
         for pdf in it:
             if pdf.empty:
                 continue
             n_ids = pdf[id_col].to_numpy()
             n_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n_norm = np.linalg.norm(n_mat, axis=1)
-            sims = (n_mat @ q_mat.T) / np.outer(n_norm, q_norm)
+            sims = seq_cosine(n_mat[:, None, :], q_mat[None, :, :])
             out = []
             for qi, qid in enumerate(q_ids):
                 col = sims[:, qi]
@@ -725,7 +780,7 @@ def topk_numpy(
     # Raw sims cross the Arrow boundary; rounding happens JVM-side so the
     # half-up semantics match SQL ROUND (numpy rounds half-even — the exact
     # divergence the udf_scalar_pandas_net_price docstring warns about).
-    return top_k(partial, k, sim=F.col("sim"))
+    return top_k(partial, k, scored=True)
 
 
 def ivf_index(
@@ -855,7 +910,7 @@ def ivf_pairs(
         )
         .withColumn("prank", F.row_number().over(wq))
         .filter(F.col("prank") <= n_probe)
-        .select("query_id", "_qv", "_qn", "cluster")
+        .select("query_id", "_qv", "cluster")
     )
     return vector_side(neighbors, "n", "cluster", id_col=id_col, vec_col=vec_col).join(
         F.broadcast(probes), "cluster"

@@ -268,13 +268,15 @@ def test_lsh_bucketing_np_equals_sql_oracle(spark, sf_dir):
 
 
 def test_numpy_path_equals_expression_path(spark, sf_dir):
+    """The broadcast-matrix path scores its batch × Q block with the same
+    sequential sums as the pair kernel, so even the sims are equal."""
     emb = load_table(spark, sf_dir, "embeddings")
     expr_rows = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
+        (r["query_id"], r["neighbor_id"], r["sim"], r["rank"])
         for r in sim.topk_bruteforce(emb, 5, 10).collect()
     }
     np_rows = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
+        (r["query_id"], r["neighbor_id"], r["sim"], r["rank"])
         for r in sim.topk_numpy(emb, 5, 10).collect()
     }
     assert expr_rows == np_rows

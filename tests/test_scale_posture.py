@@ -509,7 +509,7 @@ def test_no_query_plans_cartesian_or_row_python(spark):
     CartesianProduct, a row-at-a-time Python eval (BatchEvalPython), or an
     unvetted BroadcastNestedLoopJoin — the quiet killers at 100 TB.
     Python is allowed only Arrow-batched (ArrowEvalPython /
-    ArrowEvalPythonUDTF / mapInPandas / FlatMapGroupsInPandas); BNLJ is
+    ArrowEvalPythonUDTF / mapInPandas / mapInArrow / FlatMapGroupsInPandas); BNLJ is
     allowed only for the named tiny-broadcast patterns in BNLJ_ALLOWED."""
     from distributed_mapreduce_in_docker_rpyc_spark.registry import QUERIES, load_all
 
